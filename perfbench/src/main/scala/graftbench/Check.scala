@@ -39,6 +39,17 @@ object Check {
     (r.getLong(0), r.getLong(1))
   }
 
+  /** [[digestOf]] of several tables, by name, in one Spark job. */
+  def digestsOf(tables: Seq[(String, DataFrame)]): Map[String, (Long, Long)] = {
+    val hashes = tables.map { case (name, df) =>
+      val named = Sink.positional(df)
+      named.select(lit(name).as("table"), Sink.rowHash(named).as("h"))
+    }
+    val got = hashes.reduce(_ unionByName _).groupBy("table").agg(count(lit(1)), sum("h")).collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    tables.map { case (name, _) => name -> got.getOrElse(name, (0L, 0L)) }.toMap
+  }
+
   def expectDigest(what: String, got: (Long, Long), want: (Long, Long)): Option[String] =
     if (got == want) None
     else Some(s"$what: ${got._1} rows (hash ${got._2}), want ${want._1} rows (hash ${want._2})")

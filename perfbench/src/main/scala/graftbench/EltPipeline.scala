@@ -27,7 +27,7 @@ import graft.pipeline.{Expectations, Warehouse}
   */
 object EltPipeline extends Workload {
   val name = "elt_pipeline"
-  val Buckets = 16
+  val Buckets = 4
   val EntityParallelism = 2
   val Ticks = 1
   val KpiReads: Seq[String] = Seq("top_items", "item_orders", "demand_window", "revenue_by_category")
@@ -74,8 +74,8 @@ object EltPipeline extends Workload {
   val Locations = 24
   val MenuItems = 300
   val Agents = 120
-  val BaseOrders = 2000
-  val AppendOrders = 300
+  val BaseOrders = 1000
+  val AppendOrders = 150
 
   /** The seeded version stream. Keys get at most one version per tick;
     * late versions are older than the key's current one but never
@@ -288,28 +288,30 @@ object EltPipeline extends Workload {
     }
   }
 
-  private def checkEntities(spark: SparkSession, wh: Path, staged: Map[String, Seq[Ver]]): Option[String] =
-    Specs.iterator.flatMap { s =>
+  /** The clean and dim layers (with `entities`) and the fact table (with
+    * `withFacts`) compared with the model, all in one Spark job.
+    */
+  private def check(spark: SparkSession, wh: Path, staged: Map[String, Seq[Ver]],
+                    entities: Boolean, withFacts: Boolean): Option[String] = {
+    val layers = (if (!entities) Nil else Specs.flatMap { s =>
       val vs = staged.getOrElse(s.name, Nil)
       val c = layer(spark, wh, s"clean/${s.name}").select(col(s.key).cast("long"), col("rec_id").cast("long"))
-      val cleanCheck = Check.expectDigest(s"clean/${s.name}", Check.digestOf(c),
-        Check.digest(clean(s.name, vs).values.map(v => Seq(v.key, v.rec))))
-      val dimCheck = if (!s.scd2) None else {
-        val d = layer(spark, wh, s"dim/${s.name}")
+      val cleanLayer = (s"clean/${s.name}", c, Check.digest(clean(s.name, vs).values.map(v => Seq(v.key, v.rec))))
+      cleanLayer +: (if (!s.scd2) Nil else {
         val cols = Seq(col(s.key).cast("long"), col("rec_id").cast("long"),
           col("eff_start_ts").cast("long"), col("eff_end_ts").cast("long"), col("current_flag")) ++
           (if (s.deletes) Seq(col("_graft_deleted")) else Nil)
-        Check.expectDigest(s"dim/${s.name}", Check.digestOf(d.select(cols: _*)), Check.digest(dim(s.name, vs)))
-      }
-      cleanCheck.orElse(dimCheck)
-    }.nextOption()
-
-  private def checkFacts(spark: SparkSession, wh: Path, staged: Map[String, Seq[Ver]]): Option[String] = {
-    val f = layer(spark, wh, "fact/item_sales").select(col("order_item_id").cast("long"),
-      col("order_id").cast("long"), col("menu_id").cast("long"), col("item_name"), col("category"),
-      col("loc_id").cast("long"), col("order_date").cast("string"), col("quantity").cast("long"),
-      col("amount_cents").cast("long"))
-    Check.expectDigest("fact/item_sales", Check.digestOf(f), Check.digest(facts(staged).map(_.cells)))
+        Seq((s"dim/${s.name}", layer(spark, wh, s"dim/${s.name}").select(cols: _*), Check.digest(dim(s.name, vs))))
+      })
+    }) ++ (if (!withFacts) Nil else {
+      val f = layer(spark, wh, "fact/item_sales").select(col("order_item_id").cast("long"),
+        col("order_id").cast("long"), col("menu_id").cast("long"), col("item_name"), col("category"),
+        col("loc_id").cast("long"), col("order_date").cast("string"), col("quantity").cast("long"),
+        col("amount_cents").cast("long"))
+      Seq(("fact/item_sales", f, Check.digest(facts(staged).map(_.cells))))
+    })
+    val got = Check.digestsOf(layers.map { case (n, df, _) => n -> df })
+    layers.iterator.flatMap { case (n, _, want) => Check.expectDigest(n, got(n), want) }.nextOption()
   }
 
   /** Bucket directory → (file name → bytes) under every incremental target. */
@@ -360,7 +362,7 @@ object EltPipeline extends Workload {
           try tracer.span("streaming.await")(qs.foreach(_.awaitTermination()))
           finally qs.foreach(_.stop())
         }
-      }(_ => checkEntities(spark, wh, staged.toMap))
+      }(_ => check(spark, wh, staged.toMap, entities = true, withFacts = false))
       ops.untimed {
         val after = layout(wh)
         val changed = after.filter { case (b, files) => !before.get(b).contains(files) }
@@ -377,7 +379,7 @@ object EltPipeline extends Workload {
       tracer.span("pipeline.backfill") {
         Warehouse.runBatch(spark, cfg, wh.toString, Buckets, EntityParallelism, onExpectations)
       }
-    }(_ => checkEntities(spark, wh, staged.toMap).orElse(checkFacts(spark, wh, staged.toMap)))
+    }(_ => check(spark, wh, staged.toMap, entities = true, withFacts = true))
     incremental("catchup", stagedBytes)
     (0 until Ticks).foreach { t =>
       val before = stagedBytes
@@ -385,7 +387,7 @@ object EltPipeline extends Workload {
       incremental("incremental", stagedBytes - before)
       ops.op("facts", "write") {
         tracer.span("pipeline.facts")(Warehouse.runFacts(spark, cfg, wh.toString))
-      }(_ => checkFacts(spark, wh, staged.toMap))
+      }(_ => check(spark, wh, staged.toMap, entities = false, withFacts = true))
       val want = ops.untimed(kpis(staged.toMap))
       KpiReads.foreach { k =>
         ops.op(k, "read", "kpi") {

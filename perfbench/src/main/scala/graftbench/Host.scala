@@ -2,7 +2,14 @@ package graftbench
 
 import java.nio.file.{Files, Paths}
 
-/** Host contention readings. They explain a noisy run; they gate nothing. */
+/** Host readings. The VM shares its physical cores with other tenants:
+  * while the hypervisor runs someone else on a virtual CPU the
+  * benchmark wanted, that time is *steal*, and a wall-clock interval
+  * stretches by it. Timings are therefore reported with the steal the
+  * benchmark's process suffered taken out ([[Host.Reading.steadyS]]);
+  * raw wall times go to the run's detail file. Load average and
+  * external CPU explain a noisy run; they gate nothing.
+  */
 object Host {
 
   /** 1-minute load average, or -1 where /proc is absent. */
@@ -15,21 +22,52 @@ object Host {
     case _ => None
   }
 
-  /** (CPU seconds busy on the whole host, CPU seconds of this JVM). */
-  def cpu(): Option[(Double, Double)] =
-    try {
-      val v = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+")
-        .drop(1).map(_.toDouble)
-      val idle = v(3) + (if (v.length > 4) v(4) else 0.0)
-      osBean.map(b => ((v.sum - idle) / 100.0, b.getProcessCpuTime / 1e9))
-    } catch { case _: Exception => None }
+  /** One reading: wall clock, this JVM's CPU time, and the host's busy
+    * and steal time from /proc/stat, all in seconds. Busy time is CPU
+    * time actually run (user, nice, system, irq, softirq); neither it
+    * nor the JVM's CPU time includes steal.
+    */
+  final case class Reading(wallS: Double, procS: Double, busyS: Double, stealS: Double) {
+    def -(o: Reading): Reading = Reading(wallS - o.wallS, procS - o.procS, busyS - o.busyS, stealS - o.stealS)
 
-  /** Cores kept busy by other processes between two [[cpu]] readings. */
-  def externalCores(a: Option[(Double, Double)], b: Option[(Double, Double)],
-                    wallS: Double): Double =
-    (a, b) match {
-      case (Some((h0, s0)), Some((h1, s1))) if wallS > 0 =>
-        math.max(0.0, ((h1 - h0) - (s1 - s0)) / wallS)
-      case _ => 0.0
+    /** Steal charged to this JVM: the host's steal in proportion to the
+      * JVM's share of the CPU time run.
+      */
+    def ownStealS: Double =
+      if (busyS <= 0) stealS else stealS * math.min(1.0, procS / busyS)
+
+    /** Wall time with this JVM's steal taken out: the interval scaled by
+      * the share of its runnable time the JVM actually ran. Exact when
+      * the JVM's threads were stolen from evenly over the interval.
+      */
+    def steadyS: Double = {
+      val s = ownStealS
+      if (procS <= 0 || s <= 0) wallS else wallS * procS / (procS + s)
     }
+
+    /** Cores kept busy by other processes, and cores stolen, on average. */
+    def extCores: Double = if (wallS <= 0) 0.0 else math.max(0.0, busyS - procS) / wallS
+    def stealCores: Double = if (wallS <= 0) 0.0 else stealS / wallS
+  }
+
+  private val hz = 100.0
+
+  def read(): Reading = {
+    val wall = System.nanoTime() / 1e9
+    val proc = osBean.fold(0.0)(_.getProcessCpuTime / 1e9)
+    val (busy, steal) =
+      try {
+        // cpu user nice system idle iowait irq softirq steal ...
+        val v = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+").drop(1).map(_.toDouble)
+        ((v(0) + v(1) + v(2) + v(5) + v(6)) / hz, if (v.length > 7) v(7) / hz else 0.0)
+      } catch { case _: Exception => (0.0, 0.0) }
+    Reading(wall, proc, busy, steal)
+  }
+
+  /** Runs `body`; returns its result and the reading over it. */
+  def timed[T](body: => T): (T, Reading) = {
+    val r0 = read()
+    val v = body
+    (v, read() - r0)
+  }
 }

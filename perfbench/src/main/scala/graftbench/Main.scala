@@ -11,14 +11,16 @@ import org.apache.spark.sql.SparkSession
   * Load model: one process, one closed-loop client (each op waits for
   * the previous one), Spark as `local[2]` with 2 shuffle partitions.
   *
-  * Untraced run: set-up (session start and seeded input generation)
-  * is repeated [[SetupRounds]] times and `setup_s` is the median. One
-  * untimed warm pass follows. Then passes run until the time is up, at
-  * least [[MinPasses]] of them, and the end-to-end metrics are computed
-  * over their ops. Traced run: one set-up and the warm pass, then
-  * passes alternate untraced and traced; listeners, spans and the
-  * counting file system are on only in traced passes, and the
-  * per-layer metrics are medians over traced passes.
+  * Untraced run: set-up (session start and seeded input generation) is
+  * repeated [[SetupRounds]] times and `setup_s` is the median. Spark's
+  * first query follows, untimed, then an untimed warm pass where the
+  * workload has one. Then whole passes run, at least [[MinPasses]] and
+  * more while the next fits in the time, and the end-to-end metrics are
+  * computed over their ops. Every timing has the hypervisor's steal
+  * taken out ([[Host]]). Traced run: one set-up, Spark's first query
+  * and the warm pass, then an untraced, a traced and an untraced pass;
+  * listeners, spans and the counting file system are on only in the
+  * traced pass.
   *
   * Usage: Main --workload W --seed N --seconds S --trace 0|1 --bench DIR --work DIR --out FILE
   *        Main --record-query-suite FILE --bench DIR --work DIR
@@ -51,6 +53,22 @@ object Main {
     spark
   }
 
+  /** Spark's first query in a JVM loads and compiles much of Spark SQL
+    * and its file formats, about 8 s here. It runs once before any
+    * pass, so that the first measured op does not pay for it.
+    */
+  private def firstQuery(spark: SparkSession, dir: Path): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val df = spark.range(2000).select(col("id"), (col("id") % 7).as("k"), col("id").cast("string").as("s"))
+    Seq("parquet", "csv", "json").foreach { f =>
+      df.write.format(f).option("header", "true").save(dir.resolve(f).toString)
+      val back = spark.read.format(f).option("header", "true").schema(df.schema).load(dir.resolve(f).toString)
+      Sink.run(back.join(back.groupBy("k").count(), "k")
+        .withColumn("r", row_number().over(Window.partitionBy("k").orderBy("id"))))
+    }
+  }
+
   def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
@@ -58,18 +76,18 @@ object Main {
       finally s.close()
     }
 
-  private def gc(): Unit = {
-    System.gc()
-    System.gc()
-  }
+  private def gc(): Unit = System.gc()
 
   private def liveHeapMb(): Double =
     java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
 
-  /** One finished pass. */
-  final case class PassResult(traced: Boolean, wallS: Double, untimedS: Double,
-                              ops: Seq[OpSample], extCores: Double, layer: Map[String, Double]) {
-    def passS: Double = wallS - untimedS
+  /** One finished pass. `time` covers the whole pass, the benchmark's
+    * own untimed work included; `passS` is the sum of its op latencies.
+    */
+  final case class PassResult(traced: Boolean, time: Host.Reading, untimedS: Double,
+                              ops: Seq[OpSample], layer: Map[String, Double]) {
+    def passS: Double = ops.map(_.ms).sum / 1e3
+    def wallPassS: Double = time.wallS - untimedS
   }
 
   /** Exits explicitly: Spark leaves non-daemon threads behind. */
@@ -92,7 +110,7 @@ object Main {
           throw new IllegalArgumentException(s"unknown workload ${opts("workload")}"))
         val result = run(wl, opts("seed").toLong, opts("seconds").toDouble,
           opts("trace") == "1", bench, work)
-        Files.writeString(Paths.get(opts("out")), Json.render(result) + "\n")
+        Files.writeString(Paths.get(opts("out")), Json.writeValueAsString(result) + "\n")
     }
   }
 
@@ -105,7 +123,7 @@ object Main {
     var spark: SparkSession = null
     var inputs: Path = null
 
-    def runPass(traceThis: Boolean, listeners: Option[Listeners]): PassResult = {
+    def runPass(traceThis: Boolean, listeners: Option[Listeners], counted: Boolean = true): PassResult = {
       val dir = work.resolve(s"pass-$passNo")
       passNo += 1
       deleteTree(dir)
@@ -117,47 +135,42 @@ object Main {
       tracer.enabled = traceThis
       tracer.drain()
       val fs0 = FsCounters.now()
-      val cpu0 = Host.cpu()
-      val t0 = System.nanoTime()
-      wl.pass(ctx)
-      val wallS = (System.nanoTime() - t0) / 1e9
-      val cpu1 = Host.cpu()
+      val time = Host.timed(wl.pass(ctx))._2
       val fs1 = FsCounters.now()
       tracer.enabled = false
       val spans = tracer.drain()
       val counters = listeners.filter(_ => traceThis).map(_.take(ops.untimedMs.toSeq))
-      gc()
-      val heap = liveHeapMb()
-      all ++= ops.samples
-      val ext = Host.externalCores(cpu0, cpu1, wallS)
+      // the live heap is a per-layer reading: a traced pass only
+      val heap = if (traceThis) { gc(); liveHeapMb() } else 0.0
+      if (counted) all ++= ops.samples
       val layer = counters.fold(Map.empty[String, Double])(c =>
-        LayerMetrics.of(wallS, ops, spans, c, fs1 - fs0 - ops.untimedFs, heap, ext, ctx.extra.toMap))
+        LayerMetrics.of(time, ops, spans, c, fs1 - fs0 - ops.untimedFs, heap, ctx.extra.toMap))
       deleteTree(dir)
-      PassResult(traceThis, wallS, ops.untimedNs / 1e9, ops.samples.toSeq, ext, layer)
+      PassResult(traceThis, time, ops.untimedNs / 1e9, ops.samples.toSeq, layer)
     }
 
-    def setUp(round: Int): Double = {
-      val t0 = System.nanoTime()
+    def setUp(round: Int): Host.Reading = Host.timed {
       if (spark != null) spark.stop()
       spark = session(work, traced)
       inputs = work.resolve(s"inputs-$round")
       deleteTree(inputs)
       Files.createDirectories(inputs)
       wl.generate(seed, inputs)
-      (System.nanoTime() - t0) / 1e9
-    }
+    }._2
 
     if (traced) org.apache.hadoop.fs.FileSystem.closeAll()
     val setups = (1 to (if (traced) 1 else SetupRounds)).map(setUp)
-    val warm = runPass(traceThis = false, None)
+    firstQuery(spark, work.resolve("first"))
+    val warm = if (wl.warmPass) Some(runPass(traceThis = false, None, counted = false)) else None
     val listeners = if (traced) Some(new Listeners(spark)) else None
     val passes = mutable.ArrayBuffer.empty[PassResult]
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
-    // a traced run needs an untraced pass too, for the tracing overhead
-    val minPasses = if (traced) 2 else MinPasses
+    // a traced run brackets its traced pass with untraced ones, for the
+    // tracing overhead
+    val minPasses = if (traced) 3 else MinPasses
     while (passes.size < minPasses ||
-      elapsed + Stats.median(passes.map(_.wallS).toSeq) <= seconds) {
+      elapsed + Stats.median(passes.map(_.time.wallS).toSeq) <= seconds) {
       passes += runPass(traceThis = traced && passes.size % 2 == 1, listeners)
     }
     val load1 = Host.loadavg()
@@ -167,32 +180,47 @@ object Main {
     val failed = all.count(!_.ok)
     val measured = passes.filterNot(_.traced).toSeq
     val tracedPasses = passes.filter(_.traced).toSeq
-    val tailP = Stats.tailPercentile(wl.opsPerPass * MinPasses)
+    val tailN = measured.map(_.ops.size).sum
+    val tailP = Stats.tailPercentile(tailN)
     val metrics: Map[String, Double] =
-      if (!traced) EndToEnd.of(setups, measured, tailP)
-      else LayerMetrics.median(tracedPasses.map(_.layer)) ++ Map(
-        "trace.overhead_s" -> (Stats.median(tracedPasses.map(_.passS)) -
-          Stats.median(measured.map(_.passS))))
+      if (!traced) EndToEnd.of(setups.map(_.steadyS), measured, tailP)
+      else {
+        // the untraced pass right after a traced one has its warmth,
+        // which the first pass, without a warm pass the op list's first
+        // run, does not
+        val overhead = passes.indices.filter(i => passes(i).traced && i + 1 < passes.size)
+          .map(i => passes(i).passS - passes(i + 1).passS)
+        LayerMetrics.median(tracedPasses.map(_.layer)) +
+          ("trace.overhead_s" -> Stats.median(overhead))
+      }
     val units = if (traced) LayerMetrics.Units else EndToEnd.Units
     System.err.println(f"[perfbench] ${wl.name} seed=$seed traced=$traced passes=${passes.size} " +
       f"ops=$attempted failed=$failed loadavg=$load0%.2f→$load1%.2f ext_cores=" +
-      passes.map(p => f"${p.extCores}%.2f").mkString(",") +
-      f" setup_s=${setups.map(s => f"$s%.2f").mkString(",")} pass_s=" +
-      passes.map(p => f"${p.passS}%.2f").mkString(",") + s" tail=p$tailP")
-    Files.writeString(work.resolve("detail.json"), Json.render(Map(
+      passes.map(p => f"${p.time.extCores}%.2f").mkString(",") + " steal_cores=" +
+      passes.map(p => f"${p.time.stealCores}%.2f").mkString(",") +
+      f" setup_s=${setups.map(s => f"${s.steadyS}%.2f").mkString(",")} pass_s=" +
+      passes.map(p => f"${p.passS}%.2f").mkString(",") + " wall_pass_s=" +
+      passes.map(p => f"${p.wallPassS}%.2f").mkString(",") + s" tail=p$tailP of $tailN")
+    Files.writeString(work.resolve("detail.json"), Json.writeValueAsString(Map(
       "workload" -> wl.name, "seed" -> seed, "traced" -> traced,
       "loadavg_start" -> load0, "loadavg_end" -> load1,
-      "setup_s" -> setups, "warm_pass_s" -> warm.wallS, "tail_percentile" -> tailP,
-      "tail_samples" -> measured.map(_.ops.size).sum,
-      "passes" -> passes.map(p => Map("traced" -> p.traced, "wall_s" -> p.wallS,
-        "pass_s" -> p.passS, "ext_cores" -> p.extCores,
-        "ops" -> p.ops.map(o => Map("name" -> o.name, "kind" -> o.kind, "ms" -> o.ms, "ok" -> o.ok)),
+      "warm_pass_wall_s" -> warm.map(_.time.wallS),
+      "setup_s" -> setups.map(_.steadyS), "setup_wall_s" -> setups.map(_.wallS),
+      "tail_percentile" -> tailP, "tail_samples" -> tailN,
+      "passes" -> passes.map(p => Map("traced" -> p.traced, "pass_s" -> p.passS,
+        "wall_pass_s" -> p.wallPassS, "ext_cores" -> p.time.extCores, "steal_cores" -> p.time.stealCores,
+        "ops" -> p.ops.map(o => Map("name" -> o.name, "kind" -> o.kind, "ms" -> o.ms,
+          "wall_ms" -> o.wallMs, "ok" -> o.ok)),
         "layer" -> p.layer)))) + "\n")
     Map("correct" -> (failed == 0), "attempted" -> attempted, "failed" -> failed,
       "metrics" -> units.map { case (n, u) =>
         n -> Map("value" -> metrics.getOrElse(n, 0.0), "unit" -> u)
       }.toMap)
   }
+
+  /** JSON writer for the result and detail files. */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
   private def recordQuerySuite(bench: Path, work: Path, out: Path): Unit = {
     val spark = session(work, traced = false)

@@ -24,7 +24,7 @@ object EndToEnd {
   * never calls reads 0.
   */
 object LayerMetrics {
-  private val connectorOps = Seq("ctas", "insert", "merge", "update", "delete", "point", "range", "asof")
+  private val connectorOps = Seq("ctas", "merge", "update", "delete", "point", "range", "asof")
   private val storeSpans = Seq("sync", "feed", "compact", "vacuum", "manifest")
   private val streamDurations = Seq("add_batch" -> "addBatch", "query_planning" -> "queryPlanning",
     "wal_commit" -> "walCommit", "latest_offset" -> "latestOffset", "commit_offsets" -> "commitOffsets")
@@ -39,7 +39,7 @@ object LayerMetrics {
     Seq("driver.gap_s" -> "s", "catalyst.plan_ms" -> "ms",
       "fs.read_mb" -> "MB", "fs.write_mb" -> "MB", "fs.read_ops" -> "count",
       "fs.write_ops" -> "count", "fs.list_ops" -> "count", "jvm.live_heap_mb" -> "MB",
-      "host.ext_cores" -> "cores",
+      "host.ext_cores" -> "cores", "host.steal_cores" -> "cores",
       "pipeline.backfill_ms" -> "ms", "pipeline.incremental_ms" -> "ms", "pipeline.facts_ms" -> "ms") ++
     streamDurations.map { case (n, _) => s"streaming.${n}_ms" -> "ms" } ++
     Seq("streaming.triggers" -> "count", "streaming.input_rows" -> "count",
@@ -56,12 +56,12 @@ object LayerMetrics {
       "space_amp" -> "ratio", "kpi_ms_geomean" -> "ms", "dedup_ms_geomean" -> "ms", "text_ms_geomean" -> "ms",
       "vector_ms_geomean" -> "ms")
 
-  def of(wallS: Double, ops: Ops, spans: Seq[Span], c: Counters, fs: FsCounters,
-         heapMb: Double, extCores: Double, extra: Map[String, Double]): Map[String, Double] = {
+  def of(time: Host.Reading, ops: Ops, spans: Seq[Span], c: Counters, fs: FsCounters,
+         heapMb: Double, extra: Map[String, Double]): Map[String, Double] = {
     val mb = 1048576.0
     val byName = Trace.totalByNameNs(spans).map { case (n, ns) => n -> ns / 1e6 }
     val self = Trace.selfByLayerNs(spans)
-    val timedS = wallS - ops.untimedNs / 1e9
+    val timedS = time.wallS - ops.untimedNs / 1e9
     val jobUnionS = Trace.unionNs(c.jobIntervalsMs) / 1e3
     val samples = ops.samples.toSeq
     def geo(f: OpSample => Boolean) = {
@@ -78,7 +78,7 @@ object LayerMetrics {
       "fs.read_mb" -> fs.readBytes / mb, "fs.write_mb" -> fs.writeBytes / mb,
       "fs.read_ops" -> fs.readOps.toDouble, "fs.write_ops" -> fs.writeOps.toDouble,
       "fs.list_ops" -> fs.listOps.toDouble, "jvm.live_heap_mb" -> heapMb,
-      "host.ext_cores" -> extCores,
+      "host.ext_cores" -> time.extCores, "host.steal_cores" -> time.stealCores,
       "pipeline.backfill_ms" -> byName.getOrElse("pipeline.backfill", 0.0),
       "pipeline.incremental_ms" -> byName.getOrElse("pipeline.incremental", 0.0),
       "pipeline.facts_ms" -> byName.getOrElse("pipeline.facts", 0.0),

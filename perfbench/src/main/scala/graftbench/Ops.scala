@@ -4,9 +4,12 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 /** One timed operation. `kind` is read, write or maintain; `family`
-  * groups ops for the family geomeans (kpi, dedup, text, vector).
+  * groups ops for the family geomeans (kpi, dedup, text, vector). `ms`
+  * is the op's latency with hypervisor steal taken out (see [[Host]]),
+  * `wallMs` its raw wall time.
   */
-final case class OpSample(name: String, kind: String, family: String, ms: Double, ok: Boolean)
+final case class OpSample(name: String, kind: String, family: String, ms: Double, wallMs: Double,
+                          ok: Boolean)
 
 /** Closed-loop op runner of one pass: each op runs only after the
   * previous one returned. An op is timed from the call into graft to
@@ -26,9 +29,7 @@ final class Ops(tracer: Tracer) {
       check: T => Option[String]): Unit = {
     tracer.currentOp = nextOp
     nextOp += 1
-    val t0 = System.nanoTime()
-    val result = try Right(body) catch { case NonFatal(e) => Left(e) }
-    val ms = (System.nanoTime() - t0) / 1e6
+    val (result, time) = Host.timed(try Right(body) catch { case NonFatal(e) => Left(e) })
     val error = untimed {
       result match {
         case Left(e) => Some(s"threw ${e.getClass.getName}: ${e.getMessage}")
@@ -38,7 +39,7 @@ final class Ops(tracer: Tracer) {
     }
     tracer.currentOp = -1
     error.foreach(e => System.err.println(s"[perfbench] op $name FAILED: ${e.take(500)}"))
-    samples += OpSample(name, kind, family, ms, error.isEmpty)
+    samples += OpSample(name, kind, family, time.steadyS * 1e3, time.wallS * 1e3, error.isEmpty)
   }
 
   def untimed[T](body: => T): T = {

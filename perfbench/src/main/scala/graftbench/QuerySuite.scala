@@ -6,22 +6,29 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
-/** Every `SparkEntry.queries` key except the `w*` table-store keys,
-  * over read-only inputs, each forced through [[Sink]]. The seed sets
+/** Eight of the `SparkEntry.queries` operator kernels over read-only
+  * inputs, each forced through [[Sink]]. The seed sets
   * the key order. Results are checked against the row counts and
   * hashes recorded in `expected/query_suite.tsv`.
   */
 object QuerySuite extends Workload {
   val name = "query_suite"
 
-  /** The operator kernels ROADMAP item 1 names as first targets, plus
-    * q18 and f01 so the kpi and text families have two keys each. One
-    * pass over all 81 non-`w*` keys takes 36-42 s on 4 cores, more
-    * than a run's budget allows.
+  /** Operator kernels ROADMAP item 1 names as first targets (t04, t10,
+    * t12, k02, s06, d10, q34) plus q33, so that the kpi family has two
+    * keys. d04, d07, s07 and q21 are left out for the time budget: their
+    * first runs cost 1-9 s each (see the README).
     */
   def keys: Seq[String] = TracedKeys.sorted
 
   def opsPerPass: Int = keys.size
+
+  /** Measured warm: an analytics session runs its kernels again and
+    * again. A first run's compilation also depends on which kernels ran
+    * before it, so with the seeded key order it would move the median
+    * from seed to seed.
+    */
+  override val warmPass = true
 
   def family(key: String): String = key.head match {
     case 'q' => "kpi"
@@ -32,9 +39,8 @@ object QuerySuite extends Workload {
   }
 
   /** Keys whose per-layer time the traced run reports on its own. */
-  val TracedKeys: Seq[String] = Seq("t04_fingerprint", "d04_dedup_ngram", "d10_semantic_dedup",
-    "t10_repetition", "t12_doc_freq_score", "k02_heavy_hitters", "s06_ann_pq",
-    "q34_salted_join", "q18_region_revenue", "f01_sql_text_funcs")
+  val TracedKeys: Seq[String] = Seq("t04_fingerprint", "d10_semantic_dedup", "t10_repetition",
+    "t12_doc_freq_score", "k02_heavy_hitters", "s06_ann_pq", "q34_salted_join", "q33_window_suite")
 
   /** The read-only inputs, under the benchmark's directory. */
   val DataDir = "data/sf0.01"

@@ -27,12 +27,13 @@ object Stats {
   val TailLadder: Seq[Double] = Seq(99.9, 99.0, 95.0, 90.0, 85.0, 80.0, 75.0, 70.0, 65.0, 60.0, 55.0, 50.0)
 
   /** The highest ladder percentile that leaves at least `beyond`
-    * samples above its nearest rank out of `n`. A tail read from fewer
-    * samples than that is one or two outliers, not a tail.
+    * samples above its nearest rank out of `n`: a tail read from fewer
+    * samples than that is one or two outliers. With too few samples for
+    * any of them, 100: on so short an op list every op is a different
+    * statement, and the slowest is the tail a client meets every pass.
     */
   def tailPercentile(n: Int, beyond: Int = 10): Double =
-    TailLadder.find(p => n - rankOf(p, n) >= beyond)
-      .getOrElse(TailLadder.last)
+    TailLadder.find(p => n - rankOf(p, n) >= beyond).getOrElse(100.0)
 
   def geomean(xs: Seq[Double]): Double = {
     require(xs.nonEmpty && xs.forall(_ > 0), "geomean needs positive samples")

@@ -27,6 +27,12 @@ trait Workload {
 
   /** Runs the op list once. */
   def pass(ctx: PassCtx): Unit
+
+  /** Whether an untimed pass precedes the measured ones. Without one the
+    * measured pass is the op list's first run in the JVM, as a job
+    * started per run meets it.
+    */
+  def warmPass: Boolean = false
 }
 
 object Workload {

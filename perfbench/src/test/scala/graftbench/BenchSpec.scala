@@ -87,6 +87,8 @@ class BenchSpec extends AnyFunSuite {
       (-7L, null, 0, false, java.time.LocalDate.of(1970, 1, 1)))
     val df = rows.toDF("l", "s", "i", "b", "d")
     assert(Check.digestOf(df) == Check.digest(rows.map(r => r.productIterator.toSeq)))
+    val both = Check.digestsOf(Seq("all" -> df, "none" -> df.where("false")))
+    assert(both == Map("all" -> Check.digestOf(df), "none" -> ((0L, 0L))))
   }
 
   test("self time is a span's duration minus what its children cover") {
@@ -107,12 +109,26 @@ class BenchSpec extends AnyFunSuite {
     assert(Stats.tailPercentile(1000) == 99.0)
     assert(Stats.tailPercentile(100) == 90.0)
     assert(Stats.tailPercentile(36) == 70.0)
+    assert(Stats.tailPercentile(23) == 55.0)
     assert(Stats.tailPercentile(20) == 50.0)
-    assert(Stats.tailPercentile(13) == 50.0)
+    // too few samples for any ladder percentile: the slowest op
+    assert(Stats.tailPercentile(13) == 100.0)
+    assert(Stats.tailPercentile(8) == 100.0)
     val xs = (1 to 100).map(_.toDouble)
     assert(Stats.percentile(xs, 90) == 90.0)
     assert(Stats.percentile(xs, 50) == 50.0)
     assert(Stats.median(Seq(3.0, 1.0, 2.0, 10.0)) == 2.5)
+  }
+
+  test("steal is taken out of a timing in proportion to the JVM's share of the CPU") {
+    // 10 s of wall time, 20 s of JVM CPU, 5 s stolen, nothing else running
+    val alone = Host.Reading(wallS = 10, procS = 20, busyS = 20, stealS = 5)
+    assert(math.abs(alone.steadyS - 8.0) < 1e-9)
+    // another process ran as much CPU as the JVM: half the steal is the JVM's
+    val shared = Host.Reading(wallS = 10, procS = 20, busyS = 40, stealS = 5)
+    assert(math.abs(shared.steadyS - 10.0 * 20 / 22.5) < 1e-9)
+    assert(Host.Reading(wallS = 10, procS = 20, busyS = 20, stealS = 0).steadyS == 10.0)
+    assert(math.abs(alone.stealCores - 0.5) < 1e-9)
   }
 
   test("jobs are attributed to the innermost graft module on their call site") {
