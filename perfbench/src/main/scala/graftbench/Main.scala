@@ -14,13 +14,13 @@ import org.apache.spark.sql.SparkSession
   * Untraced run: set-up (session start and seeded input generation) is
   * repeated [[SetupRounds]] times and `setup_s` is the median. Spark's
   * first query follows, untimed, then an untimed warm pass where the
-  * workload has one. Then whole passes run, at least [[MinPasses]] and
-  * more while the next fits in the time, and the end-to-end metrics are
-  * computed over their ops. Every timing has the hypervisor's steal
-  * taken out ([[Host]]). Traced run: one set-up, Spark's first query
-  * and the warm pass, then an untraced, a traced and an untraced pass;
-  * listeners, spans and the counting file system are on only in the
-  * traced pass.
+  * workload has one. Then whole passes run, at least the workload's
+  * `minPasses` and more while the next fits in the time, and the
+  * end-to-end metrics are computed over their ops. Every timing has
+  * the hypervisor's steal taken out ([[Host]]). Traced run: one set-up,
+  * Spark's first query and the warm pass, then an untraced, a traced
+  * and an untraced pass; listeners, spans and the counting file system
+  * are on only in the traced pass.
   *
   * Usage: Main --workload W --seed N --seconds S --trace 0|1 --bench DIR --work DIR --out FILE
   *        Main --record-query-suite FILE --bench DIR --work DIR
@@ -31,7 +31,6 @@ object Main {
     */
   val Cores = 2
   val SetupRounds = 3
-  val MinPasses = 1
 
   def session(work: Path, traced: Boolean): SparkSession = {
     val b = SparkSession.builder()
@@ -168,7 +167,7 @@ object Main {
     def elapsed = (System.nanoTime() - t0) / 1e9
     // a traced run brackets its traced pass with untraced ones, for the
     // tracing overhead
-    val minPasses = if (traced) 3 else MinPasses
+    val minPasses = if (traced) 3 else wl.minPasses
     while (passes.size < minPasses ||
       elapsed + Stats.median(passes.map(_.time.wallS).toSeq) <= seconds) {
       passes += runPass(traceThis = traced && passes.size % 2 == 1, listeners)

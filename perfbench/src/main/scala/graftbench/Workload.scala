@@ -33,6 +33,9 @@ trait Workload {
     * started per run meets it.
     */
   def warmPass: Boolean = false
+
+  /** Measured passes a run makes at the least. */
+  def minPasses: Int = 1
 }
 
 object Workload {
