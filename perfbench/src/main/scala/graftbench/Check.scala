@@ -32,21 +32,22 @@ object Check {
   def digest(rows: Iterable[Seq[Any]]): (Long, Long) =
     (rows.size.toLong, rows.iterator.map(rowHash).sum)
 
-  /** The same digest of a table, computed by Spark (untimed). */
-  def digestOf(df: DataFrame): (Long, Long) = {
-    val named = Sink.positional(df)
-    val r = named.agg(count(lit(1)), coalesce(sum(Sink.rowHash(named)), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** The same digest of a table: Spark hashes the rows, the driver sums
+    * them (untimed).
+    */
+  def digestOf(df: DataFrame): (Long, Long) = digestsOf(Seq("t" -> df))("t")
 
-  /** [[digestOf]] of several tables, by name, in one Spark job. */
+  /** [[digestOf]] of several tables, by name, in one Spark job. The
+    * tables are small, so their row hashes are collected and summed on
+    * the driver rather than in a shuffle.
+    */
   def digestsOf(tables: Seq[(String, DataFrame)]): Map[String, (Long, Long)] = {
     val hashes = tables.map { case (name, df) =>
       val named = Sink.positional(df)
       named.select(lit(name).as("table"), Sink.rowHash(named).as("h"))
     }
-    val got = hashes.reduce(_ unionByName _).groupBy("table").agg(count(lit(1)), sum("h")).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = hashes.reduce(_ unionByName _).collect()
+      .groupMapReduce(_.getString(0))(r => (1L, r.getLong(1)))((a, b) => (a._1 + b._1, a._2 + b._2))
     tables.map { case (name, _) => name -> got.getOrElse(name, (0L, 0L)) }.toMap
   }
 

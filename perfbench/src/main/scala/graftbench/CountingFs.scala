@@ -2,28 +2,63 @@ package graftbench
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, LocatedFileStatus, Path, RemoteIterator}
+import org.apache.hadoop.fs.{CreateFlag, FSDataInputStream, FSDataOutputStream, FileStatus, FileSystem,
+  LocatedFileStatus, Path, RemoteIterator}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
-/** The local file system, counting directory listings. Traced runs
-  * install it as `fs.file.impl`; Hadoop's own statistics have no
-  * listing count.
+/** The local file system, counting opens, writes (create, delete,
+  * rename, mkdirs) and directory listings. Traced runs install it as
+  * `fs.file.impl`; Hadoop's statistics for the local file system count
+  * bytes only.
   */
 class CountingLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem {
+  import CountingLocalFileSystem._
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    writes.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def createNonRecursive(f: Path, permission: FsPermission, flags: java.util.EnumSet[CreateFlag],
+                                  bufferSize: Int, replication: Short, blockSize: Long,
+                                  progress: Progressable): FSDataOutputStream = {
+    writes.incrementAndGet()
+    super.createNonRecursive(f, permission, flags, bufferSize, replication, blockSize, progress)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    writes.incrementAndGet()
+    super.delete(f, recursive)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    writes.incrementAndGet()
+    super.rename(src, dst)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    writes.incrementAndGet()
+    super.mkdirs(f, permission)
+  }
   override def listStatus(f: Path): Array[FileStatus] = {
-    CountingLocalFileSystem.lists.incrementAndGet()
+    lists.incrementAndGet()
     super.listStatus(f)
   }
   override def listLocatedStatus(f: Path): RemoteIterator[LocatedFileStatus] = {
-    CountingLocalFileSystem.lists.incrementAndGet()
+    lists.incrementAndGet()
     super.listLocatedStatus(f)
   }
   override def listStatusIterator(f: Path): RemoteIterator[FileStatus] = {
-    CountingLocalFileSystem.lists.incrementAndGet()
+    lists.incrementAndGet()
     super.listStatusIterator(f)
   }
 }
 
 object CountingLocalFileSystem {
+  val opens = new AtomicLong
+  val writes = new AtomicLong
   val lists = new AtomicLong
 }
 
@@ -42,8 +77,7 @@ object FsCounters {
     import scala.jdk.CollectionConverters._
     val st = FileSystem.getAllStatistics.asScala.filter(_.getScheme == "file")
     FsCounters(st.map(_.getBytesRead).sum, st.map(_.getBytesWritten).sum,
-      st.map(s => s.getReadOps + s.getLargeReadOps).sum, st.map(_.getWriteOps).sum,
-      CountingLocalFileSystem.lists.get)
+      CountingLocalFileSystem.opens.get, CountingLocalFileSystem.writes.get, CountingLocalFileSystem.lists.get)
   }
 
 }

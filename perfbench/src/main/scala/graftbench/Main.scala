@@ -12,25 +12,25 @@ import org.apache.spark.sql.SparkSession
   * the previous one), Spark as `local[2]` with 2 shuffle partitions.
   *
   * Untraced run: set-up (session start and seeded input generation) is
-  * repeated [[SetupRounds]] times and `setup_s` is the median. Spark's
-  * first query follows, untimed, then an untimed warm pass where the
-  * workload has one. Then whole passes run, at least the workload's
-  * `minPasses` and more while the next fits in the time, and the
-  * end-to-end metrics are computed over their ops. Every timing has
-  * the hypervisor's steal taken out ([[Host]]). Traced run: one set-up,
-  * Spark's first query and the warm pass, then an untraced, a traced
-  * and an untraced pass; listeners, spans and the counting file system
-  * are on only in the traced pass.
+  * repeated [[SetupRounds]] times and `setup_s` is the median. Then
+  * whole passes run, at least one and more while the next fits in the
+  * time, and the end-to-end metrics are computed over their ops; the
+  * first pass is the op list's first run in the JVM, as a job started
+  * per run meets it. Every timing has the hypervisor's steal taken out
+  * ([[Host]]). Traced run: one set-up, then an untraced, a traced and
+  * an untraced pass; listeners, spans and the counting file system are
+  * on only in the traced pass.
   *
   * Usage: Main --workload W --seed N --seconds S --trace 0|1 --bench DIR --work DIR --out FILE
   *        Main --record-query-suite FILE --bench DIR --work DIR
+  *        Main --train 1 --bench DIR --work DIR
   */
 object Main {
   /** Half the box's 4 cores: other tenants' load then lands on idle
     * cores instead of on the benchmark's critical path.
     */
   val Cores = 2
-  val SetupRounds = 3
+  val SetupRounds = 7
 
   def session(work: Path, traced: Boolean): SparkSession = {
     val b = SparkSession.builder()
@@ -41,8 +41,6 @@ object Main {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4194304")
-      .config("spark.sql.files.openCostInBytes", "1048576")
       .config("spark.local.dir", work.resolve("spark-local").toString)
       .config("spark.sql.warehouse.dir", work.resolve("spark-warehouse").toString)
       .config("spark.sql.streaming.checkpointLocation", work.resolve("spark-checkpoints").toString)
@@ -50,22 +48,6 @@ object Main {
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
-  }
-
-  /** Spark's first query in a JVM loads and compiles much of Spark SQL
-    * and its file formats, about 8 s here. It runs once before any
-    * pass, so that the first measured op does not pay for it.
-    */
-  private def firstQuery(spark: SparkSession, dir: Path): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val df = spark.range(2000).select(col("id"), (col("id") % 7).as("k"), col("id").cast("string").as("s"))
-    Seq("parquet", "csv", "json").foreach { f =>
-      df.write.format(f).option("header", "true").save(dir.resolve(f).toString)
-      val back = spark.read.format(f).option("header", "true").schema(df.schema).load(dir.resolve(f).toString)
-      Sink.run(back.join(back.groupBy("k").count(), "k")
-        .withColumn("r", row_number().over(Window.partitionBy("k").orderBy("id"))))
-    }
   }
 
   def deleteTree(p: Path): Unit =
@@ -102,7 +84,8 @@ object Main {
     val bench = Paths.get(opts("bench")).toAbsolutePath
     val work = Paths.get(opts("work")).toAbsolutePath
     Files.createDirectories(work)
-    opts.get("record-query-suite") match {
+    if (opts.contains("train")) train(bench, work)
+    else opts.get("record-query-suite") match {
       case Some(out) => recordQuerySuite(bench, work, Paths.get(out))
       case None =>
         val wl = Workload.byName(opts("workload")).getOrElse(
@@ -122,7 +105,7 @@ object Main {
     var spark: SparkSession = null
     var inputs: Path = null
 
-    def runPass(traceThis: Boolean, listeners: Option[Listeners], counted: Boolean = true): PassResult = {
+    def runPass(traceThis: Boolean, listeners: Option[Listeners]): PassResult = {
       val dir = work.resolve(s"pass-$passNo")
       passNo += 1
       deleteTree(dir)
@@ -141,15 +124,20 @@ object Main {
       val counters = listeners.filter(_ => traceThis).map(_.take(ops.untimedMs.toSeq))
       // the live heap is a per-layer reading: a traced pass only
       val heap = if (traceThis) { gc(); liveHeapMb() } else 0.0
-      if (counted) all ++= ops.samples
+      all ++= ops.samples
       val layer = counters.fold(Map.empty[String, Double])(c =>
         LayerMetrics.of(time, ops, spans, c, fs1 - fs0 - ops.untimedFs, heap, ctx.extra.toMap))
       deleteTree(dir)
       PassResult(traceThis, time, ops.untimedNs / 1e9, ops.samples.toSeq, layer)
     }
 
-    def setUp(round: Int): Host.Reading = Host.timed {
-      if (spark != null) spark.stop()
+    // the previous round's session is stopped and garbage collected
+    // outside the timed window: set-up is session start and generation
+    def setUp(round: Int): Host.Reading = {
+      if (spark != null) { spark.stop(); gc() }
+      setUpTimed(round)
+    }
+    def setUpTimed(round: Int): Host.Reading = Host.timed {
       spark = session(work, traced)
       inputs = work.resolve(s"inputs-$round")
       deleteTree(inputs)
@@ -157,23 +145,33 @@ object Main {
       wl.generate(seed, inputs)
     }._2
 
+    // wall seconds of each phase of the run, for the summary line
+    val phases = mutable.LinkedHashMap("jvm" ->
+      (System.currentTimeMillis() - java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3)
+    var mark = System.nanoTime()
+    def phase(name: String): Unit = {
+      val now = System.nanoTime()
+      phases(name) = (now - mark) / 1e9
+      mark = now
+    }
     if (traced) org.apache.hadoop.fs.FileSystem.closeAll()
     val setups = (1 to (if (traced) 1 else SetupRounds)).map(setUp)
-    firstQuery(spark, work.resolve("first"))
-    val warm = if (wl.warmPass) Some(runPass(traceThis = false, None, counted = false)) else None
+    phase("setup")
     val listeners = if (traced) Some(new Listeners(spark)) else None
     val passes = mutable.ArrayBuffer.empty[PassResult]
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
     // a traced run brackets its traced pass with untraced ones, for the
     // tracing overhead
-    val minPasses = if (traced) 3 else wl.minPasses
+    val minPasses = if (traced) 3 else 1
     while (passes.size < minPasses ||
       elapsed + Stats.median(passes.map(_.time.wallS).toSeq) <= seconds) {
       passes += runPass(traceThis = traced && passes.size % 2 == 1, listeners)
     }
+    phase("passes")
     val load1 = Host.loadavg()
     spark.stop()
+    phase("stop")
 
     val attempted = all.size
     val failed = all.count(!_.ok)
@@ -185,7 +183,7 @@ object Main {
       if (!traced) EndToEnd.of(setups.map(_.steadyS), measured, tailP)
       else {
         // the untraced pass right after a traced one has its warmth,
-        // which the first pass, without a warm pass the op list's first
+        // which the first pass, the op list's first
         // run, does not
         val overhead = passes.indices.filter(i => passes(i).traced && i + 1 < passes.size)
           .map(i => passes(i).passS - passes(i + 1).passS)
@@ -199,17 +197,19 @@ object Main {
       passes.map(p => f"${p.time.stealCores}%.2f").mkString(",") +
       f" setup_s=${setups.map(s => f"${s.steadyS}%.2f").mkString(",")} pass_s=" +
       passes.map(p => f"${p.passS}%.2f").mkString(",") + " wall_pass_s=" +
-      passes.map(p => f"${p.wallPassS}%.2f").mkString(",") + s" tail=p$tailP of $tailN")
+      passes.map(p => f"${p.wallPassS}%.2f").mkString(",") + " untimed_s=" +
+      passes.map(p => f"${p.untimedS}%.2f").mkString(",") + s" tail=p$tailP of $tailN phases_s=" +
+      phases.map { case (n, v) => f"$n:$v%.1f" }.mkString(","))
     Files.writeString(work.resolve("detail.json"), Json.writeValueAsString(Map(
       "workload" -> wl.name, "seed" -> seed, "traced" -> traced,
       "loadavg_start" -> load0, "loadavg_end" -> load1,
-      "warm_pass_wall_s" -> warm.map(_.time.wallS),
       "setup_s" -> setups.map(_.steadyS), "setup_wall_s" -> setups.map(_.wallS),
-      "tail_percentile" -> tailP, "tail_samples" -> tailN,
+      "tail_percentile" -> tailP, "tail_samples" -> tailN, "phases_s" -> phases.toMap,
       "passes" -> passes.map(p => Map("traced" -> p.traced, "pass_s" -> p.passS,
         "wall_pass_s" -> p.wallPassS, "ext_cores" -> p.time.extCores, "steal_cores" -> p.time.stealCores,
         "ops" -> p.ops.map(o => Map("name" -> o.name, "kind" -> o.kind, "ms" -> o.ms,
-          "wall_ms" -> o.wallMs, "ok" -> o.ok)),
+          "wall_ms" -> o.wallMs, "cpu_ms" -> o.time.procS * 1e3, "busy_ms" -> o.time.busyS * 1e3,
+          "steal_ms" -> o.time.stealS * 1e3, "ok" -> o.ok)),
         "layer" -> p.layer)))) + "\n")
     Map("correct" -> (failed == 0), "attempted" -> attempted, "failed" -> failed,
       "metrics" -> units.map { case (n, u) =>
@@ -220,6 +220,21 @@ object Main {
   /** JSON writer for the result and detail files. */
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
     .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  /** Runs every workload's set-up and one pass in one JVM, so that the
+    * class-data sharing archive written at its exit holds the classes
+    * the runs load. Results are not checked or reported.
+    */
+  private def train(bench: Path, work: Path): Unit = Workload.All.foreach { wl =>
+    val dir = work.resolve(wl.name)
+    val spark = session(dir, traced = false)
+    val inputs = Files.createDirectories(dir.resolve("inputs"))
+    wl.generate(0, inputs)
+    val tracer = new Tracer(false)
+    wl.pass(new PassCtx(spark, 0, inputs, bench, Files.createDirectories(dir.resolve("pass")),
+      new Ops(tracer), tracer))
+    spark.stop()
+  }
 
   private def recordQuerySuite(bench: Path, work: Path, out: Path): Unit = {
     val spark = session(work, traced = false)

@@ -8,8 +8,10 @@ import scala.util.control.NonFatal
   * is the op's latency with hypervisor steal taken out (see [[Host]]),
   * `wallMs` its raw wall time.
   */
-final case class OpSample(name: String, kind: String, family: String, ms: Double, wallMs: Double,
-                          ok: Boolean)
+final case class OpSample(name: String, kind: String, family: String, time: Host.Reading, ok: Boolean) {
+  def ms: Double = time.steadyS * 1e3
+  def wallMs: Double = time.wallS * 1e3
+}
 
 /** Closed-loop op runner of one pass: each op runs only after the
   * previous one returned. An op is timed from the call into graft to
@@ -39,7 +41,7 @@ final class Ops(tracer: Tracer) {
     }
     tracer.currentOp = -1
     error.foreach(e => System.err.println(s"[perfbench] op $name FAILED: ${e.take(500)}"))
-    samples += OpSample(name, kind, family, time.steadyS * 1e3, time.wallS * 1e3, error.isEmpty)
+    samples += OpSample(name, kind, family, time, error.isEmpty)
   }
 
   def untimed[T](body: => T): T = {

@@ -7,34 +7,24 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** Eight of the `SparkEntry.queries` operator kernels over read-only
-  * inputs, each forced through [[Sink]]. The seed sets
-  * the key order. Results are checked against the row counts and
-  * hashes recorded in `expected/query_suite.tsv`.
+  * inputs, each forced through [[Sink]], measured on their first run in
+  * the JVM. They run in one fixed order whatever the seed: a first run's
+  * compilation depends on which kernels ran before it, so a seeded order
+  * moved the median op from seed to seed by a quarter. Results are
+  * checked against the row counts and hashes recorded in
+  * `expected/query_suite.tsv`.
   */
 object QuerySuite extends Workload {
   val name = "query_suite"
 
   /** Operator kernels ROADMAP item 1 names as first targets (t04, t10,
     * t12, k02, s06, d10, q34) plus q33, so that the kpi family has two
-    * keys. d04, d07, s07 and q21 are left out for the time budget: their
-    * first runs cost 1-9 s each (see the README).
+    * keys, in the order they run. d04, d07, s07 and q21 are left out for
+    * the time budget: their first runs cost 1-9 s each (see the README).
     */
   def keys: Seq[String] = TracedKeys.sorted
 
   def opsPerPass: Int = keys.size
-
-  /** Measured warm: an analytics session runs its kernels again and
-    * again. A first run's compilation also depends on which kernels ran
-    * before it, so with the seeded key order it would move the median
-    * from seed to seed.
-    */
-  override val warmPass = true
-
-  /** Two measured passes: one pass of eight kernels is 7 s, short enough
-    * that the host's speed from one run to the next moved it by up to
-    * a quarter.
-    */
-  override val minPasses = 2
 
   def family(key: String): String = key.head match {
     case 'q' => "kpi"
@@ -56,10 +46,9 @@ object QuerySuite extends Workload {
   /** Recorded result of one key: `hash` is None where only the row count is checked. */
   final case class Expected(rows: Long, hash: Option[Long])
 
-  def order(seed: Long): Seq[String] = new scala.util.Random(seed).shuffle(keys)
-
+  /** The inputs are the committed data; the op list is [[keys]]. */
   def generate(seed: Long, dir: Path): Unit =
-    Files.write(dir.resolve("order.txt"), order(seed).asJava)
+    Files.write(dir.resolve("order.txt"), keys.asJava)
 
   private var expectedCache: Map[String, Expected] = null
 

@@ -27,15 +27,6 @@ trait Workload {
 
   /** Runs the op list once. */
   def pass(ctx: PassCtx): Unit
-
-  /** Whether an untimed pass precedes the measured ones. Without one the
-    * measured pass is the op list's first run in the JVM, as a job
-    * started per run meets it.
-    */
-  def warmPass: Boolean = false
-
-  /** Measured passes a run makes at the least. */
-  def minPasses: Int = 1
 }
 
 object Workload {

@@ -40,14 +40,15 @@ class BenchSpec extends AnyFunSuite {
       val a = generated(w, 17)
       assert(a.nonEmpty, w.name)
       assert(a == generated(w, 17), s"${w.name}: seed 17 generated different bytes")
-      assert(a != generated(w, 18), s"${w.name}: seeds 17 and 18 generated the same bytes")
+      // query_suite runs its kernels in one fixed order whatever the seed
+      if (w == QuerySuite) assert(a == generated(w, 18), "query_suite: the seed changed its inputs")
+      else assert(a != generated(w, 18), s"${w.name}: seeds 17 and 18 generated the same bytes")
     }
   }
 
   test("every seed gives a pass the same number of ops") {
     assert((1L to 5L).map(TableDml.opsOf).distinct == Seq(TableDml.opsPerPass))
     assert((1L to 5L).map(EltPipeline.plan(_).size).distinct == Seq(1 + EltPipeline.Ticks))
-    assert((1L to 5L).map(QuerySuite.order(_).size).distinct == Seq(QuerySuite.opsPerPass))
   }
 
   test("the timed plan keeps its projections and is never a bare count") {
