@@ -57,7 +57,12 @@ object Expectations {
     * violators with [[ReasonCol]] appended, and `metrics()` returns
     * rule-name → violation count. Counts ride the caller's FIRST
     * action on `kept` via observe — run one before calling `metrics()`
-    * (it blocks until the metrics exist).
+    * (it blocks until the metrics exist). That action must scan every
+    * row: one that stops early (`isEmpty`, `head`, a limit) reports the
+    * rows it read. `Warehouse.runBatch`'s first action is the clean
+    * write; `runIncremental`'s is the touched-bucket probe
+    * ([[graft.streaming.StreamPipeline.delta]]), which reads the whole
+    * micro-batch.
     */
   final case class Validated(kept: DataFrame, quarantined: DataFrame,
                              private val observation: Option[Observation]) {
@@ -75,10 +80,13 @@ object Expectations {
     * written when they trip; the rest evaluate lazily inside the
     * caller's own first action on `kept`.
     *
-    * Stable-source assumption: `df`'s lineage is evaluated up to three
-    * times (the Fail pre-flight, the caller's action on `kept`, and a
-    * quarantine write) — these are only mutually consistent when the
-    * source yields the same rows each time. A source that can change
+    * Stable-source assumption: `df`'s lineage is evaluated once per
+    * action over it — the Fail pre-flight, every action on `kept` (in
+    * `Warehouse.runIncremental`: the touched-bucket probe, the clean
+    * merge and, for an SCD2 entity, the dim merge) and the quarantine
+    * write — and these are only mutually consistent when the source
+    * yields the same rows each time (a streaming micro-batch does: it
+    * is a fixed set of files). A source that can change
     * between actions (e.g. a stage directory still receiving files)
     * should be pinned first (`persist`/`localCheckpoint`) by the
     * caller, or validated inside the snapshot-commit path

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Scd1, Scd2}
 import graft.sources.StageReader
+import graft.store.SnapshotStore
 import graft.streaming.StreamPipeline
 
 /** Declarative multi-entity warehouse runner — one entry point that
@@ -55,8 +56,10 @@ object Warehouse {
     *                  explicit contract over the reference's silent
     *                  `TRY_TO_*` null-coercion. Quarantined rows land
     *                  under `<out>/quarantine/<name>` with the violated
-    *                  rule names; violation counts ride the clean
-    *                  write's own action (no extra pass)
+    *                  rule names; violation counts ride the first
+    *                  action over the typed frame, no extra pass (the
+    *                  clean write in `runBatch`, the touched-bucket
+    *                  probe in `runIncremental`)
     */
   final case class Entity(
       name: String,
@@ -113,9 +116,11 @@ object Warehouse {
     * Clean and dim targets use the same bucket-partitioned layout as
     * the incremental sinks, so a batch backfill and subsequent
     * incremental runs compose on one target. Returns the produced
-    * frames keyed `clean/<e>`, `dim/<e>`, `fact/<f>` (re-read from the
-    * written parquet, so downstream consumers see exactly the
-    * persisted bytes; the internal bucket column is dropped).
+    * frames keyed `clean/<e>`, `dim/<e>`, `quarantine/<e>`, `fact/<f>`:
+    * reads of the written parquet (so downstream consumers see exactly
+    * the persisted bytes; the internal bucket column is dropped) whose
+    * schema comes from driver-side footer reads ([[readTarget]]), not
+    * from a schema-inference job per layer.
     */
   /** @param entityParallelism how many entity pipelines to keep in
     *   flight concurrently. Entities are independent until the fact
@@ -146,7 +151,7 @@ object Warehouse {
         .write.mode("overwrite")
         .partitionBy(StreamPipeline.BucketCol).parquet(path)
       StreamPipeline.writeLayoutMarker(path, numBuckets)
-      spark.read.parquet(path).drop(StreamPipeline.BucketCol)
+      readTarget(spark, path)
     }
     def runEntity(e: Entity): Seq[(String, DataFrame)] = {
       val validated = Expectations.validate(
@@ -167,7 +172,7 @@ object Warehouse {
         if (e.expectations.exists(_.policy == Expectations.Quarantine)) {
           val p = s"$outDir/quarantine/${e.name}"
           validated.quarantined.write.mode("overwrite").parquet(p)
-          Seq(s"quarantine/${e.name}" -> spark.read.parquet(p))
+          Seq(s"quarantine/${e.name}" -> readPlain(spark, p))
         } else Nil
       // after the clean write (the observed action) — counts are ready;
       // serialized so concurrent entities can share a plain collector
@@ -190,8 +195,21 @@ object Warehouse {
           Duration.Inf).flatten.toMap
         finally pool.shutdown()
       }
-    entityOut ++ runFacts(spark, cfg, outDir)
+    entityOut ++ buildFacts(spark, cfg, outDir,
+      entityOut.filter { case (k, _) => !k.startsWith("quarantine/") })
   }
+
+  /** A written clean/dim target read back with the schema its parquet
+    * footers declare, read on the driver, instead of Spark's
+    * schema-inference job (through the merge sinks' reader; the bucket
+    * column is dropped). Falls back to inference loudly.
+    */
+  private def readTarget(spark: SparkSession, path: String): DataFrame =
+    StreamPipeline.mergedTargetRead(spark, path).parquet(path).drop(StreamPipeline.BucketCol)
+
+  /** [[readTarget]] for a plain (unbucketed) fact or quarantine dir. */
+  private def readPlain(spark: SparkSession, path: String): DataFrame =
+    SnapshotStore.mergedSchemaRead(spark, Seq(path)).parquet(path)
 
   /** (Re)build every fact from the PERSISTED clean/dim layers under
     * `outDir` — callable standalone after an incremental pass so the
@@ -200,17 +218,24 @@ object Warehouse {
   def runFacts(spark: SparkSession, cfg: Config, outDir: String): Map[String, DataFrame] = {
     val entityOut = cfg.entities.flatMap { e =>
       val layers = Seq("clean" -> true, "dim" -> e.scd2).collect { case (l, true) => l }
-      layers.map(l => s"$l/${e.name}" ->
-        spark.read.parquet(s"$outDir/$l/${e.name}").drop(StreamPipeline.BucketCol))
+      layers.map(l => s"$l/${e.name}" -> readTarget(spark, s"$outDir/$l/${e.name}"))
     }.toMap
+    buildFacts(spark, cfg, outDir, entityOut) ++ entityOut
+  }
+
+  /** Every fact, in declared order, from the entity layers `entityOut`
+    * (and the facts built before it); returns the facts only.
+    */
+  private def buildFacts(spark: SparkSession, cfg: Config, outDir: String,
+                         entityOut: Map[String, DataFrame]): Map[String, DataFrame] =
     cfg.facts.foldLeft(entityOut) { (built, f) =>
       val missing = f.inputs.filterNot(built.contains)
       require(missing.isEmpty, s"fact ${f.name}: unknown inputs $missing")
+      val path = s"$outDir/fact/${f.name}"
       f.build(built.view.filterKeys(f.inputs.contains).toMap)
-        .write.mode("overwrite").parquet(s"$outDir/fact/${f.name}")
-      built + (s"fact/${f.name}" -> spark.read.parquet(s"$outDir/fact/${f.name}"))
-    }.view.filterKeys(_.startsWith("fact/")).toMap ++ entityOut
-  }
+        .write.mode("overwrite").parquet(path)
+      built + (s"fact/${f.name}" -> readPlain(spark, path))
+    }.view.filterKeys(_.startsWith("fact/")).toMap
 
   /** Incremental run (the cron-task analog): each entity's stage
     * directory becomes a file-source stream, typed on the fly, folded
@@ -248,10 +273,16 @@ object Warehouse {
           // quarantined rows append (batch-scoped; at-least-once like
           // any foreachBatch side output — keyed by audit cols)
           val validated = Expectations.validate(batch.toDF(), e.expectations)
-          StreamPipeline.upsertBatch(validated.kept, s"$outDir/clean/${e.name}",
+          // one touched-bucket probe per batch, shared by both sinks (the
+          // dim re-probes only if its bucket layout differs); it is the
+          // first action on `kept`, so it also fills the rule counts
+          val cleanDir = s"$outDir/clean/${e.name}"
+          val delta = StreamPipeline.delta(validated.kept, e.keys,
+            StreamPipeline.layoutBuckets(cleanDir, numBuckets))
+          StreamPipeline.upsertDelta(delta, cleanDir,
             e.keys, scd1Order(e), numBuckets, sinkDeleteCol(e))
           if (e.scd2)
-            StreamPipeline.scd2ApplyBatch(validated.kept, s"$outDir/dim/${e.name}",
+            StreamPipeline.scd2ApplyDelta(delta, s"$outDir/dim/${e.name}",
               e.keys, e.changeTs, e.tieBreak, numBuckets, sinkDeleteCol(e))
           if (e.expectations.exists(_.policy == Expectations.Quarantine))
             validated.quarantined.write.mode("append")

@@ -2354,13 +2354,19 @@ object SnapshotStore {
       : org.apache.spark.sql.DataFrameReader =
     mergedFooterSchema(spark, dirs) match {
       case Some(s) => spark.read.schema(s)
-      case None =>
-        // visible because silent fallback = a silent perf regression
-        // (the inference job re-reads every footer distributed)
-        System.err.println(
-          s"[graft] footer-schema read fell back to mergeSchema inference for ${dirs.take(2).mkString(",")}")
-        spark.read.option("mergeSchema", "true")
+      case None => inferenceFallback(spark, dirs)
     }
+
+  /** The slow path of every footer-schema read: a mergeSchema reader,
+    * announced on stderr because a silent fallback is a silent perf
+    * regression (the inference job re-reads every footer distributed).
+    */
+  private[graft] def inferenceFallback(spark: SparkSession, dirs: Seq[String])
+      : org.apache.spark.sql.DataFrameReader = {
+    System.err.println(
+      s"[graft] footer-schema read fell back to mergeSchema inference for ${dirs.take(2).mkString(",")}")
+    spark.read.option("mergeSchema", "true")
+  }
 
   /** An empty snapshot that still ANSWERS for the table's schema — a
     * zero-column `emptyDataFrame` would fail every downstream

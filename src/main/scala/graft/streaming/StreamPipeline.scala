@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -62,25 +62,31 @@ object StreamPipeline {
   /** Reader over a bucket-partitioned merge target whose union schema
     * (across additive evolution) comes from one driver-side footer per
     * bucket dir plus the explicit partition column — replacing a
-    * distributed mergeSchema inference job per micro-batch. Falls back
-    * to inference on any surprise.
+    * distributed mergeSchema inference job per read. Falls back, with
+    * the store's `[graft] footer-schema read fell back` line, to
+    * inference when no footer answers (no bucket dir yet, unreadable
+    * footer).
     */
-  private def mergedTargetRead(spark: SparkSession, targetDir: String)
+  private[graft] def mergedTargetRead(spark: SparkSession, targetDir: String)
       : org.apache.spark.sql.DataFrameReader = {
-    val dataSchema =
-      try {
-        val dirs = Files.list(Paths.get(targetDir)).toArray.toSeq
-          .map(_.asInstanceOf[Path])
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(s"$BucketCol="))
-          .map(_.toString)
-        if (dirs.isEmpty) None
-        else graft.store.SnapshotStore.mergedFooterSchema(spark, dirs)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    dataSchema match {
+    val dirs = bucketDirs(targetDir)
+    graft.store.SnapshotStore.mergedFooterSchema(spark, dirs) match {
       case Some(s) => spark.read.schema(s.add(BucketCol,
         org.apache.spark.sql.types.IntegerType, nullable = true))
-      case None => spark.read.option("mergeSchema", "true")
+      case None => graft.store.SnapshotStore.inferenceFallback(spark, Seq(targetDir))
+    }
+  }
+
+  private def bucketDirs(targetDir: String): Seq[String] = {
+    val root = Paths.get(targetDir)
+    if (!Files.isDirectory(root)) Nil
+    else {
+      val ls = Files.list(root)
+      try ls.toArray.toSeq.map(_.asInstanceOf[Path])
+        .filter(p => Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith(s"$BucketCol="))
+        .map(_.toString)
+      finally ls.close()
     }
   }
 
@@ -142,40 +148,72 @@ object StreamPipeline {
   def upsertBatch(batch: Dataset[Row], targetDir: String,
                   keys: Seq[String], orderBy: Seq[Column],
                   numBuckets: Int = 16,
-                  deleteCol: Option[String] = None): Unit = {
-    if (batch.isEmpty) return // empty micro-batch: nothing to merge
-    val spark = batch.sparkSession
+                  deleteCol: Option[String] = None): Unit =
+    upsertDelta(delta(batch.toDF(), keys, layoutBuckets(targetDir, numBuckets)),
+      targetDir, keys, orderBy, numBuckets, deleteCol)
+
+  /** A micro-batch routed to one bucket layout: `rows` carry
+    * [[BucketCol]] under `numBuckets`, and `touched` lists the buckets
+    * they land in (empty = nothing to merge). One delta can feed several
+    * sinks — [[graft.pipeline.Warehouse.runIncremental]] folds the same
+    * one into an entity's clean and dim targets.
+    */
+  private[graft] final case class BatchDelta(rows: DataFrame, numBuckets: Int, touched: Seq[Int])
+
+  /** Bucket `batch` under `numBuckets` and collect the (≤ numBuckets)
+    * bucket ids it touches — metadata-sized, the partition-pruning
+    * literal list any MERGE engine computes. One job with no shuffle:
+    * each task returns its partition's distinct buckets. It is also
+    * the batch's emptiness check, and the action that fills an
+    * [[graft.pipeline.Expectations]] observation riding `batch` (it
+    * scans every row).
+    */
+  private[graft] def delta(batch: DataFrame, keys: Seq[String], numBuckets: Int): BatchDelta = {
+    val rows = withBucket(batch, keys, numBuckets)
+    val touched = rows.select(BucketCol).as(Encoders.scalaInt)
+      .mapPartitions(_.toSet.iterator)(Encoders.scalaInt).collect()
+    BatchDelta(rows, numBuckets, touched.distinct.sorted.toSeq)
+  }
+
+  /** `d` in `targetDir`'s layout — the target's pinned bucket count, or
+    * `numBuckets` for a target not created yet: `d` itself when it was
+    * bucketed that way, else re-bucketed (one more probe).
+    */
+  private def routed(d: BatchDelta, targetDir: String, keys: Seq[String],
+                     numBuckets: Int): BatchDelta = {
+    val n = layoutBuckets(targetDir, numBuckets)
+    if (n == d.numBuckets) d else delta(d.rows.drop(BucketCol), keys, n)
+  }
+
+  /** [[upsertBatch]] over a precomputed delta. */
+  private[graft] def upsertDelta(d: BatchDelta, targetDir: String,
+                                 keys: Seq[String], orderBy: Seq[Column],
+                                 numBuckets: Int,
+                                 deleteCol: Option[String]): Unit = {
+    if (d.touched.isEmpty) return // empty micro-batch: nothing to merge
+    val b = routed(d, targetDir, keys, numBuckets)
     if (!Files.exists(Paths.get(targetDir))) {
       // dedup within the batch too — one micro-batch can carry several
       // versions of the same key (e.g. multiple staged files at once);
       // a key whose winning version is a tombstone never materializes
       // (same tie order as every later merge: Scd1.latestWithDeletes)
-      val b0 = withBucket(batch.toDF(), keys, numBuckets)
-      deleteCol.fold(Scd1.latestByKey(b0, keys, orderBy))(c =>
-          Scd1.latestWithDeletes(b0, keys, orderBy, c))
+      deleteCol.fold(Scd1.latestByKey(b.rows, keys, orderBy))(c =>
+          Scd1.latestWithDeletes(b.rows, keys, orderBy, c))
         .write.mode("overwrite").partitionBy(BucketCol).parquet(targetDir)
-      writeLayoutMarker(targetDir, numBuckets)
+      writeLayoutMarker(targetDir, b.numBuckets)
     } else {
       recoverSwaps(targetDir)
-      val b = withBucket(batch.toDF(), keys, layoutBuckets(targetDir, numBuckets))
-      val touched = affectedBuckets(b)
       // union schema across additive evolution from one driver-side
       // footer per bucket dir (each dir is one job's write — one
       // schema), instead of a distributed mergeSchema inference job
       // per micro-batch
-      val pruned = mergedTargetRead(spark, targetDir).parquet(targetDir)
-        .where(col(BucketCol).isin(touched: _*))
-      val merged = deleteCol.fold(Scd1.merge(pruned, b, keys, orderBy))(c =>
-        Scd1.mergeWithDeletes(pruned, b, keys, orderBy, c))
-      writeAffected(merged, targetDir, touched)
+      val pruned = mergedTargetRead(b.rows.sparkSession, targetDir).parquet(targetDir)
+        .where(col(BucketCol).isin(b.touched: _*))
+      val merged = deleteCol.fold(Scd1.merge(pruned, b.rows, keys, orderBy))(c =>
+        Scd1.mergeWithDeletes(pruned, b.rows, keys, orderBy, c))
+      writeAffected(merged, targetDir, b.touched)
     }
   }
-
-  /** The (≤ numBuckets) bucket ids a delta touches — metadata-sized,
-    * the partition-pruning literal list any MERGE engine computes.
-    */
-  private def affectedBuckets(bucketed: DataFrame): Seq[Any] =
-    bucketed.select(BucketCol).distinct().collect().map(_.get(0)).toSeq
 
   /** Stage to a temp dir (Spark refuses to overwrite a path it is also
     * reading), then swap in EXACTLY the `touched` bucket directories;
@@ -197,7 +235,7 @@ object StreamPipeline {
     * [[graft.store.SnapshotStore]]'s job — this sink is the
     * plain-directory sibling.
     */
-  private def writeAffected(df: DataFrame, targetDir: String, touched: Seq[Any]): Unit = {
+  private def writeAffected(df: DataFrame, targetDir: String, touched: Seq[Int]): Unit = {
     val tmp = targetDir + ".delta.tmp"
     val trash = targetDir + ".replaced.tmp"
     df.write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
@@ -294,22 +332,28 @@ object StreamPipeline {
   def scd2ApplyBatch(batch: DataFrame, targetDir: String,
                      keys: Seq[String], ts: String, tiebreak: String,
                      numBuckets: Int = 16,
-                     deleteCol: Option[String] = None): Unit = {
-    if (batch.isEmpty) return // empty micro-batch: nothing to fold
-    val spark = batch.sparkSession
+                     deleteCol: Option[String] = None): Unit =
+    scd2ApplyDelta(delta(batch, keys, layoutBuckets(targetDir, numBuckets)),
+      targetDir, keys, ts, tiebreak, numBuckets, deleteCol)
+
+  /** [[scd2ApplyBatch]] over a precomputed delta. */
+  private[graft] def scd2ApplyDelta(d: BatchDelta, targetDir: String,
+                                    keys: Seq[String], ts: String, tiebreak: String,
+                                    numBuckets: Int,
+                                    deleteCol: Option[String]): Unit = {
+    if (d.touched.isEmpty) return // empty micro-batch: nothing to fold
+    val b = routed(d, targetDir, keys, numBuckets)
     if (!Files.exists(Paths.get(targetDir))) {
-      val hist = deleteCol.fold(
-          Scd2.buildHistory(withBucket(batch, keys, numBuckets), keys, ts, tiebreak))(c =>
-          Scd2.buildHistoryWithDeletes(withBucket(batch, keys, numBuckets), keys, ts, tiebreak, c))
+      val hist = deleteCol.fold(Scd2.buildHistory(b.rows, keys, ts, tiebreak))(c =>
+        Scd2.buildHistoryWithDeletes(b.rows, keys, ts, tiebreak, c))
       hist.write.mode("overwrite").partitionBy(BucketCol).parquet(targetDir)
-      writeLayoutMarker(targetDir, numBuckets)
+      writeLayoutMarker(targetDir, b.numBuckets)
     } else {
       recoverSwaps(targetDir)
-      val b = withBucket(batch, keys, layoutBuckets(targetDir, numBuckets))
-      val touched = affectedBuckets(b)
-      val pruned = mergedTargetRead(spark, targetDir).parquet(targetDir)
-        .where(col(BucketCol).isin(touched: _*))
-      writeAffected(Scd2.applyDelta(pruned, b, keys, ts, tiebreak, deleteCol), targetDir, touched)
+      val pruned = mergedTargetRead(b.rows.sparkSession, targetDir).parquet(targetDir)
+        .where(col(BucketCol).isin(b.touched: _*))
+      writeAffected(Scd2.applyDelta(pruned, b.rows, keys, ts, tiebreak, deleteCol),
+        targetDir, b.touched)
     }
   }
 
