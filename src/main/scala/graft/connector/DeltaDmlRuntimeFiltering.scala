@@ -1,7 +1,7 @@
 package graft.connector
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, DynamicPruningExpression, EqualNullSafe, EqualTo, Expression, InSubquery, ListQuery, Literal, Murmur3Hash, NamedExpression, Pmod, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, DynamicPruningExpression, EqualNullSafe, EqualTo, Expression, InSubquery, ListQuery, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Cross, ExistenceJoin, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, WriteDelta}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -177,11 +177,10 @@ object DeltaDmlRuntimeFiltering extends Rule[LogicalPlan] with PredicateHelper {
     if (BigDecimal(otherSide.stats.sizeInBytes) >
         BigDecimal(scanRel.stats.sizeInBytes) * ratio) return None
 
-    // distinct pmod(hash(srcKeys), n) — the write path's exact bucket
-    // assignment (SnapshotStore: pmod(hash(keys), numBuckets)),
-    // deduped on the executors so the subquery yields ≤ n ints
-    val bucketExpr: Expression =
-      Pmod(new Murmur3Hash(srcExprs), Literal(scan.bucketCount))
+    // the distinct buckets of the source keys under the write path's
+    // own bucket function (SnapshotStore.bucketExpr), deduped on the
+    // executors so the subquery yields ≤ n ints
+    val bucketExpr = SnapshotStore.bucketExpr(srcExprs, Literal(scan.bucketCount))
     val alias = Alias(bucketExpr, "_graft_src_bucket")()
     val listPlan = Aggregate(Seq(bucketExpr), Seq(alias), otherSide)
     val pruningCond = DynamicPruningExpression(InSubquery(Seq(bucketAttr),

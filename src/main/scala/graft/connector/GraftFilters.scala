@@ -116,45 +116,35 @@ private[connector] object GraftFilters {
     }
   }
 
-  /** The buckets a set of merge-key literals hash into — the SAME
-    * Murmur3(seed 42) + pmod the write path's bucket assignment uses
-    * ([[SnapshotStore]]'s `pmod(hash(keys), numBuckets)`), evaluated
+  /** The buckets a set of merge-key literals hash into — the write
+    * path's own bucket function ([[SnapshotStore.bucketOf]]), evaluated
     * driver-side per value. A null key hashes to the seed, exactly as
-    * `functions.hash` does.
+    * `functions.hash` does. The one-column case of [[bucketsOfTuples]].
     */
   def bucketsOf(values: Seq[Any], dt: DataType, numBuckets: Int): Set[Int] =
-    values.map { v =>
-      val litE = org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)
-      val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(Seq(litE))
-        .eval(null).asInstanceOf[Int]
-      ((h % numBuckets) + numBuckets) % numBuckets
-    }.toSet
+    bucketsOfTuples(Seq(values -> dt), numBuckets, cap = Long.MaxValue).getOrElse(Set.empty)
 
   /** Composite-key variant of [[bucketsOf]]: per-key-column value
     * lists (in MERGE-KEY ORDER — the hash is over the full tuple)
     * fold to the buckets of their cross-product, a superset of the
     * actual joined tuples, so the narrowing stays conservative. None
-    * when the product exceeds `cap` (driver-side hashing must stay
-    * metadata-sized) — callers simply skip narrowing.
+    * when a list is empty or the product exceeds `cap` (driver-side
+    * hashing must stay metadata-sized) — callers simply skip narrowing.
     */
   def bucketsOfTuples(perKey: Seq[(Seq[Any], DataType)], numBuckets: Int,
                       cap: Long = 65536L): Option[Set[Int]] = {
-    val total = perKey.foldLeft(1L)((acc, p) =>
-      math.min(cap + 1, acc * math.max(1, p._1.size)))
-    if (perKey.exists(_._1.isEmpty) || total > cap) None
+    val total = perKey.foldLeft(BigInt(1))(_ * _._1.size)
+    if (total == 0 || total > cap) None
     else {
-      import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Murmur3Hash}
-      def combos(rest: Seq[(Seq[Any], DataType)]): Seq[Seq[Expression]] =
+      import org.apache.spark.sql.catalyst.expressions.Literal
+      def combos(rest: Seq[(Seq[Any], DataType)]): Seq[Seq[Literal]] =
         rest match {
           case Seq() => Seq(Seq.empty)
           case (vs, dt) +: tail =>
             val tails = combos(tail)
-            vs.flatMap(v => tails.map((Literal.create(v, dt): Expression) +: _))
+            vs.flatMap(v => tails.map(Literal.create(v, dt) +: _))
         }
-      Some(combos(perKey).map { lits =>
-        val h = new Murmur3Hash(lits).eval(null).asInstanceOf[Int]
-        ((h % numBuckets) + numBuckets) % numBuckets
-      }.toSet)
+      Some(combos(perKey).map(SnapshotStore.bucketOf(_, numBuckets)).toSet)
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft.connector
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Murmur3Hash}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
@@ -44,17 +44,13 @@ final class GraftBoundBucket(input: StructType) extends ScalarFunction[Integer] 
   override def isResultNullable: Boolean = false
   override def isDeterministic: Boolean = true
 
-  // the exact expression the write path evaluates per row
-  // (SnapshotStore.withBucket = pmod(hash(keys...), n)); fields 1..n
-  // are the key columns, field 0 the bucket count
-  @transient private lazy val hashExpr: Expression =
-    new Murmur3Hash(input.fields.toIndexedSeq.zipWithIndex.drop(1).map {
+  // the write path's own bucket function (SnapshotStore.bucketExpr):
+  // fields 1..n are the key columns, field 0 the bucket count
+  @transient private lazy val bucketExpr: Expression = graft.store.SnapshotStore.bucketExpr(
+    input.fields.toIndexedSeq.zipWithIndex.drop(1).map {
       case (f, i) => BoundReference(i, f.dataType, f.nullable): Expression
-    })
+    }, BoundReference(0, IntegerType, nullable = false))
 
-  override def produceResult(row: InternalRow): Integer = {
-    val n = row.getInt(0)
-    val h = hashExpr.eval(row).asInstanceOf[Int]
-    ((h % n) + n) % n
-  }
+  override def produceResult(row: InternalRow): Integer =
+    bucketExpr.eval(row).asInstanceOf[Integer]
 }

@@ -48,77 +48,65 @@ object Scd1 {
     * priority (pass e.g. `col("ts").desc, col("id").desc`). The
     * caller must make the ordering total (tie-break on a unique col)
     * for deterministic output.
+    *
+    * With `deleteCol`, DELETE tombstones are consumed too — the
+    * `WHEN MATCHED AND METADATA$ACTION = 'DELETE' THEN DELETE` branch
+    * of the reference's clean/dim MERGEs (`with
+    * procedures/location_proc.sql:274-286`). Tombstones are rows
+    * flagged true in `deleteCol` (an audit-namespaced `_`-column, so
+    * [[checkDrift]] tolerates a base not carrying it). They compete in
+    * the SAME version ordering as upserts: a key whose winning version
+    * is a tombstone disappears from the result, and a tombstone followed
+    * by a newer insert resurrects the key with the new row. At an exact
+    * `orderBy` tie a tombstone beats the live row (a delete event that
+    * reuses the deleted version's change metadata must still delete),
+    * so the first batch of a new target resolves tied deletes exactly
+    * like every later [[merge]] does. The filter is free: same single
+    * shuffle.
     */
-  def latestByKey(df: DataFrame, keys: Seq[String], orderBy: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(orderBy: _*)
-    df.withColumn(RN, row_number().over(w)).where(col(RN) === 1).drop(RN)
-  }
+  def latestByKey(df: DataFrame, keys: Seq[String], orderBy: Seq[Column],
+                  deleteCol: Option[String] = None): DataFrame =
+    latest(df, keys, orderBy, deleteCol, Nil)
 
   /** SCD1 merge: apply a delta batch onto a base snapshot; the newest
-    * version (per `orderBy`) survives. Schema drift limited to audit
-    * columns is tolerated (null-filled on the side missing them, the
-    * additive contract a table-format MERGE gives you); data-column
-    * drift fails loudly ([[checkDrift]]). On an exact `orderBy` tie —
-    * the at-least-once redelivery case, where the same version arrives
-    * again — the BASE row wins deterministically, so a replay can
-    * never flip a stored row's audit values.
+    * version (per `orderBy`, then tombstone before live row as in
+    * [[latestByKey]]) survives. Schema drift limited to audit columns
+    * is tolerated (null-filled on the side missing them, the additive
+    * contract a table-format MERGE gives you); data-column drift fails
+    * loudly ([[checkDrift]]). On an exact tie — the at-least-once
+    * redelivery case, where the same version arrives again — the BASE
+    * row wins deterministically, so a replay can never flip a stored
+    * row's audit values. Replay-idempotent either way: the same delta
+    * re-applied picks the same winner.
     */
-  def merge(base: DataFrame, delta: DataFrame, keys: Seq[String], orderBy: Seq[Column]): DataFrame = {
+  def merge(base: DataFrame, delta: DataFrame, keys: Seq[String], orderBy: Seq[Column],
+            deleteCol: Option[String] = None): DataFrame = {
     checkDrift(base.columns, delta.columns)
-    latestByKey(
+    latest(
       base.withColumn(SRC, lit(0))
         .unionByName(delta.withColumn(SRC, lit(1)), allowMissingColumns = true),
-      keys, orderBy :+ col(SRC).asc)
+      keys, orderBy, deleteCol, Seq(col(SRC).asc))
       .drop(SRC)
   }
 
-  /** [[merge]] that also consumes DELETE tombstones — the
-    * `WHEN MATCHED AND METADATA$ACTION = 'DELETE' THEN DELETE` branch
-    * of the reference's clean/dim MERGEs (`/root/reference/with
-    * procedures/location_proc.sql:274-286`).
-    *
-    * Tombstones are delta rows flagged true in `deleteCol` (an
-    * audit-namespaced `_`-column, so [[checkDrift]] tolerates the base
-    * not carrying it). They compete in the SAME version ordering as
-    * upserts: a key whose winning version is a tombstone disappears
-    * from the result; a tombstone followed by a newer insert in the
-    * same batch resurrects the key with the new row. Same single
-    * shuffle as [[merge]] — the filter is free.
+  /** The one total order every SCD1 fold uses: `orderBy`, then a
+    * tombstone before a live row, then `thenBy`.
     */
-  /** [[latestByKey]] + tombstone consumption for a SINGLE batch (the
-    * target-creation path): same total order as [[mergeWithDeletes]]
-    * — at an exact orderBy tie a tombstone beats the live row — so the
-    * first batch of a new target resolves tied delete events exactly
-    * like every later merge does.
-    */
-  def latestWithDeletes(df: DataFrame, keys: Seq[String],
-                        orderBy: Seq[Column], deleteCol: String): DataFrame = {
-    require(deleteCol.startsWith("_"),
-      s"deleteCol must be an audit-namespaced _column, got $deleteCol")
-    val deleted = coalesce(col(deleteCol), lit(false))
-    latestByKey(df, keys, orderBy :+ deleted.desc)
-      .where(!deleted)
-      .drop(deleteCol)
+  private def latest(df: DataFrame, keys: Seq[String], orderBy: Seq[Column],
+                     deleteCol: Option[String], thenBy: Seq[Column]): DataFrame = {
+    val deleted = deleteCol.map(c => c -> tombstone(c))
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(orderBy ++ deleted.map(_._2.desc) ++ thenBy: _*)
+    val winners = df.withColumn(RN, row_number().over(w)).where(col(RN) === 1).drop(RN)
+    deleted.fold(winners) { case (c, d) => winners.where(!d).drop(c) }
   }
 
-  def mergeWithDeletes(base: DataFrame, delta: DataFrame, keys: Seq[String],
-                       orderBy: Seq[Column], deleteCol: String): DataFrame = {
+  /** A tombstone flag as a non-null boolean. `deleteCol` must be an
+    * audit-namespaced `_`-column.
+    */
+  private[operators] def tombstone(deleteCol: String): Column = {
     require(deleteCol.startsWith("_"),
       s"deleteCol must be an audit-namespaced _column, got $deleteCol")
-    checkDrift(base.columns, delta.columns)
-    // tie-break order: at an EXACT orderBy tie, a tombstone beats the
-    // live row (a delete event that reuses the deleted version's
-    // change metadata must still delete — the reference MERGE's DELETE
-    // branch fires on any key match), then base-before-delta keeps
-    // replays from flipping stored audit values, as in [[merge]].
-    // Replay-idempotent either way: the same delta re-applied picks
-    // the same winner.
-    val deleted = coalesce(col(deleteCol), lit(false))
-    latestByKey(
-      base.withColumn(SRC, lit(0))
-        .unionByName(delta.withColumn(SRC, lit(1)), allowMissingColumns = true),
-      keys, orderBy ++ Seq(deleted.desc, col(SRC).asc))
-      .where(!deleted)
-      .drop(deleteCol, SRC)
+    coalesce(col(deleteCol), lit(false))
   }
 }

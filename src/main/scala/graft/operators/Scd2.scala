@@ -23,13 +23,30 @@ object Scd2 {
     * @param keys    business-key columns
     * @param ts      change-timestamp column name (becomes eff_start)
     * @param tieBreak unique column making the ordering total
+    * @param deleteCol DELETE tombstone flag (the reference dim MERGE's
+    *   `METADATA$ACTION = 'DELETE'` branch, `with
+    *   procedures/location_proc.sql:274-286`): a tombstone — a row
+    *   flagged true in `deleteCol` — participates in the version
+    *   ordering like any change, so the preceding version's
+    *   `eff_end_ts` becomes the delete timestamp and the tombstone
+    *   itself becomes a flagged version ROW in the history (data
+    *   columns null; the flag is made non-null). Keeping the tombstone
+    *   row — rather than filtering it — is what makes the deletion
+    *   durable: a later re-insert of the key re-derives against a
+    *   version sequence that still CONTAINS the delete, so the
+    *   pre-delete version keeps ending at the delete timestamp and the
+    *   gap stays visible to [[asOf]] (filter `!deleteCol` for live
+    *   rows; [[currentRows]] does). A history that dropped tombstones
+    *   would retroactively erase the gap on the next touch of the key.
     */
-  def buildHistory(changes: DataFrame, keys: Seq[String], ts: String, tieBreak: String): DataFrame = {
+  def buildHistory(changes: DataFrame, keys: Seq[String], ts: String, tieBreak: String,
+                   deleteCol: Option[String] = None): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ts).asc, col(tieBreak).asc)
-    changes
+    val history = changes
       .withColumn("eff_start_ts", col(ts))
       .withColumn("eff_end_ts", lead(col(ts), 1).over(w))
       .withColumn("current_flag", lead(col(ts), 1).over(w).isNull)
+    deleteCol.fold(history)(c => history.withColumn(c, Scd1.tombstone(c)))
   }
 
   /** Point-in-time (as-of) lookup against an SCD2 history. */
@@ -73,39 +90,9 @@ object Scd2 {
       .unionByName(delta.withColumn(src, lit(1)), allowMissingColumns = true)
       .withColumn("__rn", row_number().over(wVer)).where(col("__rn") === 1)
       .drop("__rn", src)
-    normalizeTombstones(buildHistory(versions, keys, ts, tieBreak), deleteCol)
+    buildHistory(versions, keys, ts, tieBreak, deleteCol)
       .unionByName(untouched, allowMissingColumns = true)
   }
-
-  /** DELETE close-out (the reference dim MERGE's
-    * `METADATA$ACTION = 'DELETE'` branch, `/root/reference/with
-    * procedures/location_proc.sql:274-286`): a tombstone — a delta row
-    * flagged true in `deleteCol` — participates in the version
-    * ordering like any change, so the preceding version's
-    * `eff_end_ts` becomes the delete timestamp and the tombstone
-    * itself becomes a flagged version ROW in the history (data columns
-    * null). Keeping the tombstone row — rather than filtering it — is
-    * what makes the deletion durable: a later re-insert of the key
-    * re-derives against a version sequence that still CONTAINS the
-    * delete, so the pre-delete version keeps ending at the delete
-    * timestamp and the gap stays visible to [[asOf]] (filter
-    * `!deleteCol` for live rows; [[currentRows]] does). A history
-    * that dropped tombstones would retroactively erase the gap on the
-    * next touch of the key. Replay-idempotent like the upsert path:
-    * versions dedup on (key, tieBreak).
-    */
-  private def normalizeTombstones(history: DataFrame, deleteCol: Option[String]): DataFrame =
-    deleteCol.fold(history) { c =>
-      require(c.startsWith("_"), s"deleteCol must be an audit-namespaced _column, got $c")
-      history.withColumn(c, coalesce(col(c), lit(false)))
-    }
-
-  /** [[buildHistory]] consuming DELETE tombstones — see
-    * [[normalizeTombstones]].
-    */
-  def buildHistoryWithDeletes(changes: DataFrame, keys: Seq[String], ts: String,
-                              tieBreak: String, deleteCol: String): DataFrame =
-    normalizeTombstones(buildHistory(changes, keys, ts, tieBreak), Some(deleteCol))
 
   /** The live (SCD1-equivalent) view of a history: current rows,
     * excluding keys whose latest version is a delete tombstone.

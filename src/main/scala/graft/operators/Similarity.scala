@@ -114,9 +114,11 @@ object Similarity {
     // explodes only probe-HIT buckets' member sets. r19 (guide
     // §2.3/§2.4): this removes the r18 shape's census job, its
     // broadcast anti-join, AND the fan-out persist + materialization
-    // pass (the fan-out is now referenced exactly once). A capped
-    // bucket's set is ≤ maxBucketSize ids in one aggregation buffer —
-    // bounded by construction.
+    // pass (the fan-out is now referenced exactly once). The cap is
+    // NOT a memory bound: the size filter runs after the aggregation,
+    // so a hot bucket's whole member set is built first, in one
+    // collect_set buffer that cannot spill — a skewed bucket can OOM
+    // its task. A bounded bucket-pair primitive is ROADMAP item 2.
     val grouped = Parallelize.ensure(corpus).select(col(idCol).as("neighbor_id"),
         posexplode(tableBuckets(col(vecCol), tables)).as(Seq("table_idx", "bucket")))
       .groupBy(col("table_idx"), col("bucket"))

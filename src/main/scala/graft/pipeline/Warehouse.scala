@@ -121,8 +121,8 @@ object Warehouse {
     * the persisted bytes; the internal bucket column is dropped) whose
     * schema comes from driver-side footer reads ([[readTarget]]), not
     * from a schema-inference job per layer.
-    */
-  /** @param entityParallelism how many entity pipelines to keep in
+    *
+    * @param entityParallelism how many entity pipelines to keep in
     *   flight concurrently. Entities are independent until the fact
     *   layer (each writes its own clean/dim target), so their jobs can
     *   share the cluster instead of serializing — ten small entities
@@ -147,10 +147,7 @@ object Warehouse {
                onExpectations: (String, Map[String, Long]) => Unit = (_, _) => ())
       : Map[String, DataFrame] = {
     def writeBucketed(df: DataFrame, e: Entity, path: String): DataFrame = {
-      StreamPipeline.withBucket(df, e.keys, numBuckets)
-        .write.mode("overwrite")
-        .partitionBy(StreamPipeline.BucketCol).parquet(path)
-      StreamPipeline.writeLayoutMarker(path, numBuckets)
+      StreamPipeline.createTarget(StreamPipeline.withBucket(df, e.keys, numBuckets), path, numBuckets)
       readTarget(spark, path)
     }
     def runEntity(e: Entity): Seq[(String, DataFrame)] = {
@@ -158,14 +155,10 @@ object Warehouse {
         withTombstones(StageReader.typed(stage(spark, e), e.casts), e),
         e.expectations)
       val typed = validated.kept
-      val clean = sinkDeleteCol(e).fold(
-        Scd1.latestByKey(typed, e.keys, scd1Order(e)))(c =>
-        Scd1.latestWithDeletes(typed, e.keys, scd1Order(e), c))
+      val clean = Scd1.latestByKey(typed, e.keys, scd1Order(e), sinkDeleteCol(e))
       val cleanOut = writeBucketed(clean, e, s"$outDir/clean/${e.name}")
       val dim = if (e.scd2) {
-        val h = sinkDeleteCol(e).fold(
-            Scd2.buildHistory(typed, e.keys, e.changeTs, e.tieBreak))(c =>
-            Scd2.buildHistoryWithDeletes(typed, e.keys, e.changeTs, e.tieBreak, c))
+        val h = Scd2.buildHistory(typed, e.keys, e.changeTs, e.tieBreak, sinkDeleteCol(e))
         Seq(s"dim/${e.name}" -> writeBucketed(h, e, s"$outDir/dim/${e.name}"))
       } else Nil
       val quarantine =
@@ -250,6 +243,17 @@ object Warehouse {
     * returned queries drain (`awaitTermination`), call [[runFacts]] to
     * bring the fact layer up to date with the entities it derives
     * from; the streams themselves never touch `cfg.facts`.
+    *
+    * Quarantined rows append to `<out>/quarantine/<e>` once per
+    * version (`keys` + `tieBreak`): a fresh-checkpoint catchup after
+    * [[runBatch]] or a replayed batch adds none it already holds, and a
+    * batch with no quarantine violation launches no quarantine job.
+    *
+    * @param onExpectations per-batch expectation report (entity name →
+    *   rule → violation count), serialized like [[runBatch]]'s. It
+    *   reports what each batch validated, so a catchup that re-reads
+    *   files [[runBatch]] already validated reports their violations
+    *   again, although their quarantined rows are not stored twice.
     */
   def runIncremental(spark: SparkSession, cfg: Config, outDir: String,
                      checkpointDir: String, numBuckets: Int = 16,
@@ -269,9 +273,7 @@ object Warehouse {
         .option("checkpointLocation", s"$checkpointDir/${e.name}")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // per-batch validation: Fail pre-flights before any write;
-          // quarantined rows append (batch-scoped; at-least-once like
-          // any foreachBatch side output — keyed by audit cols)
+          // per-batch validation: Fail pre-flights before any write
           val validated = Expectations.validate(batch.toDF(), e.expectations)
           // one touched-bucket probe per batch, shared by both sinks (the
           // dim re-probes only if its bucket layout differs); it is the
@@ -279,24 +281,41 @@ object Warehouse {
           val cleanDir = s"$outDir/clean/${e.name}"
           val delta = StreamPipeline.delta(validated.kept, e.keys,
             StreamPipeline.layoutBuckets(cleanDir, numBuckets))
+          val counts = validated.metrics()
           StreamPipeline.upsertDelta(delta, cleanDir,
             e.keys, scd1Order(e), numBuckets, sinkDeleteCol(e))
           if (e.scd2)
             StreamPipeline.scd2ApplyDelta(delta, s"$outDir/dim/${e.name}",
               e.keys, e.changeTs, e.tieBreak, numBuckets, sinkDeleteCol(e))
-          if (e.expectations.exists(_.policy == Expectations.Quarantine))
-            validated.quarantined.write.mode("append")
-              .parquet(s"$outDir/quarantine/${e.name}")
+          if (e.expectations.exists(r => r.policy == Expectations.Quarantine &&
+                counts.getOrElse(r.name, 0L) > 0))
+            appendQuarantine(spark, validated.quarantined, e, s"$outDir/quarantine/${e.name}")
           // serialized like runBatch's callback: each entity's stream
           // runs its batches on its own thread, so a shared collector
           // would otherwise race across entities
-          if (e.expectations.nonEmpty) {
-            val m = validated.metrics()
-            callbackLock.synchronized(onExpectations(e.name, m))
-          }
+          if (e.expectations.nonEmpty)
+            callbackLock.synchronized(onExpectations(e.name, counts))
         }
         .start()
     }
+
+  /** Append `rows` to the quarantine layer at `path`, minus the
+    * versions (`keys` + `tieBreak`) it already holds: a fresh-checkpoint
+    * catchup after [[runBatch]], or a replayed micro-batch, re-validates
+    * files whose violators are stored already. Null-safe on the
+    * identity, so a row quarantined for a null key is stored once too.
+    */
+  private def appendQuarantine(spark: SparkSession, rows: DataFrame, e: Entity,
+                               path: String): Unit = {
+    val id = e.keys :+ e.tieBreak
+    val fresh =
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) rows
+      else {
+        val held = readPlain(spark, path).select(id.map(c => col(c).as(s"__held_$c")): _*)
+        rows.join(held, id.map(c => col(c) <=> col(s"__held_$c")).reduce(_ && _), "left_anti")
+      }
+    fresh.write.mode("append").parquet(path)
+  }
 
   /** Periodic maintenance — the cron-TASK analog for the transactional
     * snapshot tables the streaming sinks maintain (reference:

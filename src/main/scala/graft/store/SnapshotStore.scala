@@ -8,7 +8,9 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Scd1, Scd2}
@@ -450,8 +452,25 @@ object SnapshotStore {
 
   private def newToken(): String = UUID.randomUUID().toString.take(8)
 
-  private[store] def withBucket(df: DataFrame, keys: Seq[String], numBuckets: Int): DataFrame =
-    df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(numBuckets)))
+  /** The bucket layout, defined once: a key tuple lands in bucket
+    * `pmod(murmur3(keys, seed 42), numBuckets)`, the value
+    * `pmod(hash(keys...), lit(n))` computes. Every writer, every pruner
+    * and the catalog's `bucket` function evaluate this expression, so a
+    * key is never routed away from the bucket its history lives in.
+    */
+  private[graft] def bucketExpr(keys: Seq[Expression], numBuckets: Expression): Expression =
+    Pmod(new Murmur3Hash(keys), numBuckets)
+
+  /** [[bucketExpr]] over key columns. */
+  private[graft] def bucketColumn(keys: Seq[Column], numBuckets: Int): Column =
+    ColumnBridge.column(bucketExpr(keys.map(ColumnBridge.expression), Literal(numBuckets)))
+
+  /** [[bucketExpr]] evaluated on the driver for one tuple of key literals. */
+  private[graft] def bucketOf(key: Seq[Literal], numBuckets: Int): Int =
+    bucketExpr(key, Literal(numBuckets)).eval(null).asInstanceOf[Int]
+
+  private[graft] def withBucket(df: DataFrame, keys: Seq[String], numBuckets: Int): DataFrame =
+    df.withColumn(BucketCol, bucketColumn(keys.map(col), numBuckets))
 
   // ------------------------------------------------------------------
   // table properties (`_props` breadcrumb)
@@ -6134,25 +6153,9 @@ object SnapshotStore {
                        numBuckets: Int = 16,
                        statsCols: Seq[String] = Nil,
                        deleteCol: Option[String] = None): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val txn = Some(checkpointDir -> batchId)
-        if (!batch.isEmpty) {
-          val b = batch.toDF()
-          def firstState = deleteCol.fold(Scd1.latestByKey(b, keys, orderBy))(c =>
-            Scd1.latestWithDeletes(b, keys, orderBy, c))
-          if (latestVersion(spark, root).isEmpty) {
-            init(spark, root, firstState, keys, numBuckets, statsCols, txn)
-          } else {
-            commitDelta(spark, root, b, keys,
-              (cur, delta) => deleteCol.fold(Scd1.merge(cur, delta, keys, orderBy))(c =>
-                Scd1.mergeWithDeletes(cur, delta, keys, orderBy, c)), txn = txn)
-          }
-        }: Unit
-      }
-      .start()
+    snapshotSink(stream, root, checkpointDir, keys, numBuckets, statsCols)(identity,
+      Scd1.latestByKey(_, keys, orderBy, deleteCol),
+      Scd1.merge(_, _, keys, orderBy, deleteCol))
 
   /** Streaming materialized view: maintain a grouped aggregate
     * incrementally under snapshot isolation. Each micro-batch is
@@ -6160,7 +6163,10 @@ object SnapshotStore {
     * of only the touched group-key buckets by re-aggregating — valid
     * for algebraic aggregates (sum/count/min/max), the same
     * partial-merge law q30 proves against a full recompute. Per batch:
-    * O(delta + touched buckets), one atomic version.
+    * O(delta + touched buckets), one atomic version. A replayed batch
+    * re-SUMMED into the partials would corrupt the aggregate
+    * permanently (unlike the idempotent SCD merges); the manifest txn
+    * makes the redelivery a no-op.
     *
     * `aggs` must map partial columns to themselves (e.g. sum("n") as
     * "n") so merge(partials, partials) == partials of the union.
@@ -6170,26 +6176,8 @@ object SnapshotStore {
                       numBuckets: Int = 16): StreamingQuery = {
     def reAgg(df: DataFrame): DataFrame =
       df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // foreachBatch is at-least-once: a replayed batch re-SUMMED
-        // into the partials would corrupt the aggregate permanently
-        // (unlike the idempotent SCD merges) — the manifest txn makes
-        // the redelivery a no-op
-        val txn = Some(checkpointDir -> batchId)
-        if (!batch.isEmpty) {
-          val partials = reAgg(batch.toDF())
-          if (latestVersion(spark, root).isEmpty) {
-            init(spark, root, partials, groupCols, numBuckets, txn = txn)
-          } else {
-            commitDelta(spark, root, partials, groupCols,
-              (cur, delta) => reAgg(cur.unionByName(delta)), txn = txn)
-          }
-        }: Unit
-      }
-      .start()
+    snapshotSink(stream, root, checkpointDir, groupCols, numBuckets, Nil)(reAgg,
+      identity, (cur, delta) => reAgg(cur.unionByName(delta)))
   }
 
   /** Continuous SCD2 dim maintenance with snapshot isolation: the
@@ -6202,22 +6190,30 @@ object SnapshotStore {
                        numBuckets: Int = 16,
                        statsCols: Seq[String] = Nil,
                        deleteCol: Option[String] = None): StreamingQuery =
+    snapshotSink(stream, root, checkpointDir, keys, numBuckets, statsCols)(identity,
+      Scd2.buildHistory(_, keys, ts, tiebreak, deleteCol),
+      Scd2.applyDelta(_, _, keys, ts, tiebreak, deleteCol))
+
+  /** The `foreachBatch` body every snapshot sink shares. A non-empty
+    * micro-batch becomes `delta(batch)`; the first one creates the
+    * table from `first(delta)`, every later one folds into the current
+    * version through [[commitDelta]] with `merge`. Each commit carries
+    * the (checkpoint, batch id) txn, so a redelivered batch is a no-op.
+    */
+  private def snapshotSink(stream: DataFrame, root: String, checkpointDir: String,
+                           keys: Seq[String], numBuckets: Int, statsCols: Seq[String])(
+      delta: DataFrame => DataFrame, first: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
         val txn = Some(checkpointDir -> batchId)
         if (!batch.isEmpty) {
-          val b = batch.toDF()
-          if (latestVersion(spark, root).isEmpty) {
-            val hist = deleteCol.fold(Scd2.buildHistory(b, keys, ts, tiebreak))(c =>
-              Scd2.buildHistoryWithDeletes(b, keys, ts, tiebreak, c))
-            init(spark, root, hist, keys, numBuckets, statsCols, txn)
-          } else {
-            commitDelta(spark, root, b, keys,
-              (cur, delta) => Scd2.applyDelta(cur, delta, keys, ts, tiebreak, deleteCol),
-              txn = txn)
-          }
+          val d = delta(batch.toDF())
+          if (latestVersion(spark, root).isEmpty)
+            init(spark, root, first(d), keys, numBuckets, statsCols, txn)
+          else commitDelta(spark, root, d, keys, merge, txn = txn)
         }: Unit
       }
       .start()

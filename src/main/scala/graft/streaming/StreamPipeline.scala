@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Scd1, Scd2}
+import graft.store.SnapshotStore
 
 /** Structured-Streaming re-expression of the reference's "real-time"
   * machinery:
@@ -41,11 +42,11 @@ object StreamPipeline {
     * business key. Deterministic, so any delta row lands in the same
     * bucket as every prior version of its key.
     */
-  val BucketCol = "_graft_bucket"
+  val BucketCol: String = SnapshotStore.BucketCol
 
-  /** Attach the target bucket to each row. */
+  /** Attach the target bucket to each row (the store's layout). */
   def withBucket(df: DataFrame, keys: Seq[String], numBuckets: Int): DataFrame =
-    df.withColumn(BucketCol, pmod(hash(keys.map(col): _*), lit(numBuckets)))
+    SnapshotStore.withBucket(df, keys, numBuckets)
 
   /** The bucket count is a property of the TARGET LAYOUT, not of a
     * call: a marker file written at target creation pins it, and every
@@ -56,8 +57,14 @@ object StreamPipeline {
     */
   private val LayoutMarker = "_graft_buckets"
 
-  private[graft] def writeLayoutMarker(targetDir: String, numBuckets: Int): Unit =
+  /** Create a target from `rows` (which carry [[BucketCol]] under
+    * `numBuckets`) and pin its layout marker — the first batch of every
+    * merge target, and [[graft.pipeline.Warehouse.runBatch]]'s backfill.
+    */
+  private[graft] def createTarget(rows: DataFrame, targetDir: String, numBuckets: Int): Unit = {
+    rows.write.mode("overwrite").partitionBy(BucketCol).parquet(targetDir)
     Files.writeString(Paths.get(targetDir, LayoutMarker), numBuckets.toString)
+  }
 
   /** Reader over a bucket-partitioned merge target whose union schema
     * (across additive evolution) comes from one driver-side footer per
@@ -70,10 +77,10 @@ object StreamPipeline {
   private[graft] def mergedTargetRead(spark: SparkSession, targetDir: String)
       : org.apache.spark.sql.DataFrameReader = {
     val dirs = bucketDirs(targetDir)
-    graft.store.SnapshotStore.mergedFooterSchema(spark, dirs) match {
+    SnapshotStore.mergedFooterSchema(spark, dirs) match {
       case Some(s) => spark.read.schema(s.add(BucketCol,
         org.apache.spark.sql.types.IntegerType, nullable = true))
-      case None => graft.store.SnapshotStore.inferenceFallback(spark, Seq(targetDir))
+      case None => SnapshotStore.inferenceFallback(spark, Seq(targetDir))
     }
   }
 
@@ -185,33 +192,42 @@ object StreamPipeline {
     if (n == d.numBuckets) d else delta(d.rows.drop(BucketCol), keys, n)
   }
 
-  /** [[upsertBatch]] over a precomputed delta. */
+  /** [[upsertBatch]] over a precomputed delta. The first batch is
+    * deduped too — one micro-batch can carry several versions of the
+    * same key (e.g. multiple staged files at once), and a key whose
+    * winning version is a tombstone never materializes.
+    */
   private[graft] def upsertDelta(d: BatchDelta, targetDir: String,
                                  keys: Seq[String], orderBy: Seq[Column],
                                  numBuckets: Int,
-                                 deleteCol: Option[String]): Unit = {
-    if (d.touched.isEmpty) return // empty micro-batch: nothing to merge
+                                 deleteCol: Option[String]): Unit =
+    fold(d, targetDir, keys, numBuckets)(
+      Scd1.latestByKey(_, keys, orderBy, deleteCol),
+      Scd1.merge(_, _, keys, orderBy, deleteCol))
+
+  /** The one fold both merge targets share: route `d` to the target's
+    * layout, then either create the target from `first(rows)`, or
+    * `merge` the rows into a pruned read of ONLY the touched buckets
+    * and swap exactly those buckets in ([[writeAffected]]). A target
+    * without a bucket dir holds no row (not created yet, or every key
+    * deleted), so the batch alone makes it: there is no footer to read
+    * a schema from. An empty micro-batch touches nothing and does
+    * nothing.
+    */
+  private def fold(d: BatchDelta, targetDir: String, keys: Seq[String], numBuckets: Int)(
+      first: DataFrame => DataFrame, merge: (DataFrame, DataFrame) => DataFrame): Unit = {
+    if (d.touched.isEmpty) return
     val b = routed(d, targetDir, keys, numBuckets)
-    if (!Files.exists(Paths.get(targetDir))) {
-      // dedup within the batch too — one micro-batch can carry several
-      // versions of the same key (e.g. multiple staged files at once);
-      // a key whose winning version is a tombstone never materializes
-      // (same tie order as every later merge: Scd1.latestWithDeletes)
-      deleteCol.fold(Scd1.latestByKey(b.rows, keys, orderBy))(c =>
-          Scd1.latestWithDeletes(b.rows, keys, orderBy, c))
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(targetDir)
-      writeLayoutMarker(targetDir, b.numBuckets)
-    } else {
-      recoverSwaps(targetDir)
+    recoverSwaps(targetDir)
+    if (bucketDirs(targetDir).isEmpty) createTarget(first(b.rows), targetDir, b.numBuckets)
+    else {
       // union schema across additive evolution from one driver-side
       // footer per bucket dir (each dir is one job's write — one
       // schema), instead of a distributed mergeSchema inference job
       // per micro-batch
       val pruned = mergedTargetRead(b.rows.sparkSession, targetDir).parquet(targetDir)
         .where(col(BucketCol).isin(b.touched: _*))
-      val merged = deleteCol.fold(Scd1.merge(pruned, b.rows, keys, orderBy))(c =>
-        Scd1.mergeWithDeletes(pruned, b.rows, keys, orderBy, c))
-      writeAffected(merged, targetDir, b.touched)
+      writeAffected(merge(pruned, b.rows), targetDir, b.touched)
     }
   }
 
@@ -340,22 +356,10 @@ object StreamPipeline {
   private[graft] def scd2ApplyDelta(d: BatchDelta, targetDir: String,
                                     keys: Seq[String], ts: String, tiebreak: String,
                                     numBuckets: Int,
-                                    deleteCol: Option[String]): Unit = {
-    if (d.touched.isEmpty) return // empty micro-batch: nothing to fold
-    val b = routed(d, targetDir, keys, numBuckets)
-    if (!Files.exists(Paths.get(targetDir))) {
-      val hist = deleteCol.fold(Scd2.buildHistory(b.rows, keys, ts, tiebreak))(c =>
-        Scd2.buildHistoryWithDeletes(b.rows, keys, ts, tiebreak, c))
-      hist.write.mode("overwrite").partitionBy(BucketCol).parquet(targetDir)
-      writeLayoutMarker(targetDir, b.numBuckets)
-    } else {
-      recoverSwaps(targetDir)
-      val pruned = mergedTargetRead(b.rows.sparkSession, targetDir).parquet(targetDir)
-        .where(col(BucketCol).isin(b.touched: _*))
-      writeAffected(Scd2.applyDelta(pruned, b.rows, keys, ts, tiebreak, deleteCol),
-        targetDir, b.touched)
-    }
-  }
+                                    deleteCol: Option[String]): Unit =
+    fold(d, targetDir, keys, numBuckets)(
+      Scd2.buildHistory(_, keys, ts, tiebreak, deleteCol),
+      Scd2.applyDelta(_, _, keys, ts, tiebreak, deleteCol))
 
   /** Watermarked per-key session windows — the reference's "real-time
     * user activity" shape (login_audit sessions, `/root/reference/with
@@ -415,10 +419,6 @@ object StreamPipeline {
   /** A keyed change record emitted by [[changeLog]]. */
   final case class KeyChange(key: Long, action: String, old_value: String, new_value: String)
 
-  /** Standard-stream analog: stateful per-key change tracking. Emits
-    * ('I', null, v) the first time a key appears and ('U', prev, v) on
-    * every subsequent change; unchanged updates emit nothing.
-    */
   /** The I/U/D emission rule both change trackers share: what (if
     * anything) a transition from `cur` to `next` emits. `None` is the
     * deleted/absent state.
@@ -668,25 +668,14 @@ object StreamPipeline {
       }
   }
 
+  /** Standard-stream analog: stateful per-key change tracking. Emits
+    * ('I', null, v) the first time a key appears and ('U', prev, v) on
+    * every subsequent change; unchanged updates emit nothing. The
+    * delete-free case of [[changeLogCdc]].
+    */
   def changeLog(updates: Dataset[(Long, String)]): Dataset[KeyChange] = {
     val spark = updates.sparkSession
     import spark.implicits._
-    updates.groupByKey(_._1)
-      .flatMapGroupsWithState[String, KeyChange](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, rows, state: GroupState[String]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[KeyChange]
-          var cur = state.getOption
-          rows.foreach { case (_, v) =>
-            cur match {
-              case None => out += KeyChange(key, "I", null, v)
-              case Some(prev) if prev != v => out += KeyChange(key, "U", prev, v)
-              case _ => ()
-            }
-            cur = Some(v)
-          }
-          cur.foreach(state.update)
-          out.iterator
-      }
+    changeLogCdc(updates.map { case (k, v) => (k, Some(v): Option[String]) })
   }
 }

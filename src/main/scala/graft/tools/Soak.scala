@@ -335,7 +335,7 @@ object Soak {
       .partitionBy("b").orderBy("o_orderkey")
     val perBucket: Map[Int, Array[Long]] = spark.table("soak_orders")
       .select(col("o_orderkey"),
-        pmod(hash(col("o_orderkey")), lit(occNb)).as("b"))
+        SnapshotStore.bucketColumn(Seq(col("o_orderkey")), occNb).as("b"))
       .where(col("b") < nWriters)
       .withColumn("rn", row_number().over(w)).where(col("rn") <= 200)
       .select(col("b"), col("o_orderkey"))

@@ -90,7 +90,7 @@ object SoakOcc {
         .partitionBy("b").orderBy("o_orderkey")
       val perBucket: Map[Int, Array[Long]] = corpus
         .select(col("o_orderkey"),
-          pmod(hash(col("o_orderkey")), lit(nb)).as("b"))
+          SnapshotStore.bucketColumn(Seq(col("o_orderkey")), nb).as("b"))
         .where(col("b") < nWriters)
         .withColumn("rn", row_number().over(w)).where(col("rn") <= 200)
         .select(col("b"), col("o_orderkey"))

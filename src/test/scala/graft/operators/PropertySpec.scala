@@ -53,14 +53,14 @@ class PropertySpec extends SparkSpec {
       val events = raw.distinctBy(_._2)
       // split into 3 ordered batches by version id (arbitrary but fixed)
       val batches = events.sortBy(_._2).grouped((events.size + 2) / 3).toList
-      // Spark side: fold batches through mergeWithDeletes
+      // Spark side: fold batches through merge with deleteCol
       val del = "_del"
       def frame(b: Seq[(Long, Long, Int, String, Boolean)]) =
         b.toDF("k", "id", "t", "v", del)
       val empty = frame(Nil)
       val sparkState = batches.foldLeft(empty) { (base, b) =>
-        Scd1.mergeWithDeletes(base.withColumn(del, lit(false)), frame(b),
-          Seq("k"), Seq(col("t").desc, col("id").desc), del)
+        Scd1.merge(base.withColumn(del, lit(false)), frame(b),
+          Seq("k"), Seq(col("t").desc, col("id").desc), Some(del))
       }.select("k", "id").as[(Long, Long)].collect().toMap
       // naive oracle: per key, replay batches in order; within a batch
       // the winner is max by (t, id) with tombstones beating live rows

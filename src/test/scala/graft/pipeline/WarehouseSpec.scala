@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -201,6 +204,58 @@ class WarehouseSpec extends SparkSpec {
       .select($"eff_end_ts".cast("string")).as[String].head()
     assert(closed == "2024-02-01 00:00:00")
     assert(graft.operators.Scd2.currentRows(dim, Some("_graft_deleted")).count() == 0)
+  }
+
+  test("a fresh-checkpoint catchup after runBatch stores each quarantined version once") {
+    val root = Files.createTempDirectory("graft_whq").toString
+    val (wh, quarantine) = (s"$root/wh", s"$root/wh/quarantine/item")
+    val cfg = Warehouse.Config(entities = Seq(
+      Warehouse.Entity("item", "csv", s"$root/stage/item",
+        Seq("item_id", "qty", "updated_at", "rec_id"),
+        Seq("item_id" -> "bigint", "qty" -> "int",
+          "updated_at" -> "timestamp", "rec_id" -> "bigint"),
+        Seq("item_id"), "updated_at", "rec_id", scd2 = true,
+        expectations = Seq(Expectations.Expectation(
+          "qty_pos", col("qty") > 0, Expectations.Quarantine)))))
+    val reported = mutable.Buffer.empty[Long]
+    val collect = (_: String, m: Map[String, Long]) => { reported += m("qty_pos"); () }
+    def incremental(ckpt: String): Unit =
+      Warehouse.runIncremental(spark, cfg, wh, s"$root/$ckpt", numBuckets = 4, collect)
+        .foreach(q => try q.awaitTermination() finally q.stop())
+    def stored: Seq[(Long, Long)] = spark.read.parquet(quarantine)
+      .select("item_id", "rec_id").as[(Long, Long)].collect().toSeq.sorted
+    def files: Set[String] = Files.list(Paths.get(quarantine)).iterator.asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
+
+    write(s"$root/stage/item/a.csv",
+      """item_id,qty,updated_at,rec_id
+        |1,3,2024-01-01 00:00:00,11
+        |2,0,2024-01-01 00:00:00,12
+        |3,-1,2024-01-01 00:00:00,13
+        |2,5,2024-02-01 00:00:00,14
+        |""".stripMargin)
+    Warehouse.runBatch(spark, cfg, wh, numBuckets = 4, onExpectations = collect)
+    // a fresh checkpoint re-reads a.csv: its violators are validated and
+    // reported again, but not stored a second time
+    incremental("ckpt")
+    assert(stored == Seq((2L, 12L), (3L, 13L)))
+    assert(reported.toSeq == Seq(2L, 2L))
+
+    // a batch without violators writes nothing to the quarantine layer
+    val before = files
+    write(s"$root/stage/item/b.csv", "item_id,qty,updated_at,rec_id\n4,2,2024-01-01 00:00:00,15\n")
+    incremental("ckpt")
+    assert(files == before)
+    assert(reported.toSeq == Seq(2L, 2L, 0L))
+
+    // another fresh checkpoint over a.csv, b.csv and a new violator
+    // stores only the new one
+    write(s"$root/stage/item/c.csv", "item_id,qty,updated_at,rec_id\n5,0,2024-01-01 00:00:00,16\n")
+    incremental("ckpt2")
+    assert(stored == Seq((2L, 12L), (3L, 13L), (5L, 16L)))
+    assert(reported.toSeq == Seq(2L, 2L, 0L, 3L))
+    assert(spark.read.parquet(s"$wh/clean/item").select("item_id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 2L, 4L))
   }
 
   test("maintain compacts and vacuums snapshot tables (the cron-TASK housekeeping analog)") {

@@ -217,6 +217,24 @@ class StreamPipelineSpec extends SparkSpec {
     assert(out2 == Set((kA, 1L, false), (kA, 3L, true), (kB, 2L, true)))
   }
 
+  test("upsertBatch after a batch that deleted every key merges into the emptied target") {
+    val target = Files.createTempDirectory("graft_emptied").toString + "/t"
+    def batch(rows: (Long, String, Long, Boolean)*) = rows.toDF("k", "v", "ts", "_del")
+    def upsert(rows: (Long, String, Long, Boolean)*): Set[(Long, String)] = {
+      StreamPipeline.upsertBatch(batch(rows: _*), target, Seq("k"), Seq(col("ts").desc),
+        numBuckets = 4, deleteCol = Some("_del"))
+      val buckets = new java.io.File(target).list().filter(_.startsWith(s"${StreamPipeline.BucketCol}="))
+      if (buckets.isEmpty) Set.empty
+      else spark.read.parquet(target).select("k", "v").as[(Long, String)].collect().toSet
+    }
+    // the first batch's only key resolves to a tombstone: no bucket dir
+    assert(upsert((1L, "a", 1L, false), (1L, null, 2L, true)).isEmpty)
+    assert(upsert((2L, "b", 1L, false)) == Set((2L, "b")))
+    // every key deleted again, then a re-insert
+    assert(upsert((2L, null, 2L, true)).isEmpty)
+    assert(upsert((2L, "c", 3L, false), (3L, "d", 1L, false)) == Set((2L, "c"), (3L, "d")))
+  }
+
   test("changeLogCdc emits I/U/D; deleted keys clear state so re-insert is a fresh I") {
     val in = MemoryStream[(Long, Option[String])]
     val q = StreamPipeline.changeLogCdc(in.toDS())
