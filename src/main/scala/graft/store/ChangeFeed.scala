@@ -233,8 +233,7 @@ object ChangeFeed {
                        v: Long): Option[DataFrame] = {
     val changed: Set[Int] = mOld match {
       case None => mNew.buckets.keySet // initial load: everything is new
-      case Some(o) => (o.buckets.keySet ++ mNew.buckets.keySet)
-        .filter(b => o.buckets.get(b) != mNew.buckets.get(b))
+      case Some(o) => SnapshotStore.changedBuckets(o, mNew)
     }
     if (changed.isEmpty) return None
     val newRaw = SnapshotStore.readBuckets(spark, root, mNew, changed)

@@ -87,10 +87,13 @@ object GraftMerge {
       require(clauses.nonEmpty,
         "merge needs at least one WHEN clause (whenMatchedUpdate / " +
           "whenMatchedDelete / whenNotMatchedInsert)")
-      val exists = SnapshotStore.latestVersion(spark, root).isDefined
-      require(exists, s"no committed graft table at $root — merge needs a target")
-      val persisted = SnapshotStore.readManifest(spark, root,
-        SnapshotStore.latestVersion(spark, root).get).keys
+      val base = SnapshotStore.latestVersion(spark, root)
+      require(base.isDefined, s"no committed graft table at $root — merge needs a target")
+      // ONE manifest read plans the statement: its keys, its bucket
+      // layout for the census below, and the version the commit's
+      // epoch guard measures from
+      val planned = SnapshotStore.readManifest(spark, root, base.get)
+      val persisted = planned.keys
       val keys =
         if (persisted.nonEmpty) {
           require(explicitKeys.isEmpty || explicitKeys == persisted,
@@ -116,11 +119,8 @@ object GraftMerge {
       // its own job (passed down as deltaBucketsHint). Equal keys hash
       // to one bucket, so a per-bucket dup is exactly a global dup;
       // ≤ numBuckets rows reach the driver.
-      val numBuckets = SnapshotStore.readManifest(spark, root,
-        SnapshotStore.latestVersion(spark, root).getOrElse(
-          throw new IllegalStateException(s"no table at $root"))).numBuckets
       val census = SnapshotStore.withBucket(
-          src.select(keys.map(col): _*), keys, numBuckets)
+          src.select(keys.map(col): _*), keys, planned.numBuckets)
         .groupBy((col(SnapshotStore.BucketCol) +: keys.map(col)): _*)
         .agg(count(lit(1)).as("__graft_n"))
         .groupBy(col(SnapshotStore.BucketCol))
@@ -175,7 +175,8 @@ object GraftMerge {
       SnapshotStore.commitDelta(spark, root,
         src.select(targetCols.map(src(_)) ++
           src.columns.filterNot(targetCols.contains).map(src(_)): _*),
-        keys, mergeFn, txn = txn, deltaBucketsHint = Some(srcBuckets))
+        keys, mergeFn, txn = txn, plannedVersion = base,
+        deltaBucketsHint = Some(SnapshotStore.BucketsHint(planned.numBuckets, srcBuckets)))
     }
   }
 }

@@ -356,6 +356,12 @@ object SnapshotStore {
                                tombstones: Seq[String] = Nil,
                                rows: Option[Long] = None)
 
+  /** The `buckets` a delta hashes into under a `numBuckets` layout —
+    * what a caller's census hands [[commitDelta]] as its
+    * `deltaBucketsHint`.
+    */
+  final case class BucketsHint(numBuckets: Int, buckets: Set[Int])
+
   /** @param statsCols declared data-skipping columns as (name, tag);
     *   tag is `num` (any numeric), `ts` (timestamp, stored as epoch
     *   micros) or `str` (lexicographic)
@@ -1097,10 +1103,8 @@ object SnapshotStore {
     // lost-generation guard then surfaces the documented conflict.
     if (epochCrossedSince(spark, root, baseM.version, latest)) return None
     val winners = readManifest(spark, root, latest)
-    val winnerTouched = (baseM.buckets.keySet ++ winners.buckets.keySet)
-      .filter(b => baseM.buckets.get(b) != winners.buckets.get(b))
     if (winners.numBuckets != baseM.numBuckets ||
-        winnerTouched.intersect(touched).nonEmpty) return None
+        changedBuckets(baseM, winners).intersect(touched).nonEmpty) return None
     // rebase rides on ATOMIC directory rename twice over: the rename
     // must either fully move the attempt or fully fail (a racing
     // vacuum taking the dir makes it fail — never half-move), and the
@@ -1120,54 +1124,195 @@ object SnapshotStore {
   private def rebased(rel: String, v: Long, newV: Long, token: String): String =
     attemptDir(newV, token) + rel.stripPrefix(attemptDir(v, token))
 
-  /** THE lost-race commit protocol, shared by every delta-shaped
-    * commit: attempt the manifest at `v0`; on loss, rebase across
-    * disjoint winners ([[tryRebase]]) as long as `mayRetry` reports
-    * remaining budget — consumed via `spendRetry` ONLY when a rebase
-    * actually happens (a failed rebase falls straight through to the
-    * caller's recompute, which spends its own attempt; double-charging
-    * here would halve resilience under sustained overlap) — carrying
-    * caller state `S` (the written entries / sidecar dirs) through
-    * `rehome` on each rename and rebuilding the manifest via `nextOf`
-    * against each new winner. Returns Some(version) when committed
-    * (or when a same-writer txn redelivery is found already applied —
-    * attempt data discarded); None when the caller must recompute
-    * against the new base (the attempt dir is already deleted here).
+  /** Buckets whose entry differs between two manifests of one table —
+    * what the commits between them touched (re-pointed, rewritten,
+    * emptied or newly filled).
+    */
+  private[store] def changedBuckets(a: Manifest, b: Manifest): Set[Int] =
+    (a.buckets.keySet ++ b.buckets.keySet).filter(k => a.buckets.get(k) != b.buckets.get(k))
+
+  /** Whether `m` already records `txn`'s batch (or a later one) for its
+    * writer: the commit is a redelivery and must not apply twice.
+    */
+  private def applied(txn: Option[(String, Long)], m: Manifest): Boolean =
+    txn.exists { case (id, batchId) => m.txns.get(id).exists(_ >= batchId) }
+
+  /** One lap of [[occ]]: the head version `base` (last of the listing
+    * `vs`) with its manifest `m`, the version `v` this lap tries to
+    * publish, and its private data dir `dir` (`v=<v>-<token>`).
+    * `firstBase` is the head the first lap saw. `mayRetry`/`spendRetry`
+    * are the loop's budget, which a rebase inside the lap spends too.
+    */
+  private final class Attempt(val vs: Seq[Long], val m: Manifest, val firstBase: Long,
+                              val mayRetry: () => Boolean, val spendRetry: () => Unit) {
+    val base: Long = vs.last
+    val v: Long = base + 1
+    val token: String = newToken()
+    val dir: String = attemptDir(v, token)
+  }
+
+  /** The committed versions and the head's manifest; refuses a
+    * missing table.
+    */
+  private def head(spark: SparkSession, root: String): (Seq[Long], Manifest) = {
+    val vs = versions(spark, root)
+    if (vs.isEmpty) throw new IllegalStateException(s"no table at $root — call init first")
+    (vs, readManifest(spark, root, vs.last))
+  }
+
+  /** THE optimistic commit every write verb runs: read the head and its
+    * manifest, refuse a missing table, skip a redelivered `txn`, then
+    * run the verb's `lap` against that head. A lap returns the version
+    * it committed (or the head it found nothing to do on), or None
+    * after losing the race and withdrawing, and the loop retries on the
+    * new head. `maxAttempts` laps (rebases included) are the budget;
+    * exhausting it throws `exhausted`, by default the
+    * "`op` lost N consecutive commit races" failure.
+    */
+  private def occ(spark: SparkSession, root: String, op: String,
+                  txn: Option[(String, Long)] = None, maxAttempts: Int = 5,
+                  exhausted: Option[Int => Exception] = None)(
+                  lap: Attempt => Option[Long]): Long = {
+    var attempt = 0
+    var firstBase = -1L
+    while (attempt < maxAttempts) {
+      attempt += 1
+      val (vs, m) = head(spark, root)
+      if (applied(txn, m)) return vs.last
+      if (firstBase < 0) firstBase = vs.last
+      val done = lap(new Attempt(vs, m, firstBase, () => attempt < maxAttempts, () => attempt += 1))
+      if (done.nonEmpty) return done.get
+    }
+    throw exhausted.fold[Exception](new IllegalStateException(
+      s"$op lost $maxAttempts consecutive commit races at $root"))(_(maxAttempts))
+  }
+
+  /** Publish-or-withdraw, the step every commit ends in: `write` (the
+    * commit's [[writeManifestAtomic]]) either wins, and the committed
+    * manifest is cached and maybe checkpointed, or loses, and
+    * `withdraw` removes what the attempt left behind.
+    */
+  private def publish(spark: SparkSession, root: String, withdraw: => Unit)(
+                      write: => Option[Manifest]): Option[Manifest] = {
+    val won = write
+    won.fold(withdraw)(maybeCheckpoint(spark, root, _))
+    won
+  }
+
+  /** [[publish]] for a commit that may swap the table's contracts (a
+    * REPLACE, a restore across an epoch): the write-ahead `bundle` is
+    * published as the pending intent `_pending_contracts-<v>-<token>`
+    * before the `epoch:` manifest, and a win executes the swap from it
+    * ([[executeContractSwap]], after [[replaceSwapHook]]) before the
+    * intent and the `scratch` paths are cleared; a loss clears them
+    * right away. `write` must commit with `commitToken = token`, which
+    * binds the manifest to its bundle for roll-forward. Without a
+    * bundle this is plain [[publish]].
+    */
+  private def publishSwap(spark: SparkSession, root: String, v: Long, token: String,
+                          bundle: Option[ContractBundle], scratch: Seq[Path] = Nil)(
+                          write: => Option[Manifest]): Option[Manifest] = {
+    val fs = fileSystem(spark, root)
+    val pend = new Path(root, pendingContractsName(v, token))
+    def clear(): Unit = if (bundle.nonEmpty) {
+      fs.delete(pend, false)
+      scratch.foreach(fs.delete(_, true))
+    }
+    bundle.foreach(b => publishSmallFile(spark, root, pend.getName, bundleText(b)))
+    val won = publish(spark, root, clear())(write)
+    if (won.nonEmpty) bundle.foreach { b =>
+      replaceSwapHook(root, v)
+      executeContractSwap(spark, root, b)
+      clear()
+    }
+    won
+  }
+
+  /** Stale-snapshot refusal for a write computed by a scan of
+    * `scanVersion`: a commit since then that changed the bucket layout
+    * or any of `buckets` invalidates it, and `conflict` raises the
+    * verb's documented [[java.util.ConcurrentModificationException]]
+    * with the reason.
+    */
+  private def refuseStale(spark: SparkSession, root: String, scanVersion: Option[Long],
+                          m: Manifest, buckets: Set[Int])(conflict: String => Nothing): Unit =
+    scanVersion.filter(_ != m.version).foreach { sv =>
+      val scanM = readManifest(spark, root, sv)
+      if (scanM.numBuckets != m.numBuckets) conflict("bucket layout changed")
+      val hit = changedBuckets(scanM, m).intersect(buckets)
+      if (hit.nonEmpty) conflict(s"buckets ${hit.toSeq.sorted.mkString(",")} changed")
+    }
+
+  /** LOST-GENERATION guard: a REPLACE TABLE (or cross-epoch restore)
+    * that landed after this write was planned displaced the table's
+    * whole contract epoch — its schema, key layout, and contents.
+    * Committing the old-shape write anyway would pollute the fresh
+    * epoch with rows of the displaced shape (a 4-column footer union
+    * under time travel — found live by the contract-op chaos soak).
+    * Two detectors, both surfacing the documented concurrent-
+    * modification conflict: the manifest's persisted merge keys moved
+    * away from the caller's (keys-changing REPLACE), or an
+    * epoch-flagged version exists between the version the write was
+    * planned against (`plannedVersion`, else the loop's first base)
+    * and the current base. Zero cost on the uncontended path (base ==
+    * planned → no scan). `what` names the write in the message
+    * ("commit", "delete") and `planned` the thing that was planned.
+    */
+  private def refuseLostGeneration(spark: SparkSession, root: String, keys: Seq[String],
+                                   a: Attempt, plannedVersion: Option[Long],
+                                   what: String, planned: String): Unit = {
+    if (keys.nonEmpty && a.m.keys.nonEmpty && keys != a.m.keys)
+      throw new java.util.ConcurrentModificationException(
+        s"$what at $root planned for merge keys (${keys.mkString(", ")}) " +
+          s"but the table now declares (${a.m.keys.mkString(", ")}) — it was " +
+          "REPLACED concurrently; re-run the statement")
+    val sinceV = plannedVersion.fold(a.firstBase)(math.min(_, a.firstBase))
+    if (a.base > sinceV && epochCrossedSince(spark, root, sinceV, a.base))
+      throw new java.util.ConcurrentModificationException(
+        s"$what at $root crosses a contract-epoch boundary: the table " +
+          s"was REPLACED after this $planned was planned (v$sinceV) — " +
+          "re-run the statement")
+  }
+
+  /** The lost-race step of every delta-shaped lap: publish `a`'s
+    * manifest; on loss, rebase across disjoint winners ([[tryRebase]])
+    * while the loop's budget lasts — spent ONLY when a rebase actually
+    * happens (a failed rebase falls straight through to the lap's
+    * recompute, which spends its own lap; double-charging here would
+    * halve resilience under sustained overlap) — carrying caller state
+    * `S` (the written entries / sidecar dirs) through `rehome` on each
+    * rename and rebuilding the manifest via `nextOf` against each new
+    * winner. Returns Some(version) when committed (or when a
+    * same-writer txn redelivery is found already applied — attempt data
+    * discarded); None when the lap must recompute against the new base
+    * (the attempt dir is already deleted here).
     */
   private def commitOrRebase[S](spark: SparkSession, fs: FileSystem, root: String,
-                                baseM: Manifest, touched: Set[Int],
-                                v0: Long, token: String,
+                                a: Attempt, touched: Set[Int],
                                 txn: Option[(String, Long)],
-                                mayRetry: () => Boolean,
-                                spendRetry: () => Unit,
                                 state0: S,
                                 nextOf: (Manifest, S) => Map[Int, BucketEntry],
                                 rehome: (S, Long, Long) => S,
                                 keys: Seq[String] = Nil): Option[Long] = {
-    var curV = v0
+    val baseM = a.m
+    var curV = a.v
     var st = state0
     var winnersM = baseM
     while (true) {
       val next = nextOf(winnersM, st)
-      val txns = winnersM.txns ++ txn
-      writeManifestAtomic(fs, root, curV, baseM.numBuckets, baseM.statsCols,
-          txns, next, base = Some(winnersM), keys = keys) match {
-        case Some(cm) =>
-          maybeCheckpoint(spark, root, cm)
-          return Some(curV)
-        case None => ()
-      }
+      val committed = publish(spark, root, ())(writeManifestAtomic(fs, root, curV,
+        baseM.numBuckets, baseM.statsCols, winnersM.txns ++ txn, next,
+        base = Some(winnersM), keys = keys))
+      if (committed.nonEmpty) return Some(curV)
       val rebase =
-        if (mayRetry()) tryRebase(spark, fs, root, baseM, touched, curV, token)
+        if (a.mayRetry()) tryRebase(spark, fs, root, baseM, touched, curV, a.token)
         else None
       rebase match {
         case Some((newV, winners)) =>
-          spendRetry()
-          txn.foreach { case (id, bid) => // a same-writer redelivery won meanwhile
-            if (winners.txns.get(id).exists(_ >= bid)) {
-              fs.delete(new Path(root, attemptDir(newV, token)), true)
-              return Some(winners.version)
-            }
+          a.spendRetry()
+          if (applied(txn, winners)) { // a same-writer redelivery won meanwhile
+            fs.delete(new Path(root, attemptDir(newV, a.token)), true)
+            return Some(winners.version)
           }
           st = rehome(st, curV, newV)
           // post-rename re-verify: a vacuum that started deleting the
@@ -1178,9 +1323,9 @@ object SnapshotStore {
           // all-but-unreachable, the check catches the residue
           val expected = nextOf(winners, st).values
             .flatMap(e => e.dir +: e.tombstones)
-            .filter(_.startsWith(attemptDir(newV, token)))
+            .filter(_.startsWith(attemptDir(newV, a.token)))
           if (!expected.forall(d => fs.exists(dataPath(root, d)))) {
-            fs.delete(new Path(root, attemptDir(newV, token)), true)
+            fs.delete(new Path(root, attemptDir(newV, a.token)), true)
             return None
           }
           winnersM = winners
@@ -1188,8 +1333,8 @@ object SnapshotStore {
         case None =>
           // overlapping winners (or the rebase rename lost to vacuum,
           // or budget exhausted): discard OUR OWN attempt dir; the
-          // caller recomputes on the new base
-          fs.delete(new Path(root, attemptDir(curV, token)), true)
+          // lap recomputes on the new base
+          fs.delete(new Path(root, attemptDir(curV, a.token)), true)
           return None
       }
     }
@@ -1793,10 +1938,9 @@ object SnapshotStore {
     * reported as done. Returns the checkpointed version.
     */
   def checkpoint(spark: SparkSession, root: String): Long = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalStateException(s"no table at $root — call init first"))
-    writeCheckpoint(spark, root, readManifest(spark, root, v))
-    v
+    val (_, m) = head(spark, root)
+    writeCheckpoint(spark, root, m)
+    m.version
   }
 
   /** The checkpointed state at exactly `v`, if a complete checkpoint
@@ -2666,16 +2810,11 @@ object SnapshotStore {
     val token = newToken()
     val written = writeVersionData(df, root, 0L, token, keys, numBuckets, tagged, fs,
       failRules)
-    val txns = txn.map { case (id, b) => id -> b }.toMap
-    writeManifestAtomic(fs, root, 0L, numBuckets, tagged, txns, written,
-        keys = keys) match {
-      case Some(cm) => maybeCheckpoint(spark, root, cm)
-      case None =>
-        // lost a concurrent create: clean up our own attempt dir (the
-        // winner's data lives under its own token) before failing
-        fs.delete(new Path(root, attemptDir(0L, token)), true)
-        throw new IllegalStateException(s"concurrent init at $root")
-    }
+    // a lost concurrent create cleans up our own attempt dir (the
+    // winner's data lives under its own token) before failing
+    publish(spark, root, fs.delete(new Path(root, attemptDir(0L, token)), true): Unit)(
+      writeManifestAtomic(fs, root, 0L, numBuckets, tagged, txn.toMap, written, keys = keys))
+      .getOrElse(throw new IllegalStateException(s"concurrent init at $root"))
     0L
   }
 
@@ -2891,103 +3030,57 @@ object SnapshotStore {
         }
       }
     }
-    if (!fs.exists(vdir)) Map.empty
-    else {
-      val bucketNames = fs.listStatus(vdir).toSeq
-        .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
-      // post-write bookkeeping, minimized per guide §1.2/§2.4:
-      //  - no declared stats: exact per-bucket row counts come from the
-      //    just-written parquet FOOTERS, read on the driver — ZERO Spark
-      //    jobs (the previous count job cost an extra schema-inference
-      //    job too: Spark 4's ParquetUtils.inferSchema launches
-      //    mergeSchemasInParallel even for one footer);
-      //  - declared stats: ONE rollup job computes per-bucket/per-file
-      //    min/max AND the row counts together, over an explicit-schema
-      //    read (was: an inference job + a stats job + a count job with
-      //    its own inference job — 4 jobs to 1 per write).
-      val (stats, fstats, counts) =
-        if (bucketNames.isEmpty)
-          (Map.empty[Int, Seq[Option[(String, String)]]],
-           Map.empty[Int, Map[String, Seq[Option[(String, String)]]]],
-           Map.empty[Int, Long])
-        else if (statsCols.isEmpty) {
-          val c = footerBucketRowCounts(df.sparkSession, vdir, bucketNames, fs)
-            .getOrElse(bucketRowCounts(df.sparkSession, vdir.toString))
-          (Map.empty[Int, Seq[Option[(String, String)]]],
-           Map.empty[Int, Map[String, Seq[Option[(String, String)]]]], c)
-        } else {
-          // numeric stats columns: min/max AND row counts straight from
-          // the just-written footers — ZERO jobs (r19, guide §1.2/§6:
-          // the rollup job re-read every written byte once per commit);
-          // string/timestamp stats keep the rollup job (their manifest
-          // encodings are the job's)
-          footerBucketStats(df.sparkSession, vdir, bucketNames, fs,
-            statsCols, placed.schema).getOrElse {
-            val written = df.sparkSession.read.schema(placed.schema)
-              .parquet(vdir.toString)
-            collectStats(written, statsCols)
-          }
-        }
-      bucketNames.map { name =>
-        val b = name.stripPrefix(s"$BucketCol=").toInt
-        b -> BucketEntry(s"$rel/$name", stats.getOrElse(b, statsCols.map(_ => None)),
-          fstats.getOrElse(b, Map.empty), rows = counts.get(b))
-      }.toMap
-    }
+    writtenEntries(df.sparkSession, root, rel, fs, statsCols, placed.schema)
   }
 
-  /** Exact per-bucket row counts from the attempt dir's parquet footers,
-    * read ON THE DRIVER — the row counts in a committed footer are final
-    * and exact, so this replaces a Spark count job (plus the schema-
-    * inference job Spark 4 runs before it) with O(files) local metadata
-    * reads. None on any I/O surprise → caller falls back to the job.
+  /** The manifest entries of a freshly written attempt dir `rel` (its
+    * `schema` is the written frame's): per bucket that got files, its
+    * dir, exact row count, and the min/max of `statsCols` per bucket
+    * and per file. Bookkeeping minimized per guide §1.2/§2.4: the
+    * just-written parquet FOOTERS, read on the driver, answer it with
+    * ZERO Spark jobs whenever they prove the job's numbers
+    * ([[footerBucketStats]]); otherwise ONE job over an explicit-schema
+    * read (Spark 4's ParquetUtils.inferSchema would launch an
+    * inference job even for one footer) — the stats rollup
+    * ([[collectStats]], which rides the row counts along), or with no
+    * stats columns the count job ([[bucketRowCounts]]).
     */
-  private def footerBucketRowCounts(spark: SparkSession, vdir: Path,
-                                    bucketNames: Seq[String], fs: FileSystem)
-      : Option[Map[Int, Long]] =
-    try {
-      import scala.jdk.CollectionConverters._
-      val hconf = spark.sessionState.newHadoopConf()
-      // list bucket dirs concurrently, then read EVERY file's footer
-      // concurrently (bounded pool) — the per-file serial loop was the
-      // scale hazard the r18 verdict flagged (O(files) driver
-      // round-trips per commit)
-      val perBucket = parFooterIo(bucketNames) { name =>
-        val b = name.stripPrefix(s"$BucketCol=").toInt
-        b -> fs.listStatus(new Path(vdir, name)).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath)
+  private def writtenEntries(spark: SparkSession, root: String, rel: String,
+                             fs: FileSystem, statsCols: Seq[(String, String)],
+                             schema: org.apache.spark.sql.types.StructType)
+      : Map[Int, BucketEntry] = {
+    val vdir = new Path(root, rel)
+    if (!fs.exists(vdir)) return Map.empty
+    val bucketNames = fs.listStatus(vdir).toSeq
+      .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
+    if (bucketNames.isEmpty) return Map.empty
+    val (stats, fstats, counts) =
+      footerBucketStats(spark, vdir, bucketNames, fs, statsCols, schema).getOrElse {
+        if (statsCols.isEmpty) (Map.empty[Int, Seq[Option[(String, String)]]],
+          Map.empty[Int, Map[String, Seq[Option[(String, String)]]]],
+          bucketRowCounts(spark, vdir.toString))
+        else collectStats(spark.read.schema(schema).parquet(vdir.toString), statsCols)
       }
-      val counts = parFooterIo(perBucket.flatMap { case (b, fs0) => fs0.map(b -> _) }) {
-        case (b, path) =>
-          b -> org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            hconf, path,
-            org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-            .getBlocks.asScala.map(_.getRowCount).sum
-      }
-      val byBucket = counts.groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).sum }
-      // a bucket dir with zero data files still gets its 0 row entry
-      Some(perBucket.map { case (b, _) => b -> byBucket.getOrElse(b, 0L) }.toMap)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] footer row-count read failed " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — falling back to a count job")
-        None
-    }
+    bucketNames.map { name =>
+      val b = name.stripPrefix(s"$BucketCol=").toInt
+      b -> BucketEntry(s"$rel/$name", stats.getOrElse(b, statsCols.map(_ => None)),
+        fstats.getOrElse(b, Map.empty), rows = counts.get(b))
+    }.toMap
+  }
 
-  /** Per-bucket AND per-file min/max stats + row counts for declared
-    * NUMERIC stats columns, from the attempt dir's parquet FOOTERS on
-    * the driver — zero Spark jobs (guide §1.2/§6: the stats rollup job
-    * re-read every byte just written; footer column statistics carry
-    * the same min/max for primitive numerics, exactly — parquet only
-    * truncates binary stats, and omits double stats under NaN, which
-    * the bail-outs below catch). Returns None (→ the rollup job) when
-    * any stats column is non-numeric (string/timestamp encodings are
-    * the job's), decimal-backed, missing from a footer, or carries
-    * absent/ambiguous statistics — so the fallback keeps behavior
-    * bit-identical whenever the footer path cannot PROVE the same
-    * numbers.
+  /** Exact per-bucket row counts, plus per-bucket AND per-file
+    * min/max stats for declared INTEGRAL stats columns, from the
+    * attempt dir's parquet FOOTERS on the driver — zero Spark jobs
+    * (guide §1.2/§6: a stats rollup or count job re-reads what was
+    * just written; a committed footer's row counts are final, and its
+    * column statistics carry the same min/max for integral columns,
+    * exactly). Returns None (→ the job) when any stats column is
+    * non-integral (string/timestamp encodings are the job's; a
+    * float/double footer can report -0.0 where the job's min() says
+    * 0.0), missing from a footer, or carries absent statistics, or on
+    * any I/O surprise — so the fallback keeps behavior bit-identical
+    * whenever the footer path cannot PROVE the same numbers. With no
+    * stats columns it answers the row counts alone (and no file stats).
     */
   private def footerBucketStats(spark: SparkSession, vdir: Path,
                                 bucketNames: Seq[String], fs: FileSystem,
@@ -2999,8 +3092,7 @@ object SnapshotStore {
     import org.apache.spark.sql.types._
     val supported = statsCols.forall { case (c, tag) =>
       tag == "num" && (dataSchema.fields.find(_.name == c).map(_.dataType) match {
-        case Some(LongType | IntegerType | ShortType | ByteType |
-                  DoubleType | FloatType) => true
+        case Some(LongType | IntegerType | ShortType | ByteType) => true
         case _ => false
       })
     }
@@ -3008,6 +3100,10 @@ object SnapshotStore {
     try {
       import scala.jdk.CollectionConverters._
       val hconf = spark.sessionState.newHadoopConf()
+      // list bucket dirs concurrently, then read EVERY file's footer
+      // concurrently (bounded pool) — a per-file serial loop was the
+      // scale hazard the r18 verdict flagged (O(files) driver
+      // round-trips per commit)
       val perBucket = parFooterIo(bucketNames) { name =>
         val b = name.stripPrefix(s"$BucketCol=").toInt
         b -> fs.listStatus(new Path(vdir, name)).toSeq
@@ -3054,11 +3150,13 @@ object SnapshotStore {
       val counts = perBucket.map { case (b, _) =>
         b -> byBucket.get(b).fold(0L)(_.map(_._3).sum)
       }.toMap
-      val fileStats = byBucket.map { case (b, fs0) =>
-        b -> fs0.map { case (_, name, _, cs) =>
-          name -> cs.map(_.map { case (mn, mx) => (mn.toString, mx.toString) })
-        }.toMap
-      }
+      val fileStats =
+        if (statsCols.isEmpty) Map.empty[Int, Map[String, Seq[Option[(String, String)]]]]
+        else byBucket.map { case (b, fs0) =>
+          b -> fs0.map { case (_, name, _, cs) =>
+            name -> cs.map(_.map { case (mn, mx) => (mn.toString, mx.toString) })
+          }.toMap
+        }
       // merge per-file extremes under the SAME Comparable ordering the
       // per-file merge used (all files share one primitive type)
       implicit val cmpOrd: Ordering[Comparable[Any]] =
@@ -3074,8 +3172,10 @@ object SnapshotStore {
       Some((bucketStats, fileStats, counts))
     } catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] footer stats read failed " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — falling back to the stats job")
+        val (what, job) = if (statsCols.isEmpty) ("row-count", "a count job")
+          else ("stats", "the stats job")
+        System.err.println(s"[graft] footer $what read failed " +
+          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — falling back to $job")
         None
     }
   }
@@ -3150,6 +3250,16 @@ object SnapshotStore {
     *   violation deletes the attempt dir and throws
     *   [[graft.pipeline.Expectations.FailedExpectationException]]
     *   before a manifest is published — nothing becomes visible
+    * @param plannedVersion the version the caller planned the write
+    *   against; an epoch crossed since then refuses the commit (see
+    *   [[refuseLostGeneration]])
+    * @param deltaBucketsHint the buckets `delta` hashes into, from a
+    *   census the caller already ran (one job saved). The hint names
+    *   the bucket count it was computed under and is used only on a
+    *   manifest with that count; under any other layout (a rebucket
+    *   or a REPLACE in between) this runs its own census, since a
+    *   bucket missing from the set would be rewritten from delta rows
+    *   alone and lose its current rows.
     */
   def commitDelta(spark: SparkSession, root: String, delta: DataFrame,
                   keys: Seq[String],
@@ -3160,60 +3270,19 @@ object SnapshotStore {
                   alsoTouch: Manifest => Set[Int] = _ => Set.empty,
                   recomputeOnOverlap: Boolean = true,
                   plannedVersion: Option[Long] = None,
-                  deltaBucketsHint: Option[Set[Int]] = None): Long = {
+                  deltaBucketsHint: Option[BucketsHint] = None): Long = {
     val fs = fileSystem(spark, root)
-    var attempt = 0
-    var firstBase = -1L
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = latestVersion(spark, root)
-        .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-      val m = readManifest(spark, root, base)
-      txn.foreach { case (id, batchId) =>
-        if (m.txns.get(id).exists(_ >= batchId)) return base // already applied
-      }
-      if (firstBase < 0) firstBase = base
-      // LOST-GENERATION guard: a REPLACE TABLE (or cross-epoch restore)
-      // that landed after this write was planned displaced the table's
-      // whole contract epoch — its schema, key layout, and contents.
-      // Committing the old-shape delta anyway would pollute the fresh
-      // epoch with rows of the displaced shape (a 4-column footer
-      // union under time travel — found live by the contract-op chaos
-      // soak). Two detectors, both surfacing the documented
-      // concurrent-modification conflict: the manifest's persisted
-      // merge keys moved away from the caller's (keys-changing
-      // REPLACE), or an epoch-flagged version exists between the
-      // version the write was planned against (the door's snapshot,
-      // else this loop's first base) and the current base. Zero cost
-      // on the uncontended path (base == planned → no scan).
-      if (keys.nonEmpty && m.keys.nonEmpty && keys != m.keys)
-        throw new java.util.ConcurrentModificationException(
-          s"commit at $root planned for merge keys (${keys.mkString(", ")}) " +
-            s"but the table now declares (${m.keys.mkString(", ")}) — it was " +
-            "REPLACED concurrently; re-run the statement")
-      val sinceV = plannedVersion.fold(firstBase)(math.min(_, firstBase))
-      if (base > sinceV && epochCrossedSince(spark, root, sinceV, base))
-        throw new java.util.ConcurrentModificationException(
-          s"commit at $root crosses a contract-epoch boundary: the table " +
-            s"was REPLACED after this write was planned (v$sinceV) — " +
-            "re-run the statement")
-      val v = base + 1
-      val token = newToken()
-
-      val bucketed = withBucket(delta, keys, m.numBuckets)
+    occ(spark, root, "commitDelta", txn, maxAttempts) { a =>
+      refuseLostGeneration(spark, root, keys, a, plannedVersion, "commit", "write")
+      val m = a.m
       // `alsoTouch` widens the rewrite to buckets the delta does not
       // hash into (filter-scoped overwrite: buckets whose current rows
       // may match the overwrite condition must be rewritten even when
       // no new row lands there) — their current rows flow through the
       // same `merge` and emptied ones drop out of the manifest
-      // `deltaBucketsHint`: a caller that already ran a delta census
-      // (applyRowDelta fuses dup-check + delete buckets + this set into
-      // ONE job) passes the bucket set instead of paying a second
-      // delta-sized job here. First attempt only — a retry re-censuses
-      // under the freshly-read manifest exactly as before (a layout
-      // change between attempts must not see a stale set).
-      val touched = (if (attempt == 1) deltaBucketsHint else None)
-        .getOrElse(bucketed.select(BucketCol).distinct()
+      val touched = deltaBucketsHint.filter(_.numBuckets == m.numBuckets)
+        .map(_.buckets)
+        .getOrElse(withBucket(delta, keys, m.numBuckets).select(BucketCol).distinct()
           .collect().map(_.getInt(0)).toSet) ++ // ≤ numBuckets ids — metadata-sized
         alsoTouch(m)
       val current = readBuckets(spark, root, m, touched)
@@ -3221,7 +3290,7 @@ object SnapshotStore {
         if (current.schema.isEmpty) delta.limit(0) else current
       val merged = merge(currentAligned, delta)
 
-      val written = writeVersionData(merged, root, v, token, keys, m.numBuckets,
+      val written = writeVersionData(merged, root, a.v, a.token, keys, m.numBuckets,
         m.statsCols, fs, failRules)
       // touched buckets now live at this commit; emptied buckets drop
       // out; the rest keep pointing at their existing files (and
@@ -3231,30 +3300,24 @@ object SnapshotStore {
       // writers path: entity-parallel pipelines sharing a table no
       // longer serialize through each other's work, only through the
       // metadata arbiter).
-      commitOrRebase[Map[Int, BucketEntry]](spark, fs, root, m, touched, v, token,
+      val committed = commitOrRebase[Map[Int, BucketEntry]](spark, fs, root, a, touched,
         txn,
-        mayRetry = () => attempt < maxAttempts,
-        spendRetry = () => attempt += 1,
         state0 = written,
         nextOf = (winners, w) => (winners.buckets -- touched) ++ w,
         rehome = (w, curV, newV) => w.map { case (b, e) =>
-          b -> e.copy(dir = rebased(e.dir, curV, newV, token))
+          b -> e.copy(dir = rebased(e.dir, curV, newV, a.token))
         },
-        keys = keys) match {
-        case Some(committed) => return committed
-        case None =>
-          // re-merge on the new base — unless the caller's merge was
-          // computed from a snapshot it cannot re-derive (row-level
-          // DML), in which case an overlapping winner must surface as
-          // a conflict, never a silent last-writer-wins
-          if (!recomputeOnOverlap)
-            throw new java.util.ConcurrentModificationException(
-              s"commit at $root lost to an overlapping concurrent commit " +
-                "and this delta must not be re-merged — re-run the statement")
-      }
+        keys = keys)
+      // re-merge on the new base — unless the caller's merge was
+      // computed from a snapshot it cannot re-derive (row-level DML),
+      // in which case an overlapping winner must surface as a
+      // conflict, never a silent last-writer-wins
+      if (committed.isEmpty && !recomputeOnOverlap)
+        throw new java.util.ConcurrentModificationException(
+          s"commit at $root lost to an overlapping concurrent commit " +
+            "and this delta must not be re-merged — re-run the statement")
+      committed
     }
-    throw new IllegalStateException(
-      s"commitDelta lost $maxAttempts consecutive commit races at $root")
   }
 
   /** Replace the ENTIRE table state with `df` as one new version (the
@@ -3265,32 +3328,17 @@ object SnapshotStore {
     * by nature, unlike the keyed deltas.
     */
   def replaceAll(spark: SparkSession, root: String, df: DataFrame,
-                 keys: Seq[String], maxAttempts: Int = 5,
+                 keys: Seq[String],
                  txn: Option[(String, Long)] = None,
                  failRules: Seq[graft.pipeline.Expectations.Expectation] = Nil): Long = {
     val fs = fileSystem(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = latestVersion(spark, root)
-        .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-      val m = readManifest(spark, root, base)
-      txn.foreach { case (id, batchId) =>
-        if (m.txns.get(id).exists(_ >= batchId)) return base
-      }
-      val v = base + 1
-      val token = newToken()
-      val written = writeVersionData(df, root, v, token, keys, m.numBuckets,
-        m.statsCols, fs, failRules)
-      val txns = m.txns ++ txn.map { case (id, b) => id -> b }
-      writeManifestAtomic(fs, root, v, m.numBuckets, m.statsCols, txns,
-          written, base = Some(m), keys = keys) match {
-        case Some(cm) => maybeCheckpoint(spark, root, cm); return v
-        case None => fs.delete(new Path(root, attemptDir(v, token)), true)
-      }
+    occ(spark, root, "replaceAll", txn) { a =>
+      val written = writeVersionData(df, root, a.v, a.token, keys, a.m.numBuckets,
+        a.m.statsCols, fs, failRules)
+      publish(spark, root, fs.delete(new Path(root, a.dir), true): Unit)(
+        writeManifestAtomic(fs, root, a.v, a.m.numBuckets, a.m.statsCols, a.m.txns ++ txn,
+          written, base = Some(a.m), keys = keys)).map(_ => a.v)
     }
-    throw new IllegalStateException(
-      s"replaceAll lost $maxAttempts consecutive commit races at $root")
   }
 
   /** Group-replace commit — the verb behind SQL row-level rewrites
@@ -3321,8 +3369,8 @@ object SnapshotStore {
     * surfaces as [[java.util.ConcurrentModificationException]] and the
     * caller re-runs the whole statement against the new state (the
     * Delta/Iceberg conflict contract).
-    */
-  /** @param replacementIsSubset caller-proven guarantee that every
+    *
+    * @param replacementIsSubset caller-proven guarantee that every
     *   replacement row is an UNCHANGED current row of the scanned
     *   buckets (a group-based DELETE: the rewrite emits exactly the
     *   surviving rows). Rows then keep their buckets and the keyed
@@ -3332,127 +3380,113 @@ object SnapshotStore {
     */
   def replaceBuckets(spark: SparkSession, root: String, scanned: Set[Int],
                      replacement: DataFrame, keys: Seq[String],
-                     maxAttempts: Int = 5,
                      basedOnVersion: Option[Long] = None,
                      replacementIsSubset: Boolean = false): Long = {
     val fs = fileSystem(spark, root)
-    val base = latestVersion(spark, root)
-      .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-    val m = readManifest(spark, root, base)
-    require(keys.nonEmpty, s"replaceBuckets at $root needs the table's merge keys")
-    def conflict(detail: String): Nothing =
-      throw new java.util.ConcurrentModificationException(
-        s"row-level rewrite at $root lost to a concurrent commit ($detail) — " +
-          "the rewrite was computed against a stale snapshot; re-run the statement")
-    // the replacement was computed by a scan of `basedOnVersion`; any
-    // commit since then that touched a scanned bucket (or changed the
-    // layout) invalidates it — the same disjointness rule the rebase
-    // path applies, checked up front against the scan's snapshot
-    basedOnVersion.filter(_ != base).foreach { sv =>
-      val scanM = readManifest(spark, root, sv)
-      if (scanM.numBuckets != m.numBuckets) conflict("bucket layout changed")
-      val winnerTouched = (scanM.buckets.keySet ++ m.buckets.keySet)
-        .filter(b => scanM.buckets.get(b) != m.buckets.get(b))
-      if (winnerTouched.intersect(scanned).nonEmpty)
-        conflict(s"buckets ${winnerTouched.intersect(scanned).toSeq.sorted.mkString(",")} changed")
-    }
-    val v = base + 1
-    val token = newToken()
-    val bucketed = withBucket(replacement, keys, m.numBuckets)
-    val inScanned =
-      if (scanned.isEmpty) replacement.limit(0)
-      else bucketed.where(col(BucketCol).isInCollection(scanned)).drop(BucketCol)
-    val outside =
-      (if (scanned.isEmpty) bucketed
-       else bucketed.where(!col(BucketCol).isInCollection(scanned)))
-        .drop(BucketCol)
-    // ONE census job answers everything the pre-write logic needs: the
-    // bucket ids the replacement hashes into AND whether any bucket
-    // holds a duplicate merge key (equal key tuples always share a
-    // bucket — the bucket IS a hash of the keys — so a per-bucket dup
-    // is exactly a global dup). This used to be three separate
-    // executions of the full replacement plan (bucket distinct +
-    // per-side hasKeyDup group-counts); each one re-ran the
-    // copy-on-write scan of the affected buckets (guide §1.2: remove
-    // whole passes before tuning anything inside one).
-    // ≤ numBuckets rows reach the driver — metadata-sized. A
-    // subset-replacement (DELETE) skips the job outright: surviving
-    // rows keep their buckets (⊆ scanned) and stay key-unique.
-    val census =
-      if (replacementIsSubset) Map.empty[Int, Boolean]
-      else bucketed
-        .groupBy(col(BucketCol) +: keys.map(col): _*)
-        .agg(count(lit(1)).as("__graft_n"))
-        .groupBy(col(BucketCol))
-        .agg(max(col("__graft_n")).as("__graft_max"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1) > 1L)).toMap
-    val outsideTouched = census.keySet -- scanned
-    val dupInScanned = census.exists { case (b, dup) => dup && scanned(b) }
-    val dupOutside = census.exists { case (b, dup) => dup && !scanned(b) }
-    val touched = scanned ++ outsideTouched
-    def hasKeyDup(df: DataFrame): Boolean =
-      df.groupBy(keys.map(col): _*).count()
-        .where(col("count") > 1).limit(1).count() > 0
-    // A key-rewriting statement (UPDATE SET <key> = …, MERGE inserting
-    // an existing key) can land a changed row on a key whose
-    // UNCHANGED row sits in the same scanned bucket — the group
-    // rewrite has no key-uniqueness concept, so both rows arrive.
-    // The keyed-table contract says the WRITE wins (every graft write
-    // is an upsert), and a changed row is distinguishable
-    // structurally: a copied-over row is bit-identical to a current
-    // row of the scanned buckets, a changed one is not. The
-    // classification (two delta-sized exceptAlls + a keyed merge) runs
-    // ONLY when a duplicate key is actually detected — the common
-    // statement pays the single census above and nothing else.
-    val mergedIn =
-      if (scanned.isEmpty || !dupInScanned) inScanned
-      else {
-        val curS = readBuckets(spark, root, m, scanned)
-        val curAligned =
-          if (curS.schema.isEmpty) inScanned.limit(0)
-          else curS.select(inScanned.columns.map(col).toIndexedSeq: _*)
-        val changedIn = inScanned.exceptAll(curAligned)
-        if (hasKeyDup(changedIn)) throw new IllegalStateException(
-          s"row-level rewrite at $root produced two CHANGED rows for one " +
-            "merge key (e.g. an UPDATE mapping several keys onto the same " +
-            "new key) — a keyed graft table holds one row per key; make the " +
-            "statement produce distinct keys")
-        val copiesIn = inScanned.exceptAll(changedIn)
-        upsertMerge(keys)(copiesIn, changedIn)
+    // one lap: a lost race rebases inside it, and an overlapping loss
+    // is a conflict, never a recompute
+    occ(spark, root, "replaceBuckets") { a =>
+      val m = a.m
+      require(keys.nonEmpty, s"replaceBuckets at $root needs the table's merge keys")
+      // the replacement was computed by a scan of `basedOnVersion`; any
+      // commit since then that touched a scanned bucket (or changed the
+      // layout) invalidates it — the same disjointness rule the rebase
+      // path applies, checked up front against the scan's snapshot
+      refuseStale(spark, root, basedOnVersion, m, scanned) { detail =>
+        throw new java.util.ConcurrentModificationException(
+          s"row-level rewrite at $root lost to a concurrent commit ($detail) — " +
+            "the rewrite was computed against a stale snapshot; re-run the statement")
       }
-    val mergedOutside =
-      if (outsideTouched.isEmpty) outside
-      else {
-        if (dupOutside) throw new IllegalStateException(
-          s"row-level rewrite at $root inserts one merge key twice — a " +
-            "keyed graft table holds one row per key; deduplicate the source")
-        val current = readBuckets(spark, root, m, outsideTouched)
-        upsertMerge(keys)(
-          if (current.schema.isEmpty) outside.limit(0) else current, outside)
-      }
-    // subset path: the replacement IS the scanned buckets' new content
-    // verbatim — no bucket-membership filters, no merges
-    val full =
-      if (replacementIsSubset) replacement
-      else mergedIn.unionByName(mergedOutside)
-    val written = writeVersionData(full, root, v, token, keys, m.numBuckets,
-      m.statsCols, fs)
-    var attempt = 1
-    commitOrRebase[Map[Int, BucketEntry]](spark, fs, root, m, touched, v, token,
-      txn = None,
-      mayRetry = () => attempt < maxAttempts,
-      spendRetry = () => attempt += 1,
-      state0 = written,
-      nextOf = (winners, w) => (winners.buckets -- touched) ++ w,
-      rehome = (w, curV, newV) => w.map { case (b, e) =>
-        b -> e.copy(dir = rebased(e.dir, curV, newV, token))
-      },
-      keys = keys) match {
-      case Some(committed) => committed
-      case None => throw new java.util.ConcurrentModificationException(
-        s"row-level rewrite at $root lost its commit race to an overlapping " +
-          "concurrent commit — the rewrite was computed against a stale " +
-          "snapshot; re-run the statement")
+      val bucketed = withBucket(replacement, keys, m.numBuckets)
+      val inScanned =
+        if (scanned.isEmpty) replacement.limit(0)
+        else bucketed.where(col(BucketCol).isInCollection(scanned)).drop(BucketCol)
+      val outside =
+        (if (scanned.isEmpty) bucketed
+         else bucketed.where(!col(BucketCol).isInCollection(scanned)))
+          .drop(BucketCol)
+      // ONE census job answers everything the pre-write logic needs: the
+      // bucket ids the replacement hashes into AND whether any bucket
+      // holds a duplicate merge key (equal key tuples always share a
+      // bucket — the bucket IS a hash of the keys — so a per-bucket dup
+      // is exactly a global dup). This used to be three separate
+      // executions of the full replacement plan (bucket distinct +
+      // per-side hasKeyDup group-counts); each one re-ran the
+      // copy-on-write scan of the affected buckets (guide §1.2: remove
+      // whole passes before tuning anything inside one).
+      // ≤ numBuckets rows reach the driver — metadata-sized. A
+      // subset-replacement (DELETE) skips the job outright: surviving
+      // rows keep their buckets (⊆ scanned) and stay key-unique.
+      val census =
+        if (replacementIsSubset) Map.empty[Int, Boolean]
+        else bucketed
+          .groupBy(col(BucketCol) +: keys.map(col): _*)
+          .agg(count(lit(1)).as("__graft_n"))
+          .groupBy(col(BucketCol))
+          .agg(max(col("__graft_n")).as("__graft_max"))
+          .collect().map(r => r.getInt(0) -> (r.getLong(1) > 1L)).toMap
+      val outsideTouched = census.keySet -- scanned
+      val dupInScanned = census.exists { case (b, dup) => dup && scanned(b) }
+      val dupOutside = census.exists { case (b, dup) => dup && !scanned(b) }
+      val touched = scanned ++ outsideTouched
+      def hasKeyDup(df: DataFrame): Boolean =
+        df.groupBy(keys.map(col): _*).count()
+          .where(col("count") > 1).limit(1).count() > 0
+      // A key-rewriting statement (UPDATE SET <key> = …, MERGE inserting
+      // an existing key) can land a changed row on a key whose
+      // UNCHANGED row sits in the same scanned bucket — the group
+      // rewrite has no key-uniqueness concept, so both rows arrive.
+      // The keyed-table contract says the WRITE wins (every graft write
+      // is an upsert), and a changed row is distinguishable
+      // structurally: a copied-over row is bit-identical to a current
+      // row of the scanned buckets, a changed one is not. The
+      // classification (two delta-sized exceptAlls + a keyed merge) runs
+      // ONLY when a duplicate key is actually detected — the common
+      // statement pays the single census above and nothing else.
+      val mergedIn =
+        if (scanned.isEmpty || !dupInScanned) inScanned
+        else {
+          val curS = readBuckets(spark, root, m, scanned)
+          val curAligned =
+            if (curS.schema.isEmpty) inScanned.limit(0)
+            else curS.select(inScanned.columns.map(col).toIndexedSeq: _*)
+          val changedIn = inScanned.exceptAll(curAligned)
+          if (hasKeyDup(changedIn)) throw new IllegalStateException(
+            s"row-level rewrite at $root produced two CHANGED rows for one " +
+              "merge key (e.g. an UPDATE mapping several keys onto the same " +
+              "new key) — a keyed graft table holds one row per key; make the " +
+              "statement produce distinct keys")
+          val copiesIn = inScanned.exceptAll(changedIn)
+          upsertMerge(keys)(copiesIn, changedIn)
+        }
+      val mergedOutside =
+        if (outsideTouched.isEmpty) outside
+        else {
+          if (dupOutside) throw new IllegalStateException(
+            s"row-level rewrite at $root inserts one merge key twice — a " +
+              "keyed graft table holds one row per key; deduplicate the source")
+          val current = readBuckets(spark, root, m, outsideTouched)
+          upsertMerge(keys)(
+            if (current.schema.isEmpty) outside.limit(0) else current, outside)
+        }
+      // subset path: the replacement IS the scanned buckets' new content
+      // verbatim — no bucket-membership filters, no merges
+      val full =
+        if (replacementIsSubset) replacement
+        else mergedIn.unionByName(mergedOutside)
+      val written = writeVersionData(full, root, a.v, a.token, keys, m.numBuckets,
+        m.statsCols, fs)
+      commitOrRebase[Map[Int, BucketEntry]](spark, fs, root, a, touched,
+        txn = None,
+        state0 = written,
+        nextOf = (winners, w) => (winners.buckets -- touched) ++ w,
+        rehome = (w, curV, newV) => w.map { case (b, e) =>
+          b -> e.copy(dir = rebased(e.dir, curV, newV, a.token))
+        },
+        keys = keys).orElse(throw new java.util.ConcurrentModificationException(
+          s"row-level rewrite at $root lost its commit race to an overlapping " +
+            "concurrent commit — the rewrite was computed against a stale " +
+            "snapshot; re-run the statement"))
     }
   }
 
@@ -3502,11 +3536,8 @@ object SnapshotStore {
     */
   def applyRowDelta(spark: SparkSession, root: String, upserts: DataFrame,
                     deleteKeys: DataFrame, keys: Seq[String],
-                    maxAttempts: Int = 5,
                     basedOnVersion: Option[Long] = None): Long = {
-    val base = latestVersion(spark, root)
-      .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-    val m = readManifest(spark, root, base)
+    val (_, m) = head(spark, root)
     // ONE census job over (upserts ⊎ delete keys) answers EVERYTHING
     // the pre-commit logic needs (r19, guide §1.2 — this used to be
     // three separate delta-sized jobs: the upsert dup-check, the
@@ -3536,16 +3567,10 @@ object SnapshotStore {
           "UPDATE mapping several keys onto the same new key, or a MERGE " +
           "inserting one key twice) — a keyed graft table holds one row " +
           "per key; make the statement produce distinct keys")
-    basedOnVersion.filter(_ != base).foreach { sv =>
-      val scanM = readManifest(spark, root, sv)
-      val winnerTouched = (scanM.buckets.keySet ++ m.buckets.keySet)
-        .filter(b => scanM.buckets.get(b) != m.buckets.get(b))
-      if (scanM.numBuckets != m.numBuckets ||
-          winnerTouched.intersect(delBuckets ++ upsBuckets).nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"row delta at $root lost to a concurrent commit — computed " +
-            "against a stale snapshot; re-run the statement")
-    }
+    def stale(detail: String): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"row delta at $root lost to a concurrent commit — computed " +
+          "against a stale snapshot; re-run the statement")
     // no broadcast hint: a row-delta's delete set is bounded by the
     // statement's changed rows, which can be large — let the planner
     // (AQE) pick broadcast when it actually is small
@@ -3553,12 +3578,20 @@ object SnapshotStore {
       if (delBuckets.isEmpty) cur
       else cur.join(delKeyed,
         keys.map(k => cur(k) <=> delKeyed(k)).reduce(_ && _), "left_anti")
+    // every lap refuses what the commit's own head makes stale: a
+    // layout moved since the census (both bucket sets hold under the
+    // census layout only), or a commit since the scan that touched a
+    // target bucket
     commitDelta(spark, root, upserts, keys,
       merge = (cur, delta) => upsertMerge(keys)(minusDeleted(cur), delta),
-      maxAttempts = maxAttempts,
-      alsoTouch = _ => delBuckets,
+      alsoTouch = cur => {
+        if (cur.numBuckets != m.numBuckets) stale("bucket layout changed")
+        refuseStale(spark, root, basedOnVersion, cur, delBuckets ++ upsBuckets)(stale)
+        delBuckets
+      },
       recomputeOnOverlap = false,
-      deltaBucketsHint = Some(upsBuckets))
+      plannedVersion = Some(m.version),
+      deltaBucketsHint = Some(BucketsHint(m.numBuckets, upsBuckets)))
   }
 
   /** Merge-on-read DELETE: commit the removal of `deleteKeys` (frame
@@ -3588,41 +3621,18 @@ object SnapshotStore {
                     txn: Option[(String, Long)] = None,
                     basedOnVersion: Option[Long] = None): Long = {
     val fs = fileSystem(spark, root)
-    var attempt = 0
-    var firstBase = -1L
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = latestVersion(spark, root)
-        .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-      val m = readManifest(spark, root, base)
-      txn.foreach { case (id, batchId) =>
-        if (m.txns.get(id).exists(_ >= batchId)) return base // already applied
-      }
-      if (firstBase < 0) firstBase = base
-      // lost-generation guard, as in [[commitDelta]]: tombstones keyed
-      // for the displaced epoch must not silently "succeed" against a
-      // replacement's content
-      if (keys.nonEmpty && m.keys.nonEmpty && keys != m.keys)
-        throw new java.util.ConcurrentModificationException(
-          s"delete at $root planned for merge keys (${keys.mkString(", ")}) " +
-            s"but the table now declares (${m.keys.mkString(", ")}) — it was " +
-            "REPLACED concurrently; re-run the statement")
-      val sinceDel = basedOnVersion.fold(firstBase)(math.min(_, firstBase))
-      if (base > sinceDel && epochCrossedSince(spark, root, sinceDel, base))
-        throw new java.util.ConcurrentModificationException(
-          s"delete at $root crosses a contract-epoch boundary: the table " +
-            s"was REPLACED after this delete was planned (v$sinceDel) — " +
-            "re-run the statement")
-      val v = base + 1
-      val token = newToken()
-      val rel = attemptDir(v, token)
-      val vdir = new Path(root, rel)
+    occ(spark, root, "commitDeletes", txn, maxAttempts) { a =>
+      // tombstones keyed for a displaced epoch must not silently
+      // "succeed" against a replacement's content
+      refuseLostGeneration(spark, root, keys, a, basedOnVersion, "delete", "delete")
+      val m = a.m
+      val vdir = new Path(root, a.dir)
       withBucket(deleteKeys.select(keys.map(col): _*).distinct(), keys, m.numBuckets)
         .write.mode("overwrite").partitionBy(BucketCol).parquet(vdir.toString)
       val written = if (!fs.exists(vdir)) Seq.empty else
         fs.listStatus(vdir).toSeq.map(_.getPath.getName)
           .filter(_.startsWith(s"$BucketCol="))
-          .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"$rel/$n")
+          .map(n => n.stripPrefix(s"$BucketCol=").toInt -> s"${a.dir}/$n")
       // the delete set was computed by a scan of `basedOnVersion` (the
       // delta row-level path): a commit since then that touched any
       // bucket the deletes hash into could have REPLACED a deleted
@@ -3632,27 +3642,20 @@ object SnapshotStore {
       // Callers passing no version (the declarative deleteWhere path,
       // whose matching-key frame re-reads the LATEST manifest per
       // attempt) keep recompute-on-race semantics.
-      basedOnVersion.filter(_ != base).foreach { sv =>
-        val scanM = readManifest(spark, root, sv)
-        val winnerTouched = (scanM.buckets.keySet ++ m.buckets.keySet)
-          .filter(b => scanM.buckets.get(b) != m.buckets.get(b))
-        if (scanM.numBuckets != m.numBuckets ||
-            winnerTouched.intersect(written.map(_._1).toSet).nonEmpty) {
-          fs.delete(vdir, true)
-          throw new java.util.ConcurrentModificationException(
-            s"delete at $root lost to a concurrent commit — computed " +
-              "against a stale snapshot; re-run the statement")
-        }
+      refuseStale(spark, root, basedOnVersion, m, written.map(_._1).toSet) { _ =>
+        fs.delete(vdir, true)
+        throw new java.util.ConcurrentModificationException(
+          s"delete at $root lost to a concurrent commit — computed " +
+            "against a stale snapshot; re-run the statement")
       }
       // a tombstone for a bucket holding no data is a no-op — never
       // reference it (the unreferenced attempt dir is vacuum food)
       val effective = written.filter { case (b, _) => m.buckets.contains(b) }
-      if (effective.isEmpty) {
-        fs.delete(vdir, true)
-        if (txn.isEmpty) return base
-        // still commit an (unchanged) manifest so the txn high-water
-        // mark records this batch — a redelivery must stay a no-op
-      }
+      if (effective.isEmpty) fs.delete(vdir, true)
+      // still commit an (unchanged) manifest when a txn rides along,
+      // so its high-water mark records this batch — a redelivery must
+      // stay a no-op
+      if (effective.isEmpty && txn.isEmpty) Some(a.base)
       // lost races rebase like commitDelta: tombstone appends to
       // buckets the winners didn't touch re-point without rewriting
       // the sidecar. Disjointness is checked against EVERY bucket the
@@ -3663,32 +3666,20 @@ object SnapshotStore {
       // the tombstone applies (this commit carries the LATER version
       // number, so delete-after-insert is the order observers see;
       // silently dropping it would violate that).
-      commitOrRebase[Seq[(Int, String)]](spark, fs, root, m,
-        written.map(_._1).toSet, v, token, txn,
-        mayRetry = () => attempt < maxAttempts,
-        spendRetry = () => attempt += 1,
+      else commitOrRebase[Seq[(Int, String)]](spark, fs, root, a,
+        written.map(_._1).toSet, txn,
         state0 = effective,
         nextOf = (winners, eff) => winners.buckets ++ eff.map { case (b, d) =>
           b -> winners.buckets(b).copy(
             tombstones = winners.buckets(b).tombstones :+ d)
         },
         rehome = (eff, curV, newV) => eff.map { case (b, d) =>
-          (b, rebased(d, curV, newV, token))
+          (b, rebased(d, curV, newV, a.token))
         },
-        keys = keys) match {
-        case Some(committed) => return committed
-        case None => () // recompute the sidecar against the new base
-      }
+        keys = keys) // None: recompute the sidecar against the new base
     }
-    throw new IllegalStateException(
-      s"commitDeletes lost $maxAttempts consecutive commit races at $root")
   }
 
-  /** Drop all but the newest `keepLast` manifests, then delete every
-    * data directory no kept manifest references — old version data and
-    * orphans from crashed writers alike. Returns #paths deleted.
-    * Time travel reaches only kept versions afterwards.
-    */
   /** Compact fragmented buckets — the OPTIMIZE analog for the
     * small-file pathology every streaming sink accrues: a bucket
     * written by an N-task shuffle holds up to N files, and scan cost
@@ -3738,11 +3729,11 @@ object SnapshotStore {
     *   on a cadence without pathological rewrites.
     */
   def compact(spark: SparkSession, root: String, minFiles: Int = 2,
-              maxAttempts: Int = 5, clusterBy: Seq[String] = Nil,
+              clusterBy: Seq[String] = Nil,
               zOrderBy: Seq[String] = Nil, zOrderBits: Int = 8,
               maxRecordsPerFile: Long = 0L,
               tombstoneFoldBytes: Long = 0L): Long =
-    compactWithStatus(spark, root, minFiles, maxAttempts, clusterBy,
+    compactWithStatus(spark, root, minFiles, clusterBy,
       zOrderBy, zOrderBits, maxRecordsPerFile, tombstoneFoldBytes)._1
 
   /** [[compact]], also reporting whether THIS call committed the
@@ -3753,7 +3744,7 @@ object SnapshotStore {
     * do so when the rewrite was its own.
     */
   def compactWithStatus(spark: SparkSession, root: String, minFiles: Int = 2,
-              maxAttempts: Int = 5, clusterBy: Seq[String] = Nil,
+              clusterBy: Seq[String] = Nil,
               zOrderBy: Seq[String] = Nil, zOrderBits: Int = 8,
               maxRecordsPerFile: Long = 0L,
               tombstoneFoldBytes: Long = 0L): (Long, Boolean) = {
@@ -3761,12 +3752,9 @@ object SnapshotStore {
     require(clusterBy.isEmpty || zOrderBy.isEmpty,
       "clusterBy and zOrderBy are mutually exclusive cluster layouts")
     val fs = fileSystem(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = latestVersion(spark, root)
-        .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-      val m = readManifest(spark, root, base)
+    var rewrote = false
+    val v = occ(spark, root, "compact") { a =>
+      val m = a.m
       // a bucket is rewritten when fragmented OR carrying unfolded
       // delete sidecars past the fold threshold — compaction is where
       // merge-on-read deletes get folded back into the data files
@@ -3788,107 +3776,71 @@ object SnapshotStore {
             .count(st => st.isFile && !st.getPath.getName.startsWith("_")) >= minFiles
         }
       }.keys.toSeq.sorted
-      if (frag.isEmpty) return (base, false)
-      val v = base + 1
-      val token = newToken()
-      val rel = attemptDir(v, token)
-      // read each fragmented bucket FROM ITS OWN DIR and tag it with
-      // its bucket id — no re-hash of the keys, so compaction is
-      // correct even for tables whose key list the caller no longer
-      // knows; unionByName(allowMissing) spans additive schema
-      // evolution (old buckets null-fill newer columns)
-      val parts = frag.map { b =>
-        val dir = dataPath(root, m.buckets(b).dir).toString
-        antiJoinTombstones(spark, root, m, Set(b),
-          mergedSchemaRead(spark, Seq(dir)).parquet(dir))
-          .withColumn(BucketCol, lit(b))
-      }
-      val df = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      val placed = df.repartition(frag.size, col(BucketCol))
-      val clustered =
-        if (zOrderBy.nonEmpty) placed
-          .withColumn("__zcode", ZOrder.code(df, zOrderBy, zOrderBits))
-          .sortWithinPartitions(col(BucketCol), col("__zcode"))
-          .drop("__zcode")
-        else if (clusterBy.isEmpty) placed
-        else placed.sortWithinPartitions((BucketCol +: clusterBy).map(col): _*)
-      clustered
-        .write.mode("overwrite").partitionBy(BucketCol)
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .parquet(new Path(root, rel).toString)
-      // recompute stats (one O(rewritten buckets) rollup — same order
-      // as the write itself) when the rewrite could change them: a
-      // split changes FILE boundaries, and folding tombstones changes
-      // the DATA — carried-over bucket stats after a fold are only a
-      // conservative superset (fine for pruning, but the manifest
-      // aggregate pushdown answers MIN/MAX from them exactly, so a
-      // folded bucket must re-tighten). A pure file-merge rewrite
-      // keeps carrying stats at zero cost (data unchanged = exact).
-      val foldedAny = frag.exists(b => m.buckets(b).tombstones.nonEmpty)
-      // a fold can empty EVERY rewritten bucket (only _SUCCESS lands) —
-      // read.parquet on that dir would fail schema inference
-      val anyBucketWritten = fs.exists(new Path(root, rel)) &&
-        fs.listStatus(new Path(root, rel))
-          .exists(_.getPath.getName.startsWith(s"$BucketCol="))
-      val (freshBucketStats, freshFileStats, rollupCounts)
-          : (Map[Int, Seq[Option[(String, String)]]],
-             Map[Int, Map[String, Seq[Option[(String, String)]]]],
-             Map[Int, Long]) =
-        if (anyBucketWritten && m.statsCols.nonEmpty &&
-            (maxRecordsPerFile > 0 || foldedAny))
-          collectStats(spark.read.parquet(new Path(root, rel).toString), m.statsCols)
-        else (Map.empty, Map.empty, Map.empty)
-      // fresh physical counts for the rewritten buckets (folding
-      // tombstones changes them) — ride the stats rollup when it ran,
-      // else driver-side footer reads (count-job fallback)
-      val freshCounts: Map[Int, Long] =
-        if (rollupCounts.nonEmpty) rollupCounts
-        else if (anyBucketWritten) {
-          val vd = new Path(root, rel)
-          val names = fs.listStatus(vd).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith(s"$BucketCol="))
-          footerBucketRowCounts(spark, vd, names, fs)
-            .getOrElse(bucketRowCounts(spark, vd.toString))
+      if (frag.isEmpty) Some(a.base)
+      else {
+        val rel = a.dir
+        // read each fragmented bucket FROM ITS OWN DIR and tag it with
+        // its bucket id — no re-hash of the keys, so compaction is
+        // correct even for tables whose key list the caller no longer
+        // knows; unionByName(allowMissing) spans additive schema
+        // evolution (old buckets null-fill newer columns)
+        val parts = frag.map { b =>
+          val dir = dataPath(root, m.buckets(b).dir).toString
+          antiJoinTombstones(spark, root, m, Set(b),
+            mergedSchemaRead(spark, Seq(dir)).parquet(dir))
+            .withColumn(BucketCol, lit(b))
         }
-        else Map.empty
-      val rewritten = frag.flatMap { b =>
-        val dir = s"$rel/$BucketCol=$b"
+        val df = parts.reduce(_.unionByName(_, allowMissingColumns = true))
+        val placed = df.repartition(frag.size, col(BucketCol))
+        val clustered =
+          if (zOrderBy.nonEmpty) placed
+            .withColumn("__zcode", ZOrder.code(df, zOrderBy, zOrderBits))
+            .sortWithinPartitions(col(BucketCol), col("__zcode"))
+            .drop("__zcode")
+          else if (clusterBy.isEmpty) placed
+          else placed.sortWithinPartitions((BucketCol +: clusterBy).map(col): _*)
+        clustered
+          .write.mode("overwrite").partitionBy(BucketCol)
+          .option("maxRecordsPerFile", maxRecordsPerFile)
+          .parquet(new Path(root, rel).toString)
+        // recompute stats when the rewrite could change them: a split
+        // changes FILE boundaries, and folding tombstones changes the
+        // DATA — carried-over bucket stats after a fold are only a
+        // conservative superset (fine for pruning, but the manifest
+        // aggregate pushdown answers MIN/MAX from them exactly, so a
+        // folded bucket must re-tighten). A pure file-merge rewrite
+        // keeps carrying stats at zero cost (data unchanged = exact).
+        // Row counts are always fresh (folding tombstones changes them).
+        val statsFresh = m.statsCols.nonEmpty &&
+          (maxRecordsPerFile > 0 || frag.exists(b => m.buckets(b).tombstones.nonEmpty))
+        val fresh = writtenEntries(spark, root, rel, fs,
+          if (statsFresh) m.statsCols else Nil, clustered.schema)
         // folded deletes can empty a bucket entirely — no dir written,
-        // and the bucket drops out of the manifest
-        if (!fs.exists(new Path(root, dir))) None
-        else {
-          // fresh stats when the rollup ran (split or fold), else the
-          // carried-over bucket stats remain EXACT (data unchanged);
-          // an unsplit compacted bucket is one file spanning the whole
-          // bucket, so its bucket stats ARE its file stats
-          val statsFresh = m.statsCols.nonEmpty &&
-            (maxRecordsPerFile > 0 || foldedAny)
-          val bst =
-            if (statsFresh) freshBucketStats.getOrElse(b, m.statsCols.map(_ => None))
-            else m.buckets(b).stats
-          val fst =
-            if (m.statsCols.isEmpty) Map.empty[String, Seq[Option[(String, String)]]]
-            else if (statsFresh) freshFileStats.getOrElse(b, Map.empty)
-            else fs.listStatus(new Path(root, dir)).toSeq
-              .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
-              .map(_.getPath.getName -> bst).toMap
-          Some(b -> BucketEntry(dir, bst, fst, rows = freshCounts.get(b)))
+        // and the bucket drops out of the manifest. Without fresh stats
+        // the carried-over bucket stats remain EXACT (data unchanged); an
+        // unsplit compacted bucket is one file spanning the whole bucket,
+        // so its bucket stats ARE its file stats
+        val rewritten = frag.flatMap(b => fresh.get(b).map { e =>
+          if (statsFresh) b -> e
+          else {
+            val bst = m.buckets(b).stats
+            b -> e.copy(stats = bst, fileStats =
+              if (m.statsCols.isEmpty) Map.empty
+              else fs.listStatus(new Path(root, e.dir)).toSeq
+                .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+                .map(_.getPath.getName -> bst).toMap)
+          }
+        })
+        publish(spark, root, fs.delete(new Path(root, rel), true): Unit)(
+          writeManifestAtomic(fs, root, a.v, m.numBuckets, m.statsCols, m.txns,
+            (m.buckets -- frag) ++ rewritten, base = Some(m))).map { _ =>
+          repinColStats(spark, root, a.base, a.v)
+          rewrote = true
+          a.v
         }
-      }
-      val next = (m.buckets -- frag) ++ rewritten
-      writeManifestAtomic(fs, root, v, m.numBuckets, m.statsCols, m.txns, next,
-          base = Some(m)) match {
-        case Some(cm) =>
-          maybeCheckpoint(spark, root, cm)
-          repinColStats(spark, root, base, v)
-          return (v, true)
-        case None =>
-          // lost to a concurrent committer: drop our attempt, re-census
-          fs.delete(new Path(root, rel), true)
       }
     }
-    throw new IllegalStateException(
-      s"compact lost $maxAttempts consecutive commit races at $root")
+    (v, rewrote)
   }
 
   /** Bucket-count evolution: rewrite the table under a NEW hash-bucket
@@ -3910,9 +3862,9 @@ object SnapshotStore {
     * readForKeys pruning, so it is on the same contract.
     */
   def rebucket(spark: SparkSession, root: String, keys: Seq[String],
-               newNumBuckets: Int, maxAttempts: Int = 5): Long = {
+               newNumBuckets: Int): Long = {
     require(newNumBuckets >= 1, "need at least one bucket")
-    rewriteAll(spark, root, keys, Some(newNumBuckets), maxAttempts)
+    rewriteAll(spark, root, keys, Some(newNumBuckets))
   }
 
   /** Rewrite every bucket locally under the current layout — the
@@ -3921,49 +3873,37 @@ object SnapshotStore {
     * vacuum (or disappear) freely. No-op (returns the current version)
     * on a table that is already fully local.
     */
-  def materialize(spark: SparkSession, root: String, keys: Seq[String],
-                  maxAttempts: Int = 5): Long =
-    rewriteAll(spark, root, keys, None, maxAttempts)
+  def materialize(spark: SparkSession, root: String, keys: Seq[String]): Long =
+    rewriteAll(spark, root, keys, None)
 
   private def rewriteAll(spark: SparkSession, root: String, keys: Seq[String],
-                         newCount: Option[Int], maxAttempts: Int): Long = {
+                         newCount: Option[Int]): Long = {
     val fs = fileSystem(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val base = latestVersion(spark, root)
-        .getOrElse(throw new IllegalStateException(s"no table at $root — call init first"))
-      val m = readManifest(spark, root, base)
+    occ(spark, root, if (newCount.isDefined) "rebucket" else "materialize") { a =>
+      val m = a.m
       // nothing to do when the layout already matches AND every entry
       // is local (a clone at the same bucket count still needs the
       // rewrite — that is what re-homes it)
       if (newCount.forall(_ == m.numBuckets) &&
           m.buckets.values.forall(e => !new Path(e.dir).isAbsolute)) {
         releaseClone(spark, root) // already fully local — drop any stale hold
-        return base
-      }
-      val nb = newCount.getOrElse(m.numBuckets)
-      val v = base + 1
-      val token = newToken()
-      val current = readBuckets(spark, root, m, m.buckets.keySet)
-      val written = writeVersionData(current, root, v, token, keys,
-        nb, m.statsCols, fs)
-      writeManifestAtomic(fs, root, v, nb, m.statsCols,
-          m.txns, written, base = Some(m)) match {
-        case Some(cm) =>
-          maybeCheckpoint(spark, root, cm)
+        Some(a.base)
+      } else {
+        val nb = newCount.getOrElse(m.numBuckets)
+        val current = readBuckets(spark, root, m, m.buckets.keySet)
+        val written = writeVersionData(current, root, a.v, a.token, keys,
+          nb, m.statsCols, fs)
+        publish(spark, root, fs.delete(new Path(root, a.dir), true): Unit)(
+          writeManifestAtomic(fs, root, a.v, nb, m.statsCols,
+            m.txns, written, base = Some(m))).map { _ =>
           // every bucket now lives under OUR root: the clone (if this
           // was one) no longer needs its source retained
           releaseClone(spark, root)
-          repinColStats(spark, root, base, v)
-          return v
-        case None =>
-          fs.delete(new Path(root, attemptDir(v, token)), true)
+          repinColStats(spark, root, a.base, a.v)
+          a.v
+        }
       }
     }
-    val op = if (newCount.isDefined) "rebucket" else "materialize"
-    throw new IllegalStateException(
-      s"$op lost $maxAttempts consecutive commit races at $root")
   }
 
   /** Roll the table back to `toVersion` AS A NEW COMMIT: the new
@@ -4003,13 +3943,10 @@ object SnapshotStore {
     * cross-epoch restore (they describe the replaced content), as at
     * REPLACE.
     */
-  def restore(spark: SparkSession, root: String, toVersion: Long,
-              maxAttempts: Int = 5): Long = {
+  def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
     val fs = fileSystem(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val vs = versions(spark, root)
+    occ(spark, root, "restore") { a =>
+      val vs = a.vs
       require(vs.contains(toVersion),
         s"version $toVersion is not in $root's history (have: $vs) — vacuumed?")
       // floor check AFTER the listing (and re-checked every OCC lap): a
@@ -4025,102 +3962,87 @@ object SnapshotStore {
           s"restore target $toVersion at $root is below the committed " +
             s"vacuum floor $floor — its data files may already be " +
             "reclaimed; re-run against a retained version")
-      val base = vs.last
-      if (base == toVersion) return base
-      val target = readManifest(spark, root, toVersion)
-      val cur = readManifest(spark, root, base)
-      // a RELEASED clone/branch (rebucket/materialize dropped its
-      // source-retention consumer) may restore to a PRE-materialization
-      // version whose absolute source references were since reclaimed —
-      // [[releaseClone]] documents the dangle as inherent. Probe the
-      // distinct out-of-root directories (numBuckets-bounded, only on
-      // marker-less roots with foreign refs) and refuse LOUDLY instead
-      // of committing a version that dangles; the residual (a source
-      // vacuum landing after this probe) keeps the documented
-      // FNF-at-read behavior (found by BranchChaosBlast 8×18: a branch
-      // rebucket released retention, a branch restore re-pointed at the
-      // fork-time main dirs, main's vacuum had reclaimed them).
-      val rootAbs = fs.makeQualified(new Path(root)).toString
-      if (cloneSourceOf(fs, root).isEmpty) {
-        // probe the referenced BUCKET dirs themselves, not their v=
-        // parents (r16 advice #5): vacuum reclaims at bucket-dir
-        // granularity when only some of a version's buckets are dead,
-        // so a partially-reclaimed source version keeps its parent dir
-        // and a parent-level probe passes while the restore still
-        // dangles. Still numBuckets-bounded per foreign version.
-        val gone = target.buckets.values
-          .flatMap(e => e.dir +: e.tombstones)
-          .filter(d => new Path(d).isAbsolute && !d.startsWith(rootAbs + "/"))
-          .toSeq.distinct
-          .filterNot(d => fs.exists(new Path(d)))
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"restore target $toVersion at $root references " +
-              s"${gone.size} source director${if (gone.size == 1) "y" else "ies"} " +
-              "that no longer exist (a pre-materialization version whose " +
-              "source history was vacuumed after this clone/branch " +
-              "released its retention) — re-clone from the source or " +
-              s"restore to a post-materialization version; first missing: " +
-              gone.head)
-      }
-      // serialize behind any in-flight REPLACE swap at/below the head,
-      // THEN decide whether this restore crosses an epoch — deciding
-      // from a mid-swap props file could read the wrong epoch stamp.
-      // The decision is made BEFORE the commit so the manifest can
-      // carry the `epoch:` flag (flag + final stamp = swap-completed
-      // protocol; see [[awaitContractQuiescence]]); if the commit
-      // loses the race, the next attempt re-decides from fresh state.
-      awaitContractQuiescence(spark, root, base)
-      val liveProps = readProps(spark, root)
-      val crosses = liveProps
-        .get("graft.schema.epoch").map(_.toLong).exists(toVersion < _)
-      // a cross-epoch restore is a contract swap: build its WRITE-AHEAD
-      // bundle now (stable if we win). Install lookups resolve from the
-      // archives BEFORE this restore publishes its own `_*_upto_<base>`
-      // files (which also cover toVersion — a post-archival lookup
-      // would install the REPLACEMENT's contract when the target epoch
-      // had none); the restored ledger installs by COPY from its
-      // archive, which stays in place for the next cross-epoch restore.
-      val ctok = newToken()
-      val bundle = if (!crosses) None else Some(ContractBundle(
-        v = base + 1, cur = base,
-        archSchema = smallFileText(fs, new Path(root, "_schema")),
-        archProps = propsText(liveProps),
-        liveSchema = archivedFileFor(fs, root, "_schema_upto_", toVersion)
-          .flatMap(n => smallFileText(fs, new Path(root, n))),
-        livePropsFinal = propsText(
-          archivedPropsFor(spark, root, toVersion).getOrElse(Map.empty) +
-            ("graft.schema.epoch" -> (base + 1).toString)),
-        ledgerArchive = fs.exists(new Path(root, "_identity")),
-        ledgerSrc = archivedFileFor(fs, root, "_identity_upto_", toVersion),
-        ledgerByRename = false))
-      bundle.foreach(b => publishSmallFile(spark, root,
-        pendingContractsName(base + 1, ctok), bundleText(b)))
-      // a keyed→UNKEYED restore cannot ride a delta manifest (a delta
-      // with no keys line INHERITS the base's keys — Nil is
-      // inexpressible there); write a full manifest for that one case
-      val baseOpt = if (target.keys.isEmpty && cur.keys.nonEmpty) None
-                    else Some(cur)
-      writeManifestAtomic(fs, root, base + 1, target.numBuckets,
-          target.statsCols, cur.txns, target.buckets, base = baseOpt,
-          keys = target.keys, epochStart = crosses,
-          commitToken = Some(ctok)) match {
-        case Some(cm) =>
-          maybeCheckpoint(spark, root, cm)
-          bundle.foreach { b =>
-            replaceSwapHook(root, base + 1)
-            executeContractSwap(spark, root, b)
-            fs.delete(new Path(root,
-              pendingContractsName(base + 1, ctok)), false): Unit
-          }
-          return base + 1
-        case None => // lost the race — withdraw the intent and retry
-          bundle.foreach(_ => fs.delete(new Path(root,
-            pendingContractsName(base + 1, ctok)), false): Unit)
+      val base = a.base
+      if (base == toVersion) Some(base)
+      else {
+        val target = readManifest(spark, root, toVersion)
+        val cur = a.m
+        // a RELEASED clone/branch (rebucket/materialize dropped its
+        // source-retention consumer) may restore to a PRE-materialization
+        // version whose absolute source references were since reclaimed —
+        // [[releaseClone]] documents the dangle as inherent. Probe the
+        // distinct out-of-root directories (numBuckets-bounded, only on
+        // marker-less roots with foreign refs) and refuse LOUDLY instead
+        // of committing a version that dangles; the residual (a source
+        // vacuum landing after this probe) keeps the documented
+        // FNF-at-read behavior (found by BranchChaosBlast 8×18: a branch
+        // rebucket released retention, a branch restore re-pointed at the
+        // fork-time main dirs, main's vacuum had reclaimed them).
+        val rootAbs = fs.makeQualified(new Path(root)).toString
+        if (cloneSourceOf(fs, root).isEmpty) {
+          // probe the referenced BUCKET dirs themselves, not their v=
+          // parents (r16 advice #5): vacuum reclaims at bucket-dir
+          // granularity when only some of a version's buckets are dead,
+          // so a partially-reclaimed source version keeps its parent dir
+          // and a parent-level probe passes while the restore still
+          // dangles. Still numBuckets-bounded per foreign version.
+          val gone = target.buckets.values
+            .flatMap(e => e.dir +: e.tombstones)
+            .filter(d => new Path(d).isAbsolute && !d.startsWith(rootAbs + "/"))
+            .toSeq.distinct
+            .filterNot(d => fs.exists(new Path(d)))
+          if (gone.nonEmpty)
+            throw new java.util.ConcurrentModificationException(
+              s"restore target $toVersion at $root references " +
+                s"${gone.size} source director${if (gone.size == 1) "y" else "ies"} " +
+                "that no longer exist (a pre-materialization version whose " +
+                "source history was vacuumed after this clone/branch " +
+                "released its retention) — re-clone from the source or " +
+                s"restore to a post-materialization version; first missing: " +
+                gone.head)
+        }
+        // serialize behind any in-flight REPLACE swap at/below the head,
+        // THEN decide whether this restore crosses an epoch — deciding
+        // from a mid-swap props file could read the wrong epoch stamp.
+        // The decision is made BEFORE the commit so the manifest can
+        // carry the `epoch:` flag (flag + final stamp = swap-completed
+        // protocol; see [[awaitContractQuiescence]]); if the commit
+        // loses the race, the next attempt re-decides from fresh state.
+        awaitContractQuiescence(spark, root, base)
+        val liveProps = readProps(spark, root)
+        val crosses = liveProps
+          .get("graft.schema.epoch").map(_.toLong).exists(toVersion < _)
+        // a cross-epoch restore is a contract swap: build its WRITE-AHEAD
+        // bundle now (stable if we win). Install lookups resolve from the
+        // archives BEFORE this restore publishes its own `_*_upto_<base>`
+        // files (which also cover toVersion — a post-archival lookup
+        // would install the REPLACEMENT's contract when the target epoch
+        // had none); the restored ledger installs by COPY from its
+        // archive, which stays in place for the next cross-epoch restore.
+        val bundle = if (!crosses) None else Some(ContractBundle(
+          v = a.v, cur = base,
+          archSchema = smallFileText(fs, new Path(root, "_schema")),
+          archProps = propsText(liveProps),
+          liveSchema = archivedFileFor(fs, root, "_schema_upto_", toVersion)
+            .flatMap(n => smallFileText(fs, new Path(root, n))),
+          livePropsFinal = propsText(
+            archivedPropsFor(spark, root, toVersion).getOrElse(Map.empty) +
+              ("graft.schema.epoch" -> a.v.toString)),
+          ledgerArchive = fs.exists(new Path(root, "_identity")),
+          ledgerSrc = archivedFileFor(fs, root, "_identity_upto_", toVersion),
+          ledgerByRename = false))
+        // a keyed→UNKEYED restore cannot ride a delta manifest (a delta
+        // with no keys line INHERITS the base's keys — Nil is
+        // inexpressible there); write a full manifest for that one case
+        val baseOpt = if (target.keys.isEmpty && cur.keys.nonEmpty) None
+                      else Some(cur)
+        publishSwap(spark, root, a.v, a.token, bundle)(
+          writeManifestAtomic(fs, root, a.v, target.numBuckets,
+            target.statsCols, cur.txns, target.buckets, base = baseOpt,
+            keys = target.keys, epochStart = crosses,
+            commitToken = Some(a.token))).map(_ => a.v)
       }
     }
-    throw new IllegalStateException(
-      s"restore lost $maxAttempts consecutive commit races at $root")
   }
 
   /** Zero-copy clone (the flagship capability of the reference's
@@ -4192,27 +4114,26 @@ object SnapshotStore {
     // ordering argument as [[init]]): a clone is a NEW instance, and
     // its manifest must never be readable before its own id exists
     mintTableInstanceId(spark, dstRoot)
-    writeManifestAtomic(dstFs, dstRoot, 0L, m.numBuckets, m.statsCols,
-        m.txns, entries, keys = m.keys) match {
-      case Some(cm) => maybeCheckpoint(spark, dstRoot, cm)
-      case None =>
-        ChangeFeed.dropConsumer(spark, srcRoot, cloneConsumerId(spark, dstRoot))
-        // On a plain-PUT store the claim arbiter's commit rows are
-        // PERMANENT (the anti-zombie fence — see [[ClaimArbiter]]), so
-        // a path that held a table DROPPED within the arbiter's
-        // staleness grace refuses its v0 re-commit: a suspended
-        // committer of the dropped table could still land a late PUT
-        // over the new table's manifest. Distinguish that fence
-        // (documented, self-resolving) from a genuine rival create.
-        if (manifestArbiter.nonEmpty &&
-            !dstFs.exists(manifestPath(dstRoot, 0L)))
-          throw new java.util.ConcurrentModificationException(
-            s"cannot initialize $dstRoot: its v0 commit slot is fenced " +
-              "by the plain-PUT claim arbiter (the path held a table " +
-              "dropped within the reclaim grace, or a rival create is " +
-              "mid-flight) — re-create after the grace or at a fresh path")
-        throw new IllegalStateException(
-          s"clone target $dstRoot was concurrently initialized")
+    publish(spark, dstRoot,
+        ChangeFeed.dropConsumer(spark, srcRoot, cloneConsumerId(spark, dstRoot)))(
+      writeManifestAtomic(dstFs, dstRoot, 0L, m.numBuckets, m.statsCols,
+        m.txns, entries, keys = m.keys)).getOrElse {
+      // On a plain-PUT store the claim arbiter's commit rows are
+      // PERMANENT (the anti-zombie fence — see [[ClaimArbiter]]), so
+      // a path that held a table DROPPED within the arbiter's
+      // staleness grace refuses its v0 re-commit: a suspended
+      // committer of the dropped table could still land a late PUT
+      // over the new table's manifest. Distinguish that fence
+      // (documented, self-resolving) from a genuine rival create.
+      if (manifestArbiter.nonEmpty &&
+          !dstFs.exists(manifestPath(dstRoot, 0L)))
+        throw new java.util.ConcurrentModificationException(
+          s"cannot initialize $dstRoot: its v0 commit slot is fenced " +
+            "by the plain-PUT claim arbiter (the path held a table " +
+            "dropped within the reclaim grace, or a rival create is " +
+            "mid-flight) — re-create after the grace or at a fresh path")
+      throw new IllegalStateException(
+        s"clone target $dstRoot was concurrently initialized")
     }
     // CONTRACTS travel with the table: `_props` (CHECK constraints,
     // dml.mode, generated/identity declarations), the declared-schema
@@ -4675,26 +4596,21 @@ object SnapshotStore {
     // re-listing (bucket-count changes — a rebucketed branch — need
     // the full base)
     val deltaBase = if (m.numBuckets == mainM.numBuckets) Some(mainM) else None
-    writeManifestAtomic(fs, root, pubV, m.numBuckets, m.statsCols, m.txns,
-        entries, base = deltaBase, keys = m.keys) match {
-      case Some(cm) =>
-        maybeCheckpoint(spark, root, cm)
-        // instance-scoped: a successor branch re-created under this
-        // name between the commit and this cleanup keeps its directory
-        // and consumer row (R16 — see dropBranch)
-        dropBranch(spark, root, name, expectInstance = instance)
-        manifestArbiter.foreach(
-          _.release(fs.makeQualified(markerPath).toString, markerToken))
-        pubV
-      case None =>
+    val won = publish(spark, root, {
         mapping.toSeq.foreach { case (o, n) => undoAdoption(fs, br, root, o, n) }
-        fs.delete(new Path(br, PublishingMarker), false)
-        manifestArbiter.foreach(
-          _.release(fs.makeQualified(markerPath).toString, markerToken))
-        throw new java.util.ConcurrentModificationException(
-          s"cannot fast-forward branch '$name': $root committed v$pubV " +
-            "during the publish — re-create the branch and re-apply")
-    }
+        fs.delete(new Path(br, PublishingMarker), false): Unit
+      })(writeManifestAtomic(fs, root, pubV, m.numBuckets, m.statsCols, m.txns,
+        entries, base = deltaBase, keys = m.keys))
+    // instance-scoped: a successor branch re-created under this name
+    // between the commit and this cleanup keeps its directory and
+    // consumer row (R16 — see dropBranch)
+    if (won.nonEmpty) dropBranch(spark, root, name, expectInstance = instance)
+    manifestArbiter.foreach(
+      _.release(fs.makeQualified(markerPath).toString, markerToken))
+    if (won.isEmpty) throw new java.util.ConcurrentModificationException(
+      s"cannot fast-forward branch '$name': $root committed v$pubV " +
+        "during the publish — re-create the branch and re-apply")
+    pubV
   }
 
   /** Resolve a crashed publish found via its `_publishing` breadcrumb:
@@ -5254,20 +5170,20 @@ object SnapshotStore {
     // retries re-rename the already-adopted dirs; first attempt moves
     // them out of the staged table
     var adopted = Map.empty[String, String]
-    var attempt = 0
     var committed = false
     val marker = "_rtas_adopting-" + newToken()
-    try while (attempt < 5) {
-      attempt += 1
-      val cur = latestVersion(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed graft table at $root"))
+    try occ(spark, root, "REPLACE", exhausted = Some(n =>
+      new java.util.ConcurrentModificationException(
+        s"could not commit REPLACE at $root after $n attempts — " +
+          "concurrent writers kept taking the next version"))) { a =>
+      val cur = a.base
       // serialize behind any in-flight (or crashed — roll-forward)
       // predecessor swap BEFORE reading the displaced live contracts
       // for the bundle below: winning the manifest race then certifies
       // those reads (any competitor commit in between makes this
       // attempt lose and re-read)
       awaitContractQuiescence(spark, root, cur)
-      val pubV = cur + 1
+      val pubV = a.v
       val mapping = localVds.map(vd =>
         vd -> s"v=$pubV-rtas-${vd.stripPrefix("v=")}").toMap
       // adoption marker BEFORE the renames: during a lost-race retry
@@ -5308,14 +5224,6 @@ object SnapshotStore {
       val entries = m.buckets.map { case (b, e) =>
         b -> e.copy(dir = rehome(e.dir), tombstones = e.tombstones.map(rehome))
       }
-      // always a FULL manifest (the new content is unrelated to the
-      // replaced version, so a delta would be all-del + all-add
-      // anyway); the TARGET's txn high-water marks merge in — the
-      // table identity its streaming writers checkpoint against
-      // survives the replace, so a redelivered micro-batch stays a
-      // no-op instead of re-applying pre-replace rows on top of the
-      // replacement (staged marks win a collision: they are newer)
-      val mainM = readManifest(spark, root, cur)
       // WRITE-AHEAD contract bundle: everything the post-commit swap
       // will write, resolved NOW (stable if we win — see the await
       // above). The displaced contracts archive under <cur> for
@@ -5326,8 +5234,7 @@ object SnapshotStore {
       // frontier that matches its data; the staged ledger is COPIED to
       // a crash-safe pending location so roll-forward works even after
       // the staging dir is reclaimed.
-      val ctok = newToken()
-      val pendLedgerName = f"_pending_identity-$pubV%020d-$ctok"
+      val pendLedgerName = f"_pending_identity-$pubV%020d-${a.token}"
       val stagedLedger = new Path(staged, "_identity")
       val hasStagedLedger = fs.exists(stagedLedger)
       if (hasStagedLedger)
@@ -5344,28 +5251,26 @@ object SnapshotStore {
         ledgerArchive = fs.exists(new Path(root, "_identity")),
         ledgerSrc = if (hasStagedLedger) Some(pendLedgerName) else None,
         ledgerByRename = true)
-      val pendName = pendingContractsName(pubV, ctok)
-      publishSmallFile(spark, root, pendName, bundleText(bundle))
-      writeManifestAtomic(fs, root, pubV, m.numBuckets, m.statsCols,
-          mainM.txns ++ m.txns, entries, base = None, keys = m.keys,
-          epochStart = true, commitToken = Some(ctok)) match {
-        case Some(cm) =>
-          maybeCheckpoint(spark, root, cm)
-          replaceSwapHook(root, pubV)
-          // the swap itself: executed from the bundle — the SAME
-          // idempotent recipe a healer would roll forward after a
-          // crash here; the epoch stamp lands last as the completion
-          // certificate [[awaitContractQuiescence]] serializes on
-          executeContractSwap(spark, root, bundle)
-          fs.delete(new Path(root, pendName), false): Unit
-          fs.delete(new Path(root, pendLedgerName), true): Unit
-          committed = true
-          return pubV
-        case None =>
-          // raced: withdraw this attempt's intent; the loop re-renames
-          // and re-resolves under the next version
-          fs.delete(new Path(root, pendName), false): Unit
-          fs.delete(new Path(root, pendLedgerName), true): Unit
+      // the swap itself runs from the bundle — the SAME idempotent
+      // recipe a healer would roll forward after a crash here; the
+      // epoch stamp lands last as the completion certificate
+      // [[awaitContractQuiescence]] serializes on. A lost race
+      // withdraws this attempt's intent; the loop re-renames and
+      // re-resolves under the next version.
+      // always a FULL manifest (the new content is unrelated to the
+      // replaced version, so a delta would be all-del + all-add
+      // anyway); the TARGET's txn high-water marks merge in — the
+      // table identity its streaming writers checkpoint against
+      // survives the replace, so a redelivered micro-batch stays a
+      // no-op instead of re-applying pre-replace rows on top of the
+      // replacement (staged marks win a collision: they are newer)
+      publishSwap(spark, root, pubV, a.token, Some(bundle),
+          scratch = Seq(new Path(root, pendLedgerName)))(
+        writeManifestAtomic(fs, root, pubV, m.numBuckets, m.statsCols,
+          a.m.txns ++ m.txns, entries, base = None, keys = m.keys,
+          epochStart = true, commitToken = Some(a.token))).map { _ =>
+        committed = true
+        pubV
       }
     } finally {
       // the marker is the ONLY thing that lets vacuum reclaim adopted
@@ -5378,9 +5283,6 @@ object SnapshotStore {
       // hard crash would.
       if (committed) fs.delete(new Path(root, marker), false): Unit
     }
-    throw new java.util.ConcurrentModificationException(
-      s"could not commit REPLACE at $root after 5 attempts — " +
-        "concurrent writers kept taking the next version")
   }
 
   /** Name of the `<prefix><n>` archive file covering version `v` — the
@@ -5699,7 +5601,12 @@ object SnapshotStore {
         "re-run the publish when the churn subsides")
   }
 
-  /** @param dryRun report what WOULD be reclaimed without touching
+  /** Drop all but the newest `keepLast` manifests, then delete every
+    * data directory no kept manifest references — old version data and
+    * orphans from crashed writers alike. Returns #paths deleted.
+    * Time travel reaches only kept versions afterwards.
+    *
+    * @param dryRun report what WOULD be reclaimed without touching
     *   anything (no deletions, no retention-floor checkpoint, and
     *   stale adoption markers stay unresolved — their dirs count as
     *   protected, so a real run may reclaim slightly more)

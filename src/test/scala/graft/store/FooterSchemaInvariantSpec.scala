@@ -88,15 +88,22 @@ class FooterSchemaInvariantSpec extends SparkSpec {
     // through the rollup job by adding a string stats column (strings
     // keep the job). Per-bucket min/max and row counts must agree
     // exactly — the footer path must be indistinguishable.
+    // A DOUBLE stats column whose minimum is 0.0 rides along: its
+    // footer min reads -0.0 where the job's min() says 0.0, so it must
+    // not take the footer path.
     val rows = spark.range(0, 3000, 1, 6)
       .select(col("id").as("k"), (col("id") % 1000 - 500).as("ts"),
-        concat(lit("v"), col("id")).as("v"))
+        concat(lit("v"), col("id")).as("v"), (col("id") % 3).cast("double").as("d"))
     val footerRoot = tmpDir("fstats")
     val jobRoot = tmpDir("jstats")
+    val doubleRoot = tmpDir("dstats")
     SnapshotStore.init(spark, footerRoot, rows, Seq("k"), numBuckets = 4,
       statsCols = Seq("ts"))
     SnapshotStore.init(spark, jobRoot, rows, Seq("k"), numBuckets = 4,
-      statsCols = Seq("ts", "v"))
+      statsCols = Seq("ts", "v", "d"))
+    SnapshotStore.init(spark, doubleRoot, rows, Seq("k"), numBuckets = 4,
+      statsCols = Seq("d"))
+    val mD = SnapshotStore.readManifest(spark, doubleRoot, 0L)
     val mF = SnapshotStore.readManifest(spark, footerRoot, 0L)
     val mJ = SnapshotStore.readManifest(spark, jobRoot, 0L)
     assert(mF.buckets.keySet == mJ.buckets.keySet)
@@ -105,6 +112,8 @@ class FooterSchemaInvariantSpec extends SparkSpec {
       assert(eF.stats.head == eJ.stats.head,
         s"bucket $b ts stats diverge: footer=${eF.stats.head} job=${eJ.stats.head}")
       assert(eF.rows == eJ.rows, s"bucket $b row counts diverge")
+      assert(mD.buckets(b).stats.head == eJ.stats(2),
+        s"bucket $b d stats diverge: ${mD.buckets(b).stats.head} vs job=${eJ.stats(2)}")
     }
     // and pruning still behaves on the footer-derived stats
     val pruned = SnapshotStore.read(spark, footerRoot).where(col("ts") === -500L)

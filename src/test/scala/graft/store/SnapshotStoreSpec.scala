@@ -162,6 +162,24 @@ class SnapshotStoreSpec extends SparkSpec {
       Set((1L, "v1b", 900L), (5L, "v5b", 901L)))
   }
 
+  test("a deltaBucketsHint computed under an earlier layout is not trusted: a rebucket in between loses no rows") {
+    val root = tmpDir("stale-hint")
+    val v0 = (1L to 200L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ts")
+    SnapshotStore.init(spark, root, v0, Seq("k"), numBuckets = 4)
+    def bucket(k: Long, n: Int): Int =
+      SnapshotStore.bucketOf(Seq(org.apache.spark.sql.catalyst.expressions.Literal(k)), n)
+    // a key whose 8-bucket id is >= 4: no census under 4 buckets names it
+    val k = (1L to 200L).find(bucket(_, 8) >= 4).get
+    val hint = SnapshotStore.BucketsHint(4, Set(bucket(k, 4)))
+    // the census ran, then the layout moved before the commit
+    SnapshotStore.rebucket(spark, root, Seq("k"), newNumBuckets = 8)
+    SnapshotStore.commitDelta(spark, root, Seq((k, "new", 2L)).toDF("k", "v", "ts"),
+      Seq("k"), merge, deltaBucketsHint = Some(hint))
+    // every other row of k's new bucket is still there
+    assert(rows(SnapshotStore.read(spark, root)) ==
+      rows(v0) - ((k, s"v$k", 1L)) + ((k, "new", 2L)))
+  }
+
   test("data skipping: range reads prune to the buckets whose min/max overlap") {
     val root = tmpDir("skip")
     // keys and ts correlated so different buckets carry different ranges
@@ -232,6 +250,17 @@ class SnapshotStoreSpec extends SparkSpec {
     SnapshotStore.commitDelta(spark, root, Seq(("d1", 7L)).toDF("day", "cents"),
       Seq("day"), sum2, txn = Some(("w2", 1L)))
     assert(state == Set(("d1", 157L)))
+    // replaceAll skips a redelivery the same way: the head comes back,
+    // no version is committed and no attempt dir is left behind
+    val vAll = SnapshotStore.replaceAll(spark, root,
+      Seq(("d2", 1L)).toDF("day", "cents"), Seq("day"), txn = Some(("w3", 1L)))
+    assert(state == Set(("d2", 1L)))
+    assert(SnapshotStore.replaceAll(spark, root, Seq(("d9", 9L)).toDF("day", "cents"),
+      Seq("day"), txn = Some(("w3", 1L))) == vAll)
+    assert(SnapshotStore.latestVersion(spark, root).contains(vAll))
+    assert(state == Set(("d2", 1L)))
+    assert(!Files.list(Paths.get(root))
+      .anyMatch(p => p.getFileName.toString.startsWith(s"v=${vAll + 1}-")))
   }
 
   test("lost commit race: loser keeps its hands off the winner's data and re-merges") {
