@@ -143,8 +143,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** SQL `TIMESTAMP AS OF <ts>` (micros since epoch): the newest
     * version whose manifest was committed at or before the instant,
     * resolved from the manifests' own in-commit `ts:` timestamps
-    * (monotonic per table; skew-proof vs file mtimes, which are only
-    * the pre-format-4 fallback) — the same resolution rule as Delta's.
+    * (monotonic per table; skew-proof, since no file mtime is read) —
+    * the same resolution rule as Delta's.
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val dir = metaParentDir(ident).getOrElse {

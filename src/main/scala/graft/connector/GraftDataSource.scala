@@ -1238,12 +1238,12 @@ class GraftScanBuilder(spark: SparkSession, root: String, m: Manifest,
   /** COUNT(*)/MIN/MAX answered from the MANIFEST — zero file reads
     * (the scan becomes a driver-local one-row result). Only when the
     * answer is provably exact: no outstanding tombstones (a sidecar
-    * could hide the min row or shrink the count), `rows:` recorded for
-    * every bucket (COUNT), the column in the declared stats set with
-    * no all-null gap ambiguity (MIN/MAX), and no grouping. Spark only
-    * attempts aggregate pushdown when every filter was fully consumed;
-    * this scan reports all filters as residuals, so a filtered query
-    * never reaches here — the gate is structural, not re-checked.
+    * could hide the min row or shrink the count), the column in the
+    * declared stats set with no all-null gap ambiguity (MIN/MAX), and
+    * no grouping. Spark only attempts aggregate pushdown when every
+    * filter was fully consumed; this scan reports all filters as
+    * residuals, so a filtered query never reaches here — the gate is
+    * structural, not re-checked.
     */
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     answerFromManifest(agg).isDefined
@@ -1307,12 +1307,8 @@ class GraftScanBuilder(spark: SparkSession, root: String, m: Manifest,
     if (funcs.isEmpty) return None
     val answered = funcs.map {
       case _: CountStarAgg =>
-        m.buckets.values.toSeq.map(_.rows) match {
-          case rs if rs.forall(_.isDefined) =>
-            Some((StructField("count", LongType, nullable = false),
-              java.lang.Long.valueOf(rs.map(_.get).sum): Any, "count(*)"))
-          case _ => None
-        }
+        Some((StructField("count", LongType, nullable = false),
+          java.lang.Long.valueOf(m.buckets.values.map(_.rows).sum): Any, "count(*)"))
       case mn: MinAgg => colOf(mn.column()).flatMap { case (n, i, dt) =>
         extreme(i, dt, wantMin = true).map(v =>
           (StructField(s"min($n)", dt, nullable = true), v.orNull: Any, s"min($n)"))
@@ -1544,8 +1540,8 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
   }
 
   /** POST-PRUNING size (the files this scan will actually read) and —
-    * when exactly known from the manifest (every bucket's `rows:`
-    * recorded, no tombstones, no pruning in play) — the row count.
+    * when exactly known from the manifest's `rows:` (no tombstones,
+    * no pruning in play) — the row count.
     * Without this, a DSv2 relation reports the session default
     * (spark.sql.defaultSizeInBytes = huge), so a graft dim table
     * NEVER qualified for auto-broadcast and the first join over it
@@ -1557,9 +1553,9 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     val exactRows =
       if (filters.nonEmpty || limit.isDefined) None
       else {
-        val entries = m.buckets.values.toSeq
-        if (entries.exists(e => e.tombstones.nonEmpty || e.rows.isEmpty)) None
-        else Some(entries.map(_.rows.get).sum)
+        val entries = m.buckets.values
+        if (entries.exists(_.tombstones.nonEmpty)) None
+        else Some(entries.map(_.rows).sum)
       }
     val colStats = columnStatsMap
     new org.apache.spark.sql.connector.read.Statistics {
@@ -1623,16 +1619,15 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     survivingBuckets = surviving
     // pushed LIMIT: take a minimal prefix of buckets whose recorded
     // rows cover it — only when provably safe (no pruning in play that
-    // could have shrunk a bucket's yield, no tombstones hiding rows,
-    // every bucket's row count recorded); Spark re-applies the exact
-    // limit above, so this only ever needs to produce ENOUGH rows
+    // could have shrunk a bucket's yield, no tombstones hiding rows);
+    // Spark re-applies the exact limit above, so this only ever needs
+    // to produce ENOUGH rows
     val chosen = limit match {
       case Some(n) if filters.isEmpty && runtimeFilters.isEmpty &&
           runtimeBuckets.isEmpty &&
-          surviving.forall(b => m.buckets(b).tombstones.isEmpty &&
-            m.buckets(b).rows.isDefined) =>
+          surviving.forall(b => m.buckets(b).tombstones.isEmpty) =>
         val sorted = surviving.toSeq.sorted
-        val cum = sorted.scanLeft(0L)((acc, b) => acc + m.buckets(b).rows.get)
+        val cum = sorted.scanLeft(0L)((acc, b) => acc + m.buckets(b).rows)
         sorted.zip(cum).takeWhile { case (_, before) => before < n }.map(_._1)
       case _ => surviving.toSeq.sorted
     }

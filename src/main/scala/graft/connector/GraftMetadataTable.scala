@@ -60,7 +60,7 @@ object GraftMetadataTable {
       .add("bucket", IntegerType)
       .add("files", IntegerType)
       .add("bytes", LongType)
-      .add("rows", LongType) // null = pre-format-4 entry (not recorded)
+      .add("rows", LongType)
       .add("tombstone_dirs", IntegerType)
       .add("tombstone_bytes", LongType)
     case "files" => new StructType()
@@ -128,7 +128,7 @@ object GraftMetadataTable {
             .map(_.getLen).sum
           new GenericInternalRow(Array[Any](
             b, files.length, files.map(_.getLen).sum,
-            e.rows.map(java.lang.Long.valueOf).orNull,
+            e.rows,
             e.tombstones.size, tombBytes))
         }
       case "files" =>

@@ -253,7 +253,7 @@ object GraftProcedures {
 
     /** The table's manifest-persisted merge keys (rebucket/materialize
       * rewrite by them; SQL has no channel to re-supply them — exactly
-      * what format-4 persistence is for).
+      * what key persistence is for).
       */
     private def persistedKeys(spark: SparkSession, root: String): Seq[String] = {
       val keys = GraftTable.manifestAt(spark, root, None).keys

@@ -54,7 +54,7 @@ private[connector] object GraftWrite {
 
   /** The write's effective merge-identity columns: the `keys` option
     * validated against (and defaulted from) the keys the table's
-    * manifest persists (format 4). An existing table's keys are part
+    * manifest persists. An existing table's keys are part
     * of its physical layout — rows bucket by their hash — so a write
     * under DIFFERENT keys would scatter updates across wrong buckets
     * and silently duplicate identities; it fails fast here instead.

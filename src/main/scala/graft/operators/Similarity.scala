@@ -118,7 +118,7 @@ object Similarity {
     // NOT a memory bound: the size filter runs after the aggregation,
     // so a hot bucket's whole member set is built first, in one
     // collect_set buffer that cannot spill — a skewed bucket can OOM
-    // its task. A bounded bucket-pair primitive is ROADMAP item 2.
+    // its task. A bounded bucket-pair primitive is ROADMAP item 5.
     val grouped = Parallelize.ensure(corpus).select(col(idCol).as("neighbor_id"),
         posexplode(tableBuckets(col(vecCol), tables)).as(Seq("table_idx", "bucket")))
       .groupBy(col("table_idx"), col("bucket"))

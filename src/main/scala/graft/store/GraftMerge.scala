@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   *
   * Semantics mirror ANSI/Delta MERGE:
   *   - the join is ALWAYS on the table's merge-identity keys (the
-  *     manifest's persisted keys, or `onKeys` for pre-format-4
-  *     tables) — graft is a keyed format, so ON is the identity, not
-  *     an arbitrary predicate;
+  *     manifest's persisted keys, or `onKeys` for a keyless table —
+  *     one created with `keys = Nil`) — graft is a keyed format, so ON
+  *     is the identity, not an arbitrary predicate;
   *   - for each matched (target, source) pair the FIRST matched
   *     clause whose condition holds applies (update = replace the
   *     target row with the source row's target-schema projection,
@@ -59,8 +59,9 @@ object GraftMerge {
 
     def using(df: DataFrame): MergeBuilder = { source = Some(df); this }
 
-    /** Override the merge identity — only for tables whose manifest
-      * predates persisted keys; on a format-4 table a mismatch fails.
+    /** Declare the merge identity of a keyless table (created with
+      * `keys = Nil`); on a keyed table a mismatch with the persisted
+      * keys fails.
       */
     def onKeys(keys: String*): MergeBuilder = { explicitKeys = keys.toSeq; this }
 
@@ -102,7 +103,7 @@ object GraftMerge {
           persisted
         } else {
           require(explicitKeys.nonEmpty,
-            s"table at $root predates persisted keys: declare .onKeys(...)")
+            s"table at $root has no persisted keys: declare .onKeys(...)")
           explicitKeys
         }
 

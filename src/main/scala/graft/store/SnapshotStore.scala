@@ -345,16 +345,16 @@ object SnapshotStore {
     * reclaims folded sidecar files. A key's tombstone lives in the
     * bucket the key hashes to, so the read-side anti-join on the key
     * columns alone is exact.
-    * `rows` is the exact PHYSICAL row count of the bucket's data files
-    * (format 4; None for entries written before it). Outstanding
-    * `tombstones` make the LOGICAL count smaller, so consumers
-    * (COUNT(*) pushdown, reported statistics) must treat `rows` as
-    * exact only when `tombstones.isEmpty`, else an upper bound.
+    * `rows` is the exact PHYSICAL row count of the bucket's data
+    * files. Outstanding `tombstones` make the LOGICAL count smaller, so
+    * consumers (COUNT(*) pushdown, reported statistics) must treat
+    * `rows` as exact only when `tombstones.isEmpty`, else an upper
+    * bound.
     */
   final case class BucketEntry(dir: String, stats: Seq[Option[(String, String)]],
-                               fileStats: Map[String, Seq[Option[(String, String)]]] = Map.empty,
-                               tombstones: Seq[String] = Nil,
-                               rows: Option[Long] = None)
+                               fileStats: Map[String, Seq[Option[(String, String)]]],
+                               tombstones: Seq[String],
+                               rows: Long)
 
   /** The `buckets` a delta hashes into under a `numBuckets` layout —
     * what a caller's census hands [[commitDelta]] as its
@@ -369,21 +369,20 @@ object SnapshotStore {
     *   Delta-txn-appId pattern making at-least-once `foreachBatch`
     *   redelivery a no-op instead of a double-apply
     * @param keys the table's merge-identity (bucketing) columns,
-    *   persisted since format 4 so SQL writers (`INSERT INTO` has no
-    *   options channel) and key-validation don't depend on every
-    *   caller re-supplying them; Nil on pre-format-4 tables
+    *   persisted so SQL writers (`INSERT INTO` has no options channel)
+    *   and key-validation don't depend on every caller re-supplying
+    *   them; Nil on a keyless table
     * @param commitTsMillis the commit's own wall-clock instant,
     *   recorded IN the manifest (monotonic per table: max(now,
     *   prev+1)) so `TIMESTAMP AS OF` resolves from durable metadata
-    *   instead of copy-fragile file mtimes; -1 on pre-format-4
-    *   manifests (readers fall back to the manifest file's mtime)
+    *   instead of copy-fragile file mtimes
     */
   final case class Manifest(version: Long, numBuckets: Int,
                             statsCols: Seq[(String, String)],
                             txns: Map[String, Long],
                             buckets: Map[Int, BucketEntry],
-                            keys: Seq[String] = Nil,
-                            commitTsMillis: Long = -1L)
+                            keys: Seq[String],
+                            commitTsMillis: Long)
 
   private def fileSystem(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1441,35 +1440,28 @@ object SnapshotStore {
     versions(spark, root).lastOption
 
   /** The commit instant of version `v`: the manifest's own in-commit
-    * `ts:` line (format 4 — monotonic per table by construction, even
-    * under wall-clock skew between committers), falling back to the
-    * commit file's mtime for manifests written before format 4.
-    * Header-only read — O(1) lines, no state reconstruction.
+    * `ts:` line (monotonic per table by construction, even under
+    * wall-clock skew between committers). Header-only read — O(1)
+    * lines, no state reconstruction. A manifest without one is refused.
     */
   def commitTimeMillis(spark: SparkSession, root: String, v: Long): Long = {
-    val fs = fileSystem(spark, root)
-    val p = manifestPath(root, v)
     val in = new BufferedReader(new InputStreamReader(
-      fs.open(p), StandardCharsets.UTF_8))
-    try {
-      // ts: sits in the first three header lines; scan a few extra in
-      // case the header ever grows, then give up to the mtime fallback
-      var i = 0
-      var line = in.readLine()
-      while (line != null && i < 8) {
-        if (line.startsWith("ts:")) return line.stripPrefix("ts:").trim.toLong
-        i += 1; line = in.readLine()
-      }
-    } finally in.close()
-    fs.getFileStatus(p).getModificationTime
+      fileSystem(spark, root).open(manifestPath(root, v)), StandardCharsets.UTF_8))
+    // ts: sits in the first three header lines; scan a few extra in
+    // case the header ever grows
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).take(8)
+      .collectFirst { case l if l.startsWith("ts:") => l.stripPrefix("ts:").trim.toLong }
+      .getOrElse(throw new IllegalStateException(
+        s"manifest for version $v at $root has no ts: header line; this " +
+          s"reader understands format $ManifestFormat only — refusing to misread it"))
+    finally in.close()
   }
 
   /** Newest version committed at or before `tsMillis` — the
     * `TIMESTAMP AS OF` resolution rule (Delta's). Binary search over
     * the monotone in-commit timestamps: O(log versions) header reads,
     * correct even when commit-file mtimes are skewed (copies,
-    * migrations, touch) because mtime is only the pre-format-4
-    * fallback.
+    * migrations, touch), because no file mtime is consulted.
     */
   def versionAt(spark: SparkSession, root: String, tsMillis: Long): Option[Long] = {
     val vs = versions(spark, root)
@@ -1492,56 +1484,49 @@ object SnapshotStore {
   /** Manifest format (line-oriented, tab-separated, values URL-encoded):
     * {{{
     *   buckets:<n>
-    *   format:<v>                  (format marker; absent = format 2)
+    *   format:<v>                  (format marker, always 5)
+    *   ts:<epochMillis>            (commit wall-clock instant,
+    *                                monotonic per table)
+    *   epoch:1                     (this version STARTS a contract
+    *                                epoch — a REPLACE or a cross-epoch
+    *                                restore; its committer swaps
+    *                                `_schema`/`_props`/ledger after the
+    *                                manifest commit and stamps
+    *                                `graft.schema.epoch` to this version
+    *                                as the swap's LAST step, so
+    *                                flag+stamp together certify the
+    *                                swap completed)
     *   delta:<base>                (delta manifests: entries below are a
     *                                DELTA on version <base> = this-1)
-    *   keys:<k1>,<k2>,...          (format 4: the table's merge-identity
-    *                                columns, URL-encoded)
-    *   ts:<epochMillis>            (format 4: commit wall-clock instant,
-    *                                monotonic per table)
+    *   keys:<k1>,<k2>,...          (the table's merge-identity columns,
+    *                                URL-encoded; absent on a keyless table)
     *   stats:<name>:<tag>,...      (absent when no stats cols declared)
     *   txn:<writerId>\t<batchId>   (0..many; always the FULL map)
     *   <bucket>\t<dir>[\t<min>,<max>,<min>,<max>,...]
     *   fstats:<bucket>\t<fileName>\t<min>,<max>,...   (0..many, after their bucket line)
-    *   rows:<bucket>\t<n>           (format 4: bucket row count, exact
-    *                                 as of the bucket's last rewrite)
-    *   epoch:1                      (format 5: this version STARTS a
-    *                                 contract epoch — a REPLACE or a
-    *                                 cross-epoch restore; its committer
-    *                                 swaps `_schema`/`_props`/ledger
-    *                                 after the manifest commit and
-    *                                 stamps `graft.schema.epoch` to
-    *                                 this version as the swap's LAST
-    *                                 step, so flag+stamp together
-    *                                 certify the swap completed)
+    *   rows:<bucket>\t<n>           (bucket row count, exact as of the
+    *                                 bucket's last rewrite)
     *   tomb:<bucket>\t<dir>         (0..many, one per unfolded delete sidecar)
     *   del:<bucket>                 (delta manifests: bucket removed vs base)
     *   end:<token>:<lineCount>
     * }}}
     *
-    * Format 2 = FULL state (every bucket listed — what every commit
-    * wrote before delta manifests). Format 3 = a delta on its
-    * predecessor: only the buckets the commit changed (listed with
-    * their complete entry: dir + stats + fstats + tombs) plus `del:`
-    * removals — so commit METADATA cost is O(touched buckets' files),
-    * not O(table files); at 10⁵–10⁶ files per table, full per-commit
-    * manifests are the first real 100× bottleneck. State is
-    * reconstructed by [[readManifest]] from the nearest full base
-    * (a columnar CHECKPOINT — parquet snapshot of the whole state
-    * written every [[checkpointInterval]] commits — or a full
-    * manifest, v0 at worst) plus the delta chain above it.
-    * Format 5 adds the `epoch:` line (a new line TYPE, so every
-    * manifest declares format 5 going forward).
+    * A manifest without `delta:` is the FULL state (every bucket
+    * listed). A delta manifest lists only the buckets its commit
+    * changed (each with its complete entry: dir + stats + fstats +
+    * rows + tombs) plus `del:` removals — so commit METADATA cost is
+    * O(touched buckets' files), not O(table files); at 10⁵–10⁶ files
+    * per table, full per-commit manifests are the first real 100×
+    * bottleneck. State is reconstructed by [[readManifest]] from the
+    * nearest full base (a columnar CHECKPOINT — parquet snapshot of the
+    * whole state written every [[checkpointInterval]] commits — or a
+    * full manifest, v0 at worst) plus the delta chain above it.
     *
-    * The `format:` marker exists so any backward-incompatible change
-    * is detectable instead of silently misread: readers reject
-    * manifests with a format ABOVE what they understand. Absent
-    * marker = format 2. A format-2-only reader REJECTS delta
-    * manifests rather than misreading a delta as a (shrunken) full
-    * state — exactly the failure the marker is for. Format 4 adds the
-    * `keys:` / `ts:` / `rows:` lines (new line TYPES an older parser
-    * would misread as bucket entries), so every manifest carrying them
-    * — full and delta alike — declares format 4.
+    * The `format:` marker exists so a manifest this reader does not
+    * understand is refused instead of silently misread: a manifest
+    * with no marker, or with any format other than
+    * [[ManifestFormat]], fails [[parseManifestFile]] with an error
+    * naming its version and format.
     */
   private val ManifestFormat = 5
 
@@ -1558,9 +1543,9 @@ object SnapshotStore {
                                        entries: Map[Int, BucketEntry],
                                        deleted: Set[Int],
                                        deltaBase: Option[Long],
-                                       keys: Seq[String] = Nil,
-                                       commitTsMillis: Long = -1L,
-                                       epochStart: Boolean = false)
+                                       keys: Seq[String],
+                                       commitTsMillis: Long,
+                                       epochStart: Boolean)
 
   private[store] def parseStats(s: String): Seq[Option[(String, String)]] =
     if (s.isEmpty) Seq.empty
@@ -1575,14 +1560,18 @@ object SnapshotStore {
     try {
       val header = in.readLine() // "buckets:<n>"
       val numBuckets = header.stripPrefix("buckets:").trim.toInt
+      def refuse(why: String) = new IllegalStateException(
+        s"manifest for version $v at $root $why; this reader understands " +
+          s"format $ManifestFormat only — refusing to misread it")
       var statsCols = Seq.empty[(String, String)]
       var complete = false
+      var marked = false
       var deltaBase: Option[Long] = None
       var keys = Seq.empty[String]
-      var commitTs = -1L
+      var commitTs: Option[Long] = None
       var epochStart = false
       val txns = mutable.Map.empty[String, Long]
-      val entries = mutable.Map.empty[Int, BucketEntry]
+      val entries = mutable.Map.empty[Int, (String, Seq[Option[(String, String)]])]
       val deleted = mutable.Set.empty[Int]
       val fstats = mutable.Map.empty[Int, mutable.Map[String, Seq[Option[(String, String)]]]]
       val rowCounts = mutable.Map.empty[Int, Long]
@@ -1592,16 +1581,15 @@ object SnapshotStore {
         .foreach {
           case l if l.startsWith("format:") =>
             val f = l.stripPrefix("format:").trim.toInt
-            if (f > ManifestFormat) throw new IllegalStateException(
-              s"manifest for version $v at $root is format $f; this " +
-                s"reader understands up to $ManifestFormat — refusing to misread it")
+            if (f != ManifestFormat) throw refuse(s"is format $f")
+            marked = true
           case l if l.startsWith("delta:") =>
             deltaBase = Some(l.stripPrefix("delta:").trim.toLong)
           case l if l.startsWith("keys:") =>
             keys = l.stripPrefix("keys:").split(",").toSeq
               .filter(_.nonEmpty).map(dec)
           case l if l.startsWith("ts:") =>
-            commitTs = l.stripPrefix("ts:").trim.toLong
+            commitTs = Some(l.stripPrefix("ts:").trim.toLong)
           case l if l.startsWith("epoch:") =>
             epochStart = l.stripPrefix("epoch:").trim == "1"
           case l if l.startsWith("rows:") =>
@@ -1631,19 +1619,20 @@ object SnapshotStore {
             val parts = l.split("\t", 3)
             val stats = if (parts.length < 3 || parts(2).isEmpty) Seq.empty
               else parseStats(parts(2))
-            entries(parts(0).toInt) = BucketEntry(parts(1), stats)
+            entries(parts(0).toInt) = (parts(1), stats)
         }
       if (!complete)
         throw new IllegalStateException(
           s"manifest for version $v at $root has no terminator — " +
             "written by a crashed committer; it is not a committed version")
-      val withF = entries.map { case (b, e) =>
-        b -> e.copy(fileStats = fstats.get(b).map(_.toMap).getOrElse(Map.empty),
-          tombstones = tombs.get(b).map(_.toSeq).getOrElse(Nil),
-          rows = rowCounts.get(b))
+      if (!marked) throw refuse("has no format: marker (format 2)")
+      val withF = entries.map { case (b, (dir, stats)) =>
+        b -> BucketEntry(dir, stats, fstats.get(b).map(_.toMap).getOrElse(Map.empty),
+          tombs.get(b).map(_.toSeq).getOrElse(Nil),
+          rowCounts.getOrElse(b, throw refuse(s"has no rows: line for bucket $b")))
       }
-      RawManifest(v, numBuckets, statsCols, txns.toMap, withF.toMap,
-        deleted.toSet, deltaBase, keys, commitTs, epochStart)
+      RawManifest(v, numBuckets, statsCols, txns.toMap, withF.toMap, deleted.toSet,
+        deltaBase, keys, commitTs.getOrElse(throw refuse("has no ts: line")), epochStart)
     } finally in.close()
   }
 
@@ -1741,8 +1730,7 @@ object SnapshotStore {
       }
       val m = deltas.foldLeft(base.get) { (acc, d) =>
         Manifest(d.version, d.numBuckets, d.statsCols, d.txns,
-          (acc.buckets -- d.deleted) ++ d.entries,
-          if (d.keys.nonEmpty) d.keys else acc.keys, d.commitTsMillis)
+          (acc.buckets -- d.deleted) ++ d.entries, d.keys, d.commitTsMillis)
       }
       val result = m.copy(version = v)
       cachePut(fs, root, result)
@@ -1844,7 +1832,7 @@ object SnapshotStore {
         e.fileStats.toSeq.sortBy(_._1).map { case (n, st) =>
           ("fstat", b, enc(n), "", encStats(st))
         } ++
-        e.rows.map(n => ("rows", b, "", n.toString, "")) ++
+        Seq(("rows", b, "", e.rows.toString, "")) ++
         e.tombstones.map(d => ("tomb", b, "", d, ""))
     }
     // one writer task: the checkpoint is metadata-sized relative to
@@ -1979,7 +1967,7 @@ object SnapshotStore {
       val b = r.getInt(1)
       b -> BucketEntry(r.getString(3), parseStats(r.getString(4)),
         fstats.getOrElse(b, Map.empty), tombs.getOrElse(b, Nil),
-        rowCounts.get(b))
+        rowCounts(b))
     }.toMap
     Some(Manifest(v, metas("numBuckets").toInt,
       metas("statsCols").split(",").toSeq.filter(_.nonEmpty).map { part =>
@@ -1988,8 +1976,8 @@ object SnapshotStore {
       },
       kind("txn").map(r => dec(r.getString(2)) -> r.getString(3).toLong).toMap,
       buckets,
-      metas.getOrElse("keys", "").split(",").toSeq.filter(_.nonEmpty).map(dec),
-      metas.getOrElse("commitTs", "-1").toLong))
+      metas("keys").split(",").toSeq.filter(_.nonEmpty).map(dec),
+      metas("commitTs").toLong))
   }
 
   /** The terminator token of a manifest file, or None when the file is
@@ -2203,9 +2191,8 @@ object SnapshotStore {
       val files = e.fileStats.toSeq.sortBy(_._1).map { case (name, st) =>
         s"fstats:$b\t${enc(name)}\t${encStats(st)}"
       }
-      val rows = e.rows.map(n => s"rows:$b\t$n").toSeq
       val tombs = e.tombstones.map(d => s"tomb:$b\t$d")
-      (main +: files) ++ rows ++ tombs
+      (main +: files :+ s"rows:$b\t${e.rows}") ++ tombs
     }
     val epochLine = if (epochStart) Seq("epoch:1") else Seq.empty
     val bodyLines = Seq(s"buckets:$numBuckets", s"format:$ManifestFormat",
@@ -3064,7 +3051,7 @@ object SnapshotStore {
     bucketNames.map { name =>
       val b = name.stripPrefix(s"$BucketCol=").toInt
       b -> BucketEntry(s"$rel/$name", stats.getOrElse(b, statsCols.map(_ => None)),
-        fstats.getOrElse(b, Map.empty), rows = counts.get(b))
+        fstats.getOrElse(b, Map.empty), Nil, counts.getOrElse(b, 0L))
     }.toMap
   }
 
@@ -3184,7 +3171,7 @@ object SnapshotStore {
     * an empty-projection count over partitioned parquet, which the
     * vectorized reader answers from footer row counts alone (no data
     * pages) — O(files) metadata, not O(rows). Feeds the manifest's
-    * format-4 `rows:` lines (COUNT(*) pushdown / reported statistics).
+    * `rows:` lines (COUNT(*) pushdown / reported statistics).
     * An attempt dir with NO bucket partitions (a tombstone fold that
     * emptied every rewritten bucket writes only _SUCCESS) counts as
     * empty — `read.parquet` on it would fail schema inference.
@@ -5129,7 +5116,7 @@ object SnapshotStore {
     * and it sits in the manifest HEADER (line 4 at deepest), so this
     * is an O(1)-lines read like [[commitTimeMillis]] — `meta_history`
     * calls it per version, and [[awaitContractQuiescence]] scans with
-    * it. False for pre-format-5 history and missing manifests.
+    * it. False for missing manifests.
     */
   def isEpochStart(spark: SparkSession, root: String, v: Long): Boolean = {
     val fs = fileSystem(spark, root)
@@ -5644,32 +5631,22 @@ object SnapshotStore {
     *    can never regress a rival's higher committed floor the way a
     *    shared overwritten file could. Sub-max files are swept as
     *    hygiene.
-    *
-    * The legacy single `_floor` file is still READ (pre-R16 tables)
-    * but no longer written; hygiene removes it once a `_floorv-` at or
-    * above its value exists.
     */
-  private val FloorMarkerName = "_floor"
   private val FloorValuePrefix = "_floorv-"
   private val FloorIntentPrefix = "_floor_intent-"
 
-  /** The durably COMMITTED floor only (legacy `_floor` + `_floorv-*`),
-    * without live intents — the monotonicity baseline a new sweep
-    * compares its keepFrom against to decide whether floor markers
-    * need writing at all.
+  /** The durably COMMITTED floor only (the max `_floorv-*`), without
+    * live intents — the monotonicity baseline a new sweep compares its
+    * keepFrom against to decide whether floor markers need writing at
+    * all.
     */
-  private def durableVacuumFloor(fs: FileSystem, root: String): Long = {
-    val legacy = smallFileText(fs, new Path(commitsDir(root), FloorMarkerName))
-      .flatMap(_.trim.toLongOption).getOrElse(-1L)
-    val durable =
-      (try fs.listStatus(commitsDir(root)).toSeq
-       catch { case _: java.io.FileNotFoundException => Nil })
-        .map(_.getPath.getName)
-        .filter(_.startsWith(FloorValuePrefix))
-        .flatMap(_.stripPrefix(FloorValuePrefix).toLongOption)
-        .maxOption.getOrElse(-1L)
-    math.max(legacy, durable)
-  }
+  private def durableVacuumFloor(fs: FileSystem, root: String): Long =
+    (try fs.listStatus(commitsDir(root)).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil })
+      .map(_.getPath.getName)
+      .filter(_.startsWith(FloorValuePrefix))
+      .flatMap(_.stripPrefix(FloorValuePrefix).toLongOption)
+      .maxOption.getOrElse(-1L)
 
   /** The EFFECTIVE floor restore/tag/clone targets are checked against:
     * the durable committed floor, stretched by any live (younger than
@@ -5948,8 +5925,7 @@ object SnapshotStore {
       // the max (readers take the max, so removing a lower value can
       // never lower the observed floor); a crashed sweep's aged intent
       // is already ignored by readers (> ReclaimGraceMs) and reclaimed
-      // here; the legacy overwritten `_floor` file retires once a
-      // `_floorv-` at/above its value exists.
+      // here.
       val floorSts = fs.listStatus(commitsDir(root)).toSeq
       val floorVals = floorSts.map(_.getPath.getName)
         .filter(_.startsWith(FloorValuePrefix))
@@ -5961,10 +5937,7 @@ object SnapshotStore {
           n.stripPrefix(FloorValuePrefix).toLongOption.exists(_ < floorMax)
         val agedIntent = n.startsWith(FloorIntentPrefix) &&
           st.getModificationTime < System.currentTimeMillis() - ReclaimGraceMs
-        val retiredLegacy = n == FloorMarkerName &&
-          smallFileText(fs, st.getPath).flatMap(_.trim.toLongOption)
-            .exists(_ <= floorMax)
-        if (subMaxDurable || agedIntent || retiredLegacy)
+        if (subMaxDurable || agedIntent)
           try { fs.delete(st.getPath, false): Unit }
           catch { case _: java.io.IOException => () }
       }

@@ -1,17 +1,14 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
 
-/** Manifest format 4: per-bucket `rows:` counts, in-commit `ts:`
-  * timestamps (TIMESTAMP AS OF resolution), persisted `keys:`, the
-  * tombstone-fold threshold, and reading pre-format-4 tables.
+/** Manifest lines added in format 4: per-bucket `rows:` counts,
+  * in-commit `ts:` timestamps (TIMESTAMP AS OF resolution), persisted
+  * `keys:`, and the tombstone-fold threshold.
   */
 class Format4Spec extends SparkSpec {
   import spark.implicits._
@@ -30,9 +27,7 @@ class Format4Spec extends SparkSpec {
     def assertExact(v: Long): Unit = {
       val m = SnapshotStore.readManifest(spark, root, v)
       assert(m.buckets.nonEmpty)
-      assert(m.buckets.values.forall(_.rows.isDefined),
-        s"v$v: every bucket entry should carry rows")
-      assert(m.buckets.values.map(_.rows.get).sum ==
+      assert(m.buckets.values.map(_.rows).sum ==
         SnapshotStore.readVersion(spark, root, v).count(),
         s"v$v: manifest rows must sum to the table count")
     }
@@ -41,10 +36,7 @@ class Format4Spec extends SparkSpec {
     SnapshotStore.commitDelta(spark, root,
       Seq((1L, "x"), (300L, "n")).toDF("k", "v"), Seq("k"),
       SnapshotStore.upsertMerge(Seq("k")))
-    assertExact(1L)
-    // untouched buckets carried their v0 entries — rows survive the carry
-    val m1 = SnapshotStore.readManifest(spark, root, 1L)
-    assert(m1.buckets.values.forall(_.rows.isDefined))
+    assertExact(1L) // untouched buckets carried their v0 entries — rows survive the carry
 
     // force a fragmented bucket (two sidecar-free files) then compact:
     // the rewritten entry must carry a FRESH count
@@ -64,13 +56,13 @@ class Format4Spec extends SparkSpec {
       SnapshotStore.latestVersion(spark, root).get)
     // physical rows unchanged (sidecars, not rewrites) — consumers must
     // gate exactness on tombstones.isEmpty
-    assert(m.buckets.values.map(_.rows.get).sum == 100L)
+    assert(m.buckets.values.map(_.rows).sum == 100L)
     assert(m.buckets.values.exists(_.tombstones.nonEmpty))
     SnapshotStore.compact(spark, root, minFiles = 2) // folds the deletes
     val mc = SnapshotStore.readManifest(spark, root,
       SnapshotStore.latestVersion(spark, root).get)
     assert(mc.buckets.values.forall(_.tombstones.isEmpty))
-    assert(mc.buckets.values.map(_.rows.get).sum == 60L)
+    assert(mc.buckets.values.map(_.rows).sum == 60L)
     assert(SnapshotStore.read(spark, root).count() == 60L)
   }
 
@@ -101,50 +93,6 @@ class Format4Spec extends SparkSpec {
     assert(SnapshotStore.versionAt(spark, root, System.currentTimeMillis())
       .contains(1L))
     assert(SnapshotStore.versionAt(spark, root, t0 - 10).isEmpty)
-  }
-
-  test("a pre-format-4 table (no keys/ts/rows lines) reads and upgrades cleanly") {
-    val root = tmpDir("compat")
-    SnapshotStore.init(spark, root,
-      (1L to 50L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numBuckets = 2)
-    SnapshotStore.commitDelta(spark, root,
-      Seq((1L, "x")).toDF("k", "v"), Seq("k"),
-      SnapshotStore.upsertMerge(Seq("k")))
-
-    // rewrite both manifests as a format-3 writer would have:
-    // strip the format-4 lines, restamp the format marker, fix the
-    // terminator's line count
-    val f = fs(root)
-    Seq(0L, 1L).foreach { v =>
-      val p = new Path(root, f"_commits/$v%020d")
-      val lines = scala.io.Source.fromInputStream(f.open(p), "UTF-8")
-        .getLines().toSeq
-      val kept = lines.filterNot(l => l.startsWith("keys:") ||
-        l.startsWith("ts:") || l.startsWith("rows:") || l.startsWith("end:"))
-        .map(l => if (l.startsWith("format:")) "format:3" else l)
-      val token = lines.last.stripPrefix("end:").split(":", 2)(0)
-      val body = kept.mkString("", "\n", "\n") + s"end:$token:${kept.size}\n"
-      f.delete(p, false)
-      val out = f.create(p, false)
-      try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    }
-
-    // reads fine: state identical, keys absent, commitTs falls back to mtime
-    val m = SnapshotStore.readManifest(spark, root, 1L)
-    assert(m.keys.isEmpty && m.commitTsMillis == -1L)
-    assert(m.buckets.values.forall(_.rows.isEmpty))
-    assert(SnapshotStore.read(spark, root).count() == 50L)
-    assert(SnapshotStore.versionAt(spark, root, System.currentTimeMillis())
-      .contains(1L)) // mtime fallback still resolves
-
-    // an upgrade commit on top re-persists keys and starts ts/rows fresh
-    SnapshotStore.commitDelta(spark, root,
-      Seq((51L, "y")).toDF("k", "v"), Seq("k"),
-      SnapshotStore.upsertMerge(Seq("k")))
-    val m2 = SnapshotStore.readManifest(spark, root, 2L)
-    assert(m2.keys == Seq("k"))
-    assert(m2.commitTsMillis > 0)
-    assert(SnapshotStore.read(spark, root).count() == 51L)
   }
 
   test("tombstoneFoldBytes: under the threshold maintain leaves sidecars, past it folds") {

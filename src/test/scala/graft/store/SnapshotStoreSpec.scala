@@ -735,29 +735,28 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(vs(SnapshotStore.read(spark, root)) === Set("a", "b"))
   }
 
-  test("manifest format marker: a future format is rejected, a legacy marker-less one parses") {
+  test("manifest format marker: a marker-less, format-4 or future manifest is refused, naming version and format") {
     val root = tmpDir("format")
     val v0 = (1L to 40L).map(k => (k, s"v$k", k)).toDF("k", "v", "ts")
     SnapshotStore.init(spark, root, v0, Seq("k"), numBuckets = 2, statsCols = Seq("ts"))
-    val p0 = Paths.get(root, "_commits", f"${0L}%020d")
-    val lines = Files.readAllLines(p0).toArray.map(_.toString).toSeq
-
-    // legacy manifest (r4 format: no format: line): strip the marker,
-    // fix the terminator's line count — must parse identically
-    val legacyBody = lines.filterNot(_.startsWith("format:")).dropRight(1)
-    val endParts = lines.last.split(":")
-    val legacy = legacyBody :+ s"end:${endParts(1)}:${legacyBody.size}"
-    val p1 = Paths.get(root, "_commits", f"${1L}%020d")
-    Files.write(p1, String.join("\n", legacy: _*).concat("\n").getBytes)
-    val m1 = SnapshotStore.readManifest(spark, root, 1L)
-    assert(m1.buckets.mapValues(_.dir).toMap ==
-      SnapshotStore.readManifest(spark, root, 0L).buckets.mapValues(_.dir).toMap)
-
-    // future format: refuse to misread
-    val p2 = Paths.get(root, "_commits", f"${2L}%020d")
-    Files.write(p2, "buckets:2\nformat:99\nend:tok:2\n".getBytes)
-    val e = intercept[IllegalStateException](SnapshotStore.readManifest(spark, root, 2L))
-    assert(e.getMessage.contains("format 99"))
+    val lines = Files.readAllLines(Paths.get(root, "_commits", f"${0L}%020d"))
+      .toArray.map(_.toString).toSeq
+    val token = lines.last.split(":")(1)
+    val body = lines.dropRight(1)
+    // v0's body committed as version v, with a fixed terminator line count
+    def commitAs(v: Long, body: Seq[String]): Unit =
+      Files.write(Paths.get(root, "_commits", f"$v%020d"),
+        (body :+ s"end:$token:${body.size}").mkString("", "\n", "\n").getBytes)
+    def stamped(f: String) = body.map(l => if (l.startsWith("format:")) s"format:$f" else l)
+    commitAs(1L, body.filterNot(_.startsWith("format:"))) // as a pre-marker writer left it
+    commitAs(2L, stamped("4"))
+    commitAs(3L, stamped("99"))
+    Seq(1L -> "no format: marker (format 2)", 2L -> "is format 4", 3L -> "is format 99")
+      .foreach { case (v, what) =>
+        val e = intercept[IllegalStateException](SnapshotStore.readManifest(spark, root, v))
+        assert(e.getMessage.contains(s"version $v") && e.getMessage.contains(what), e.getMessage)
+      }
+    assert(SnapshotStore.readManifest(spark, root, 0L).buckets.values.map(_.rows).sum == 40L)
   }
 
   test("failRules validate inside the attempt-dir write: abort before visibility, no extra scan") {

@@ -108,10 +108,10 @@ class VacuumFloorSpec extends SparkSpec {
       s"aged intent not swept: ${commitNames(root)}")
   }
 
-  test("durable floor is the max of value files; hygiene keeps only the max and retires the legacy _floor") {
+  test("durable floor is the max of value files; hygiene keeps only the max") {
     val root = threeVersions()
     val fs = fsOf(root)
-    Seq("_floorv-1" -> "1\n", "_floorv-2" -> "2\n", "_floor" -> "1\n")
+    Seq("_floorv-1" -> "1\n", "_floorv-2" -> "2\n")
       .foreach { case (n, body) =>
         val out = fs.create(new Path(root, s"_commits/$n"), true)
         out.write(body.getBytes("UTF-8")); out.close()
@@ -122,8 +122,6 @@ class VacuumFloorSpec extends SparkSpec {
     val names = commitNames(root)
     assert(names.contains("_floorv-2"), s"max durable floor lost: $names")
     assert(!names.contains("_floorv-1"), s"sub-max floor file kept: $names")
-    assert(!names.contains("_floor"),
-      s"legacy _floor must retire once subsumed: $names")
     assert(SnapshotStore.vacuumFloor(spark, root) == 2L)
   }
 }

@@ -71,7 +71,7 @@ class VacuumMinAgeSpec extends SparkSpec {
     val fs = fsOf(root)
     // simulate the mid-sweep window: the floor marker is committed but
     // the below-floor manifests still linger in the listing
-    val out = fs.create(new Path(root, "_commits/_floor"), true)
+    val out = fs.create(new Path(root, "_commits/_floorv-2"), true)
     out.write("2\n".getBytes("UTF-8")); out.close()
     val e = intercept[java.util.ConcurrentModificationException] {
       SnapshotStore.restore(spark, root, 0L)

@@ -18,7 +18,7 @@ import graft.store.SnapshotStore
   * superlinear term (driver-side loop, skew cliff, quadratic
   * candidate set) that sf0.1 was too small to expose.
   *
-  * Usage: runMain graft.tools.Soak [scale] [workDir] [outJson]
+  * Usage: Test/runMain graft.tools.Soak [scale] [workDir] [outJson]
   */
 object Soak {
   def main(args: Array[String]): Unit = {

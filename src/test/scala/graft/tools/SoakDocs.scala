@@ -38,7 +38,7 @@ import graft.streaming.StreamPipeline
   *    costs a broadcast, never state.
   *
   * Emits one JSON line (SOAK_r14.json by default). Usage:
-  *   runMain graft.tools.SoakDocs [scale] [workDir] [outJson]
+  *   Test/runMain graft.tools.SoakDocs [scale] [workDir] [outJson]
   */
 object SoakDocs {
   def main(args: Array[String]): Unit = {

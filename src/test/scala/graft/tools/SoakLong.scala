@@ -30,7 +30,7 @@ import graft.store.SnapshotStore
   *    commits (every writer's last round fully present, row count
   *    exact)?
   *
-  * Usage: runMain graft.tools.SoakLong [workDir] [outJson] [rounds] [arbiter]
+  * Usage: Test/runMain graft.tools.SoakLong [workDir] [outJson] [rounds] [arbiter]
   *   (reads /root/testdata/sf0.01/orders.parquet as the base corpus;
   *   4th arg "arbiter" routes EVERY exclusive-create claim through an
   *   [[graft.store.InMemoryClaimArbiter]] — the plain-PUT commit-row

@@ -29,7 +29,7 @@ import graft.store.SnapshotStore
   * overhead (a data-freeing sweep's serialization commit vs a
   * converged no-op sweep).
   *
-  * Usage: runMain graft.tools.SoakOcc [workDir] [outJson]
+  * Usage: Test/runMain graft.tools.SoakOcc [workDir] [outJson]
   *   (reads /root/testdata/sf0.01/orders.parquet as the base corpus)
   */
 object SoakOcc {

@@ -33,7 +33,7 @@ import graft.sources.DataGen
   * ride the counters — wall-clock on a shared box is noise-bound.
   *
   * Emits one JSON line (SOAK_r15.json by default). Usage:
-  *   runMain graft.tools.SoakScale [scaleA] [scaleB] [workDir] [outJson]
+  *   Test/runMain graft.tools.SoakScale [scaleA] [scaleB] [workDir] [outJson]
   */
 object SoakScale {
   def main(args: Array[String]): Unit = {
