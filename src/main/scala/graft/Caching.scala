@@ -13,8 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * their returned plan references more than once (AQE's broadcast
   * conversion can break ReuseExchange subtree identity, re-running the
   * whole signature pipeline per reference). (lshTopK and
-  * embeddingNearDupsLsh stopped persisting in r19 — their set-based
-  * candidate generation references the fan-out exactly once.)
+  * embeddingNearDupsLsh persist nothing: [[operators.Buckets]]
+  * references their fan-out exactly once.)
   * Because the operator returns a LAZY frame, it cannot unpersist
   * before the caller's action — so every internal persist is
   * registered here, and callers release them all with ONE call:

@@ -55,9 +55,8 @@ object QueriesData {
     val docs = Tables.documents(s, d)
     // ONE shingle expansion serves both the signature pass and the
     // exact verify pass (min over distinct hashes == min over all).
-    // The banded form is NOT persisted since r19: candidatePairs
-    // references it exactly once (set-based pair generation), so the
-    // materialization pass the old self-join forced is gone.
+    // The banded form is not persisted: candidatePairs references it
+    // once (one shuffle on band_key into capped member sets).
     val hashes = Dedup.shingleHashes(docs, "text", "doc_id")
       .transform(graft.Caching.persistTracked(_))
     val bands = Dedup.minhashBandsFromHashes(hashes, "doc_id")
@@ -81,7 +80,7 @@ object QueriesData {
     val docs = Tables.documents(s, d)
     val hashes = Dedup.shingleHashes(docs, "text", "doc_id")
       .transform(graft.Caching.persistTracked(_))
-    // bands not persisted since r19 — single reference (see d04)
+    // bands not persisted — candidatePairs references them once (see d04)
     val bands = Dedup.minhashBandsFromHashes(hashes, "doc_id")
     val verified = Dedup.ngramJaccardFromHashes(
         Dedup.candidatePairs(bands, "doc_id"), hashes, "doc_id")

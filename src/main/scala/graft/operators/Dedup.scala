@@ -71,16 +71,6 @@ object Dedup {
         .map(r => sig.getItem(j * rowsPerBand + r))): _*))
     }: _*)
 
-  /** Documents annotated with MinHash signature + exploded band keys:
-    * (id, band_idx, band_key). Joining this to itself on band_key
-    * yields the near-dup candidate pairs.
-    *
-    * Implementation: explode shingles once and take the 64 minima in a
-    * single groupBy pass (map-side partial agg, one shuffle on the doc
-    * id). The pure-expression [[minhashSignature]] form is ~100×
-    * slower at scale because Catalyst's CollapseProject re-inlines the
-    * shingle expression into each of the 64 hash lanes.
-    */
   /** The corpus's DISTINCT shingle hashes, exploded to (id, __h) rows
     * — the shared narrow form both the MinHash signature pass and the
     * exact-Jaccard verify pass consume (min over distinct hashes
@@ -96,6 +86,16 @@ object Dedup {
       explode_outer(array_distinct(transform(
         TextFuncs.shingles(col(textCol), shingleSize), s => crc32(s)))).as("__h"))
 
+  /** Documents annotated with MinHash signature + exploded band keys:
+    * (id, band_idx, band_key). [[candidatePairs]] turns the docs that
+    * share a band_key into the near-dup candidate pairs.
+    *
+    * Implementation: explode shingles once and take the 64 minima in a
+    * single groupBy pass (map-side partial agg, one shuffle on the doc
+    * id). The pure-expression [[minhashSignature]] form is ~100×
+    * slower at scale because Catalyst's CollapseProject re-inlines the
+    * shingle expression into each of the 64 hash lanes.
+    */
   def minhashBands(df: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 64, bands: Int = 16,
                    shingleSize: Int = 3): DataFrame =
@@ -118,29 +118,20 @@ object Dedup {
       .select(col(idCol), posexplode(col("bks")).as(Seq("band_idx", "band_key")))
   }
 
-  /** Distinct candidate pairs (a < b) from shared band keys — the
-    * linear-ish LSH path: ONE shuffle on band_key (map-side-partial
-    * collect_set), pairs generated inside the reducer from each band's
-    * sorted member set, then the distinct.
-    *
-    * r19 (guide §2.3 aggregate before you shuffle, §2.4 remove
-    * shuffles outright): the former self-join shuffled/broadcast the
-    * band frame TWICE and — because `bandsDf` is typically the tail of
-    * the whole signature pipeline — forced callers to persist it so
-    * AQE's broadcast of one side couldn't re-run the pipeline. The set
-    * form references `bandsDf` exactly ONCE, so no persist pass is
-    * needed at all. Pair fan-out per band is quadratic in the band's
-    * member count in BOTH forms (that is LSH's candidate semantics);
-    * the set additionally bounds it by distinct members.
+  /** Bucket cap of the MinHash and embedding LSH candidate paths: a
+    * band or bucket with more distinct members is skipped: e.g. the
+    * sentinel band every shingle-less doc shares (its pairs all score
+    * `jaccard_e6 = 0`), or a band of more than 10,000 exact dups,
+    * which [[exactDupFlags]] finds in one shuffle.
+    */
+  val MaxBucketSize: Long = 10000L
+
+  /** Distinct candidate pairs (id_a < id_b) of docs sharing a band key
+    * ([[Buckets.pairs]], one shuffle on band_key); a band of more than
+    * [[MaxBucketSize]] docs yields no pair.
     */
   def candidatePairs(bandsDf: DataFrame, idCol: String): DataFrame =
-    bandsDf.groupBy(col("band_key"))
-      .agg(sort_array(collect_set(col(idCol))).as("__ids"))
-      .where(size(col("__ids")) > 1)
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"),
-        explode(filter(col("__ids"), x => x > col("id_a"))).as("id_b"))
-      .select("id_a", "id_b").distinct()
+    Buckets.pairs(bandsDf, Seq("band_key"), idCol, MaxBucketSize, "id_a", "id_b")
 
   /** Exact n-gram Jaccard verification for candidate pairs.
     * Jaccard is emitted as floor(1e6 * |∩| / |∪|) — integer-exact.
@@ -228,8 +219,8 @@ object Dedup {
     *
     * Returns (node, cluster_id) for every node appearing in `pairs`,
     * cluster_id = min node id of the component (deterministic).
-    */
-  /** @param reliable when true, rounds checkpoint to the session's
+    *
+    * @param reliable when true, rounds checkpoint to the session's
     *   reliable checkpoint dir (`sc.setCheckpointDir` must be set) —
     *   the 100 TB option: an executor loss mid-iteration recovers from
     *   the checkpoint files instead of killing the job. The default
@@ -393,22 +384,30 @@ object Dedup {
   def embeddingNearDups(emb: DataFrame, idCol: String, vecCol: String,
                         threshold: Double): DataFrame = {
     graft.GraftFunctions.register(emb.sparkSession)
-    // norms precomputed per vector, not per pair
-    val a = Parallelize.ensure(emb).select(col(idCol).as("vec_id_a"), col(vecCol).as("va"),
-      col("label").as("label_a"),
-      VecFuncs.normSqE12Native(col(vecCol)).cast("double").as("na"))
-    val b = emb.select(col(idCol).as("vec_id_b"), col(vecCol).as("vb"),
-      col("label").as("label_b"),
-      VecFuncs.normSqE12Native(col(vecCol)).cast("double").as("nb"))
-    a.crossJoin(b).where(col("vec_id_a") < col("vec_id_b"))
-      .withColumn("cos",
+    cosineAtLeast(pairSide(Parallelize.ensure(emb), idCol, vecCol, "a")
+      .crossJoin(pairSide(emb, idCol, vecCol, "b"))
+      .where(col("vec_id_a") < col("vec_id_b")), threshold)
+  }
+
+  /** One side of an embedding pair, suffixed `a`/`b`: id, vector,
+    * label and squared norm (precomputed per vector, not per pair).
+    */
+  private def pairSide(emb: DataFrame, idCol: String, vecCol: String, s: String): DataFrame =
+    emb.select(col(idCol).as(s"vec_id_$s"), col(vecCol).as(s"v$s"), col("label").as(s"label_$s"),
+      VecFuncs.normSqE12Native(col(vecCol)).cast("double").as(s"n$s"))
+
+  /** The exact cosine filter over joined [[pairSide]]s, shared by
+    * both embedding near-dup paths: (vec_id_a, vec_id_b, same_label,
+    * cos_e3) of the pairs at or above `threshold`.
+    */
+  private def cosineAtLeast(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("cos",
         VecFuncs.dotE12Native(col("va"), col("vb")).cast("double") /
           sqrt(col("na") * col("nb")))
       .where(col("cos") >= threshold)
       .select(col("vec_id_a"), col("vec_id_b"),
         (col("label_a") === col("label_b")).as("same_label"),
         floor(col("cos") * 1000d).cast("long").as("cos_e3"))
-  }
 
   /** The 100 TB path for embedding near-dup: candidate pairs from
     * sign-LSH bucket collisions across `numTables` independent tables
@@ -423,43 +422,18 @@ object Dedup {
   def embeddingNearDupsLsh(emb: DataFrame, idCol: String, vecCol: String,
                            threshold: Double, numTables: Int = 12,
                            planesPerTable: Int = 6, dim: Int = 64,
-                           maxBucketSize: Long = 10000L): DataFrame = {
+                           maxBucketSize: Long = MaxBucketSize): DataFrame = {
     graft.GraftFunctions.register(emb.sparkSession)
     val tables = Similarity.planeTables(numTables, planesPerTable, dim)
-    // ONE shuffle on (table_idx, bucket): map-side-partial collect_set
-    // groups each bucket's member ids, the degenerate-bucket cap is a
-    // size(set) filter (fan-out rows are unique per (id, table), so
-    // the old census COUNT ≡ the set size — a hot bucket, e.g.
-    // zero/padding vectors sharing every table's bucket, is dropped
-    // exactly as before and its members stay reachable through tables
-    // where they spread normally), and candidate pairs are generated
-    // INSIDE the reducer from each bucket's sorted set. r19 (guide
-    // §2.3/§2.4): removes the census job, the broadcast anti-join,
-    // the bucket self-join, and the fan-out persist + materialization
-    // pass (the fan-out is referenced exactly once now).
-    val grouped = Parallelize.ensure(emb).select(col(idCol).as("__id"),
-        posexplode(Similarity.tableBuckets(col(vecCol), tables))
-          .as(Seq("table_idx", "bucket")))
-      .groupBy(col("table_idx"), col("bucket"))
-      .agg(sort_array(collect_set(col("__id"))).as("__ids"))
-      .where(size(col("__ids")) <= maxBucketSize)
-    val cand = grouped
-      .select(explode(col("__ids")).as("vec_id_a"), col("__ids"))
-      .select(col("vec_id_a"),
-        explode(filter(col("__ids"), x => x > col("vec_id_a"))).as("vec_id_b"))
-      .select("vec_id_a", "vec_id_b").distinct()
-    val side = (suffix: String) => emb.select(
-      col(idCol).as(s"vec_id_$suffix"), col(vecCol).as(s"v$suffix"),
-      col("label").as(s"label_$suffix"),
-      VecFuncs.normSqE12Native(col(vecCol)).cast("double").as(s"n$suffix"))
-    cand.join(side("a"), Seq("vec_id_a")).join(side("b"), Seq("vec_id_b"))
-      .withColumn("cos",
-        VecFuncs.dotE12Native(col("va"), col("vb")).cast("double") /
-          sqrt(col("na") * col("nb")))
-      .where(col("cos") >= threshold)
-      .select(col("vec_id_a"), col("vec_id_b"),
-        (col("label_a") === col("label_b")).as("same_label"),
-        floor(col("cos") * 1000d).cast("long").as("cos_e3"))
+    // a hot bucket (e.g. zero/padding vectors sharing every table's
+    // bucket) is dropped; its members stay reachable through tables
+    // where they spread normally
+    val fanout = Parallelize.ensure(emb).select(col(idCol).as("__id"),
+      posexplode(Similarity.tableBuckets(col(vecCol), tables)).as(Seq("table_idx", "bucket")))
+    val cand = Buckets.pairs(fanout, Seq("table_idx", "bucket"), "__id", maxBucketSize,
+      "vec_id_a", "vec_id_b")
+    cosineAtLeast(cand.join(pairSide(emb, idCol, vecCol, "a"), Seq("vec_id_a"))
+      .join(pairSide(emb, idCol, vecCol, "b"), Seq("vec_id_b")), threshold)
   }
 
   /** Semantic dedup (the SemDeDup recipe, Abbas et al.,
@@ -562,6 +536,8 @@ object Dedup {
     * same frozen hash family, equi-join on band_key (shuffle on the
     * key, never an all-pairs product), self-matches dropped. Returns
     * (probe id, index doc_id) distinct pairs — the exact-verify input.
+    * Unlike [[candidatePairs]] it applies no bucket cap: a band shared
+    * by more than [[MaxBucketSize]] docs still yields its candidates.
     */
   def nearDupCandidatesAgainst(index: DataFrame, probeDocs: DataFrame,
                                textCol: String, idCol: String,

@@ -107,25 +107,13 @@ object Similarity {
       .select(col("query_id"), col("table_idx"),
         explode(probeSet(col("bucket0"))).as("bucket"))
 
-    // ONE shuffle on (table_idx, bucket): map-side-partial collect_set
-    // groups each bucket's member ids; the degenerate-bucket cap is a
-    // size(set) filter (fan-out rows are unique per (id, table), so the
-    // old census COUNT ≡ the set size), and the broadcast probe join
-    // explodes only probe-HIT buckets' member sets. r19 (guide
-    // §2.3/§2.4): this removes the r18 shape's census job, its
-    // broadcast anti-join, AND the fan-out persist + materialization
-    // pass (the fan-out is now referenced exactly once). The cap is
-    // NOT a memory bound: the size filter runs after the aggregation,
-    // so a hot bucket's whole member set is built first, in one
-    // collect_set buffer that cannot spill — a skewed bucket can OOM
-    // its task. A bounded bucket-pair primitive is ROADMAP item 5.
-    val grouped = Parallelize.ensure(corpus).select(col(idCol).as("neighbor_id"),
-        posexplode(tableBuckets(col(vecCol), tables)).as(Seq("table_idx", "bucket")))
-      .groupBy(col("table_idx"), col("bucket"))
-      .agg(collect_set(col("neighbor_id")).as("__ids"))
-      .where(size(col("__ids")) <= maxBucketSize)
+    // the broadcast probe join explodes only probe-HIT buckets' members
+    val grouped = Buckets.members(
+      Parallelize.ensure(corpus).select(col(idCol).as("neighbor_id"),
+        posexplode(tableBuckets(col(vecCol), tables)).as(Seq("table_idx", "bucket"))),
+      Seq("table_idx", "bucket"), "neighbor_id", maxBucketSize)
     val cand = grouped.join(broadcast(probes), Seq("table_idx", "bucket"))
-      .select(col("query_id"), explode(col("__ids")).as("neighbor_id"))
+      .select(col("query_id"), explode(col("members")).as("neighbor_id"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select("query_id", "neighbor_id").distinct()
 
@@ -156,21 +144,6 @@ object Similarity {
         floor(col("cos") * 1000d).cast("long").as("cos_e3"))
   }
 
-  /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
-    * partitions the corpus into inverted lists; each query probes only
-    * its `nprobe` nearest lists and reranks those candidates exactly.
-    *
-    * Quantizer training is a driver-side METADATA step (`nlist`
-    * deterministically-sampled corpus vectors, unit-normalized — the
-    * IVF-flat analog of a trained codebook; every ANN index trains its
-    * quantizer somewhere small). List ASSIGNMENT and probing are pure
-    * distributed expressions: one nested-HOF pass computes all
-    * centroid dots, argmax assigns, and the corpus shuffles once on
-    * the list id. `nprobe = nlist` probes everything — output then
-    * equals the exact brute force (spec-asserted), which is the
-    * correctness oracle for the machinery; smaller `nprobe` trades
-    * recall for a ~nprobe/nlist fraction of the scan.
-    */
   /** The query's `nprobe` nearest coarse lists (1-based ids), by dot
     * against every centroid, index tie-break — the probe-side half of
     * any IVF-family index. Per-QUERY-row HOF sort over nlist structs:
@@ -189,6 +162,21 @@ object Similarity {
     transform(slice(sorted, 1, math.min(nprobe, n)), s => s.getField("i").cast("int"))
   }
 
+  /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
+    * partitions the corpus into inverted lists; each query probes only
+    * its `nprobe` nearest lists and reranks those candidates exactly.
+    *
+    * Quantizer training is a driver-side METADATA step (`nlist`
+    * deterministically-sampled corpus vectors, unit-normalized — the
+    * IVF-flat analog of a trained codebook; every ANN index trains its
+    * quantizer somewhere small). List ASSIGNMENT and probing are pure
+    * distributed expressions: one nested-HOF pass computes all
+    * centroid dots, argmax assigns, and the corpus shuffles once on
+    * the list id. `nprobe = nlist` probes everything — output then
+    * equals the exact brute force (spec-asserted), which is the
+    * correctness oracle for the machinery; smaller `nprobe` trades
+    * recall for a ~nprobe/nlist fraction of the scan.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int,
               nlist: Int = 16, nprobe: Int = 4, trainIters: Int = 1): DataFrame = {
@@ -267,12 +255,6 @@ object Similarity {
     centroids
   }
 
-  /** Distributed list assignment against a trained codebook: one pure
-    * expression pass (argmax over the centroid dots; array_position
-    * takes the FIRST max — deterministic tie-break by centroid index).
-    * Returns (idCol, list_id) — the narrow frame the index build
-    * shuffles on, and the input to [[ivfListStats]].
-    */
   /** The assignment as a pure COLUMN (argmax of the centroid dots,
     * first-max tie-break): callers that already hold the vector column
     * compute the list inline — no join against a corpus-sized
@@ -284,6 +266,12 @@ object Similarity {
     // tie-break, same null algebra ([[graft.plans.ArgmaxDotsE12]])
     call_function("graft_argmax_dots", vec, typedLit(centroids))
 
+  /** Distributed list assignment against a trained codebook: one pure
+    * expression pass (argmax over the centroid dots; array_position
+    * takes the FIRST max — deterministic tie-break by centroid index).
+    * Returns (idCol, list_id) — the narrow frame the index build
+    * shuffles on, and the input to [[ivfListStats]].
+    */
   def ivfAssign(corpus: DataFrame, idCol: String, vecCol: String,
                 centroids: Seq[Seq[Double]]): DataFrame = {
     graft.GraftFunctions.register(corpus.sparkSession)
@@ -291,16 +279,6 @@ object Similarity {
       .select(col(idCol), ivfAssignExpr(col(vecCol), centroids).as("list_id"))
   }
 
-  /** IVF list-balance diagnostics: per-list occupancy plus its share
-    * and balance ratio (n_vectors · nlist / total, e6 — 1e6 = perfectly
-    * balanced). The operational pre-flight for choosing `nlist`: a
-    * ratio ≫ 1e6 means a hot list that degrades probe cost back toward
-    * brute force; many empty lists mean wasted probes. One groupBy on
-    * the (metadata-sized key domain) list id; the corpus total rides
-    * the same pass via a window over the nlist-row aggregate — no
-    * second scan. Lists that captured no vectors are emitted with
-    * n_vectors = 0.
-    */
   /** Streaming IVF index maintenance: keep the ANN list assignment
     * fresh as a corpus streams in. Each micro-batch runs the pure-
     * expression [[ivfAssign]] pass against the FROZEN trained codebook
@@ -362,6 +340,16 @@ object Similarity {
       .start()
   }
 
+  /** IVF list-balance diagnostics: per-list occupancy plus its share
+    * and balance ratio (n_vectors · nlist / total, e6 — 1e6 = perfectly
+    * balanced). The operational pre-flight for choosing `nlist`: a
+    * ratio ≫ 1e6 means a hot list that degrades probe cost back toward
+    * brute force; many empty lists mean wasted probes. One groupBy on
+    * the (metadata-sized key domain) list id; the corpus total rides
+    * the same pass via a window over the nlist-row aggregate — no
+    * second scan. Lists that captured no vectors are emitted with
+    * n_vectors = 0.
+    */
   def ivfListStats(assignments: DataFrame, nlist: Int): DataFrame = {
     val spark = assignments.sparkSession
     import spark.implicits._

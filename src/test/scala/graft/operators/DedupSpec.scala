@@ -85,6 +85,34 @@ class DedupSpec extends SparkSpec {
     assert(lsh.exists(p => p._1 == 0L && p._2 == 1L)) // the near-identical pair
   }
 
+  test("candidatePairs: a band past MaxBucketSize yields no pair, a 2-member band beside it does") {
+    val hot = (0L to Dedup.MaxBucketSize).map(i => (i, "hot"))
+    val bands = (hot ++ Seq((20000L, "pair"), (20001L, "pair"))).toDF("doc_id", "band_key")
+    assert(hot.size == 10001)
+    val got = Dedup.candidatePairs(bands, "doc_id").as[(Long, Long)].collect()
+    assert(got.toSeq == Seq((20000L, 20001L)))
+  }
+
+  test("embeddingNearDupsLsh: a 5,000-id hot bucket feeds the set aggregate at most cap + 1 ids") {
+    val cap = 10L
+    val mk = (seed: Int) => {
+      val r = new scala.util.Random(seed)
+      Array.fill(64)(r.nextFloat() * 2 - 1)
+    }
+    val (hot, v) = (mk(1), mk(2))
+    // 5,000 copies of one vector share a bucket in every table
+    val emb = ((0L until 5000L).map(i => (i, hot, 0)) ++
+      Seq((10000L, v, 1), (10001L, v.map(_ + 0.01f), 1)))
+      .toDF("vec_id", "embedding", "label")
+    val (out, fed) = SetAggregateInput.run(spark,
+      Dedup.embeddingNearDupsLsh(emb, "vec_id", "embedding", 0.5, maxBucketSize = cap))
+    val bound = SetAggregateInput.cappedBound(SetAggregateInput.signBucketSizes(emb), cap)
+    assert(fed <= bound, s"$fed rows reached the set aggregate, bound $bound")
+    info(s"$fed rows reached the set aggregate, bound $bound")
+    val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs == Seq((10000L, 10001L)))
+  }
+
   test("clusters == local union-find on random pair graphs (chains force multi-round propagation)") {
     // local union-find oracle
     def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {

@@ -51,6 +51,35 @@ class SimilaritySpec extends SparkSpec {
     lsh.foreach { case (id, ce3) => assert(brute(id) == ce3) }
   }
 
+  test("lshTopK: a 5,000-id hot bucket feeds the set aggregate at most cap + 1 ids") {
+    val cap = 10L
+    val mk = (seed: Int) => {
+      val r = new scala.util.Random(seed)
+      Array.fill(64)(r.nextFloat() * 2 - 1)
+    }
+    // 5,000 copies of one vector share a bucket in every table; 40
+    // random vectors spread out
+    val corpus = ((0L until 5000L).map(i => (i, mk(1))) ++
+      (10000L until 10040L).map(i => (i, mk(i.toInt)))).toDF("vec_id", "embedding")
+    val (out, fed) = SetAggregateInput.run(spark,
+      Similarity.lshTopK(corpus, corpus.where($"vec_id" === 10000L), "vec_id", "embedding",
+        k = 5, maxBucketSize = cap))
+    val bound = SetAggregateInput.cappedBound(SetAggregateInput.signBucketSizes(corpus), cap)
+    assert(fed <= bound, s"$fed rows reached the set aggregate, bound $bound")
+    info(s"$fed rows reached the set aggregate, bound $bound")
+    // the hot bucket is dropped in every table: no copy is a candidate
+    val neighbors = out.map(_.getAs[Long]("neighbor_id"))
+    assert(neighbors.nonEmpty && neighbors.forall(_ >= 10000L))
+  }
+
+  test("lshTopK: a probe that hits a one-member bucket gets its candidate") {
+    val corpus = Seq((0L, Array.fill(64)(0.5f))).toDF("vec_id", "embedding")
+    val queries = Seq((1L, Array.fill(64)(0.25f))).toDF("vec_id", "embedding")
+    val out = Similarity.lshTopK(corpus, queries, "vec_id", "embedding", k = 5, probeBits = 0)
+      .select("query_id", "rank", "neighbor_id").as[(Long, Long, Long)].collect()
+    assert(out.toSeq == Seq((1L, 1L, 0L)))
+  }
+
   test("ivfTopK with nprobe = nlist is EXACTLY the brute force (machinery oracle)") {
     val dir = "/root/testdata/sf0.001"
     assume(java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
