@@ -341,7 +341,7 @@ object QueriesStore {
   // w08 — GENERATED ALWAYS AS + column DEFAULT under the DuckDB gate:
   // the INSERT omits both columns; the engine materializes the default
   // and computes the generation expression inside the write projection
-  // (SnapshotStore.writeVersionData), so the aggregate read back must
+  // (Footers.writeVersionData), so the aggregate read back must
   // match a relational recompute of both contracts.
   // =====================================================================
   private lazy val w08Warehouse: String = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.SnapshotStore
+import graft.store.{Breadcrumbs, Commit, Contracts, SnapshotStore}
 
 /** A DSv2 catalog over a directory of graft tables — name-first SQL
   * access, completing the consumption story the path-based connector
@@ -57,7 +57,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def name(): String = catalogName
 
   /** ANSI table constraints are first-class: `CHECK` is write-ENFORCED
-    * (every write path guards it — see `SnapshotStore.writeVersionData`),
+    * (every write path guards it — see `Footers.writeVersionData`),
     * `PRIMARY KEY`/`UNIQUE` are accepted as informational metadata when
     * they name exactly the merge keys (the engine's one-row-per-key
     * invariant is what backs the claim).
@@ -308,13 +308,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           require(!keys.contains(f.name),
             s"merge key '${f.name}' cannot be GENERATED ALWAYS AS — " +
               "row identity must come from the data itself")
-          ("generated." + f.name) -> SnapshotStore.encPropValue(sql)
+          ("generated." + f.name) -> Breadcrumbs.encPropValue(sql)
         }
     }.toMap
     // IDENTITY columns (the reference's AUTOINCREMENT surrogate keys,
     // `09 Order Entity.sql:71`): recorded as `identity.<col>` props so
     // every write path mints omitted values through the distributed
-    // block allocator (SnapshotStore.reserveIdentityBlock)
+    // block allocator (Identity.reserveIdentityBlock)
     val idProps = schema.fields.toSeq.flatMap { f =>
       org.apache.spark.sql.catalyst.util.IdentityColumn
         .getIdentityInfo(f).map { s =>
@@ -337,7 +337,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         throw new org.apache.spark.sql.catalyst.analysis
           .TableAlreadyExistsException(ident.toString)
     }
-    GraftTable.writeSchemaFile(spark, dir.toString, schema)
+    Breadcrumbs.writeDeclaredSchema(spark, dir.toString, schema)
     if (allProps.nonEmpty) SnapshotStore.writeProps(spark, dir.toString, allProps)
   }
 
@@ -396,7 +396,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Atomic `REPLACE TABLE … AS SELECT`: stage the new content, then
     * commit it as ONE new version of the existing table
-    * ([[SnapshotStore.adoptAsReplace]] — zero-copy rename adoption,
+    * ([[Contracts.adoptAsReplace]] — zero-copy rename adoption,
     * history preserved for time travel, layout/keys/schema free to
     * change). The old content stays readable until the commit instant;
     * a failed SELECT leaves the table untouched.
@@ -457,7 +457,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "row identity must come from the data itself")
         // DDL formatting (newlines in a multi-line CASE) survives into
         // the expression text; _props is line-oriented, so escape
-        ("generated." + c.name()) -> SnapshotStore.encPropValue(sql)
+        ("generated." + c.name()) -> Breadcrumbs.encPropValue(sql)
       }
       val id = Option(c.identityColumnSpec()).map { s =>
         require(c.dataType() == org.apache.spark.sql.types.LongType,
@@ -578,7 +578,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // swap that starts AFTER this wait remains last-writer-wins on the
     // props file — ALTER commits no manifest to arbitrate with.)
     SnapshotStore.latestVersion(spark, root)
-      .foreach(v => SnapshotStore.awaitContractQuiescence(spark, root, v))
+      .foreach(v => Contracts.awaitContractQuiescence(spark, root, v))
     // The contracts LOCK serializes this compose-and-write against
     // rival ALTERs (previously last-writer-wins: one statement's
     // changes could vanish silently) and against a swap's
@@ -586,13 +586,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // re-instate the displaced epoch's breadcrumb over the new
     // epoch's). Compose happens INSIDE the lock so it always reads the
     // rival-complete state.
-    SnapshotStore.withContractsLock(spark, root) {
+    Commit.withContractsLock(spark, root) {
       // a swap whose flagged commit landed AFTER the quiescence wait
       // above writes its contracts under this same lock — composing
       // now would pair this ALTER with a half-displaced epoch: refuse
       // with the documented conflict instead
       SnapshotStore.latestVersion(spark, root).foreach { v =>
-        if (SnapshotStore.unstampedEpochStart(spark, root, v) >= 0)
+        if (Contracts.unstampedEpochStart(spark, root, v) >= 0)
           throw new java.util.ConcurrentModificationException(
             s"ALTER TABLE at $root raced a REPLACE/restore contract " +
               "swap — re-run against the new contract")
@@ -748,7 +748,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               "refusing")
       }
       // every change validated — persist once
-      pendingSchema.foreach(s => GraftTable.writeSchemaFile(spark, root, s))
+      pendingSchema.foreach(s => Breadcrumbs.writeDeclaredSchema(spark, root, s))
       pendingProps.foreach(p => SnapshotStore.writeProps(spark, root, p))
     }
     loadTable(ident)

@@ -99,12 +99,8 @@ class GraftChangeFeedSource(spark: SparkSession, root: String,
       (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
     }
 
-  private def persistedOffer: Option[Long] = offerLog.flatMap { case (fs, dir) =>
-    if (!fs.exists(dir)) None
-    // names carry the +1 bias so offset -1 still encodes as digits
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong - 1).maxOption
-  }
+  private def persistedOffer: Option[Long] =
+    offerLog.flatMap { case (fs, dir) => ChangeFeed.recordedOffset(fs, dir) }
 
   /** Durably record an offer before handing it to the engine; false =
     * could not persist (the caller then offers NOTHING NEW this
@@ -114,16 +110,8 @@ class GraftChangeFeedSource(spark: SparkSession, root: String,
     * engine's commit log).
     */
   private def persistOffer(v: Long): Boolean = offerLog.forall { case (fs, dir) =>
-    try {
-      fs.mkdirs(dir)
-      val marker = new Path(dir, f"${v + 1}%020d")
-      try fs.create(marker, false).close()
-      catch { case _: java.io.IOException if fs.exists(marker) => () }
-      fs.listStatus(dir).toSeq.map(_.getPath)
-        .filter(p => p.getName.forall(_.isDigit) && p.getName.toLong < v + 1)
-        .foreach(p => try fs.delete(p, false) catch { case _: java.io.IOException => () })
-      true
-    } catch { case _: java.io.IOException => false }
+    try { ChangeFeed.recordOffset(fs, dir, v); true }
+    catch { case _: java.io.IOException => false }
   }
 
   /** Highest version ever OFFERED to the engine by this query (across

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.paths.SparkPath
 
-import graft.store.SnapshotStore
+import graft.store.{Breadcrumbs, Contracts, Footers, Identity, SnapshotStore}
 import graft.store.SnapshotStore.Manifest
 
 /** DataSourceV2 connector over [[SnapshotStore]] tables — the piece
@@ -169,8 +169,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       try SnapshotStore.tableInstanceIdIfAny(sp, root)
       catch { case _: Exception => None }
     val boundStamp =
-      try SnapshotStore.readProps(sp, root)
-        .get("graft.schema.epoch").map(_.toLong).getOrElse(-1L)
+      try SnapshotStore.schemaEpoch(sp, root)
       catch { case _: Exception => -1L }
     new BaseRelation with TableScan {
       override def sqlContext: org.apache.spark.sql.SQLContext = sqlCtx
@@ -204,9 +203,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
                 "history — re-create the relation and re-read")
           case _ => ()
         }
-        val curStamp = loud("contract-swap stamp")(
-          SnapshotStore.readProps(sp, root)
-            .get("graft.schema.epoch").map(_.toLong).getOrElse(-1L))
+        val curStamp = loud("contract-swap stamp")(SnapshotStore.schemaEpoch(sp, root))
         if (curStamp != boundStamp)
           throw new java.util.ConcurrentModificationException(
             s"the table at $root crossed a contract swap (epoch " +
@@ -560,11 +557,11 @@ object GraftTable {
       if (dirs.isEmpty) None
       // mergedFooterSchema logs its own failures — no caller-side
       // second message (r18 ADVICE: the fallback double-logged)
-      else SnapshotStore.mergedFooterSchema(spark, dirs).orElse(
+      else Footers.mergedFooterSchema(spark, dirs).orElse(
         Some(spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema))
     // a table declaring `dml.mode=delta` (TBLPROPERTIES, recorded at
     // creation) carries the not-null-merge-key contract — every write
-    // path REJECTS null key values ([[SnapshotStore.writeVersionData]])
+    // path REJECTS null key values ([[Footers.writeVersionData]])
     // — so presenting non-nullable key fields (footer schemas are
     // always nullable-typed) is truthful for every reader, and gives
     // Spark's delta row-level rewrite the NON-NULLABLE row-id
@@ -585,7 +582,7 @@ object GraftTable {
     val preReplace = versionAsOf.exists(v =>
       props.get("graft.schema.epoch").map(_.toLong).exists(v < _))
     if (preReplace) {
-      val archived = SnapshotStore.archivedSchemaFor(spark, root, versionAsOf.get)
+      val archived = Contracts.archivedSchemaFor(spark, root, versionAsOf.get)
       // an EMPTY pinned version (no data dirs — e.g. the CREATE
       // commit) must fall back to its OWN epoch's archived schema,
       // never the live `_schema` breadcrumb: that belongs to the
@@ -622,12 +619,12 @@ object GraftTable {
     // the transiently stale columns (found by ChaosBlast: a mid-swap
     // reader's `columns` came back empty)
     val swapInFlight = footerBase.isDefined && (footersOnly ||
-      SnapshotStore.unstampedEpochStart(spark, root, m.version) >= 0)
-    val declared = if (swapInFlight) None else readSchemaFile(spark, root)
+      Contracts.unstampedEpochStart(spark, root, m.version) >= 0)
+    val declared = if (swapInFlight) None else Breadcrumbs.declaredSchema(spark, root)
     // overlay validation: pairing the breadcrumb with footers is only
     // sound if no swap moved across these reads — the probe above sees
     // a swap at/below the PINNED head, but a swap whose flagged commit
-    // landed AFTER the pin (its breadcrumb step racing readSchemaFile)
+    // landed AFTER the pin (its breadcrumb step racing the declared-schema read)
     // is invisible to it. Re-check the stamp and probe up to the LIVE
     // head; any movement → retry from scratch.
     if (declared.isDefined && footerBase.isDefined) {
@@ -648,7 +645,7 @@ object GraftTable {
       // the R15.2 hunt forensics: the file's column order proved
       // old-epoch footers under a new-epoch breadcrumb).
       if (stamp0 != stamp1 || stamp1.exists(_ > m.version) ||
-          SnapshotStore.unstampedEpochStart(spark, root,
+          Contracts.unstampedEpochStart(spark, root,
             math.max(latestNow, m.version)) >= 0)
         return None
     }
@@ -713,25 +710,6 @@ object GraftTable {
         if (extra.isEmpty) base else StructType(base.fields.toSeq ++ extra)
       case _ => base
     }
-
-  private val SchemaFile = "_schema"
-
-  private[connector] def writeSchemaFile(spark: SparkSession, root: String,
-                                         schema: StructType): Unit = {
-    val p = new Path(root, SchemaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** One parser of the `_schema` breadcrumb: the store's (the write
-    * guard reads the same declarations this overlay presents — two
-    * parsers would drift).
-    */
-  private[connector] def readSchemaFile(spark: SparkSession,
-                                        root: String): Option[StructType] =
-    SnapshotStore.declaredSchema(spark, root)
 }
 
 /** One graft table resolved for reading and writing. The manifest is
@@ -810,8 +788,7 @@ class GraftTable(root: String, versionAsOf: Option[Long],
     // read could pair a just-landed swap's stamp with the pre-swap
     // schema — the skew the r17 ChaosBlast held-relation op measured
     else if (boundEpochIn != Long.MinValue) boundEpochIn
-    else try SnapshotStore.readProps(SparkSession.active, root)
-      .get("graft.schema.epoch").map(_.toLong).getOrElse(-1L)
+    else try SnapshotStore.schemaEpoch(SparkSession.active, root)
     catch { case _: Exception => -1L }
 
   /** A fence that cannot re-read the CURRENT stamp refuses (r17 advice
@@ -834,9 +811,7 @@ class GraftTable(root: String, versionAsOf: Option[Long],
   private def verifyEpoch(m: Manifest): Unit =
     if (versionAsOf.isEmpty) {
       val spark = SparkSession.active
-      val cur = fenceRead("contract-swap stamp")(
-        SnapshotStore.readProps(spark, root)
-          .get("graft.schema.epoch").map(_.toLong).getOrElse(-1L))
+      val cur = fenceRead("contract-swap stamp")(SnapshotStore.schemaEpoch(spark, root))
       if (cur != boundEpoch)
         throw new java.util.ConcurrentModificationException(
           s"the table at $root crossed a contract swap (REPLACE or " +
@@ -845,7 +820,7 @@ class GraftTable(root: String, versionAsOf: Option[Long],
             "old schema would silently mis-bind columns; re-resolve the " +
             "table and re-run")
       val inFlight = fenceRead("in-flight swap probe")(
-        SnapshotStore.unstampedEpochStart(spark, root, m.version))
+        Contracts.unstampedEpochStart(spark, root, m.version))
       if (inFlight >= 0)
         throw new java.util.ConcurrentModificationException(
           s"a contract swap on $root is in flight (flagged epoch-start " +
@@ -894,7 +869,7 @@ class GraftTable(root: String, versionAsOf: Option[Long],
   override def columns(): Array[org.apache.spark.sql.connector.catalog.Column] = {
     import org.apache.spark.sql.connector.catalog.{Column => V2Column}
     val props = contractProps
-    val identities = SnapshotStore.identitySpecs(props).toMap
+    val identities = Identity.identitySpecs(props).toMap
     tableSchema.fields.map { f =>
       val comment = if (f.getComment().isDefined) f.getComment().get else null
       val metaJson =
@@ -903,7 +878,7 @@ class GraftTable(root: String, versionAsOf: Option[Long],
       props.get("generated." + f.name) match {
         case Some(genSql) =>
           V2Column.create(f.name, f.dataType, f.nullable, comment,
-            SnapshotStore.decPropValue(genSql), metaJson)
+            Breadcrumbs.decPropValue(genSql), metaJson)
         case None => identities.get(f.name) match {
           case Some(s) =>
             V2Column.create(f.name, f.dataType, f.nullable, comment,
@@ -1665,7 +1640,7 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     else {
       val perBucket = withTombs.map { case (b, e) =>
         val dirs = e.tombstones.map(d => SnapshotStore.dataPath(root, d).toString)
-        val df = SnapshotStore.mergedSchemaRead(spark, dirs).parquet(dirs: _*)
+        val df = Footers.mergedSchemaRead(spark, dirs).parquet(dirs: _*)
         val schema = df.schema
         val keys = df.queryExecution.executedPlan.executeCollect()
           .map(_.toSeq(schema)).map(_.toSeq: Seq[Any]).toSet

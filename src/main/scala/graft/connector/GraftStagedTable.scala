@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlread
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable}
 import org.apache.spark.sql.types.StructType
 
-import graft.store.SnapshotStore
+import graft.store.Contracts
 
 object GraftStagedTable {
   sealed trait Mode
@@ -26,7 +26,7 @@ object GraftStagedTable {
   *    (FS rename-into-existing-directory semantics would otherwise
   *    silently nest the staged dir inside the winner's table) and
   *    withdrawn cleanly.
-  *  - REPLACE: [[SnapshotStore.adoptAsReplace]] — the staged content
+  *  - REPLACE: [[Contracts.adoptAsReplace]] — the staged content
   *    commits as the NEXT VERSION of the existing table (zero-copy
   *    rename adoption, history preserved, keys/layout/schema free to
   *    change).
@@ -114,7 +114,7 @@ final class GraftStagedTable(spark: SparkSession, ident: Identifier,
       if (orCreate) commitCreate()
       else { cleanup(); throw new NoSuchTableException(ident) }
     } else {
-      try SnapshotStore.adoptAsReplace(spark, targetDir.toString,
+      try Contracts.adoptAsReplace(spark, targetDir.toString,
         stagedDir.toString): Unit
       finally cleanup()
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
-import graft.store.SnapshotStore
+import graft.store.{Breadcrumbs, Identity, SnapshotStore}
 
 /** Write-side of the connector: `df.write.format("graft")` batch saves
   * and `df.writeStream.format("graft")` exactly-once streaming upserts
@@ -128,7 +128,7 @@ private[connector] object GraftWrite {
   def identityInsertGuard(spark: SparkSession, root: String,
                           df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{lit, raise_error, when}
-    SnapshotStore.identitySpecs(SnapshotStore.readProps(spark, root))
+    Identity.identitySpecs(SnapshotStore.readProps(spark, root))
       .filter { case (c, s) => !s.allowExplicit && df.columns.contains(c) }
       .foldLeft(df) { case (d, (c, _)) =>
         d.withColumn(c,
@@ -155,7 +155,7 @@ private[connector] object GraftWrite {
     * column lists, additive evolution).
     */
   def staleShapeGuard(spark: SparkSession, root: String, df: DataFrame): Unit =
-    SnapshotStore.declaredSchema(spark, root).foreach { declared =>
+    Breadcrumbs.declaredSchema(spark, root).foreach { declared =>
       val declaredNames = declared.fields.map(_.name.toLowerCase).toSet
       val stray = df.columns.filterNot(c => declaredNames(c.toLowerCase))
       if (stray.nonEmpty)
@@ -173,7 +173,7 @@ private[connector] object GraftWrite {
     */
   def doorMerge(spark: SparkSession, root: String, keys: Seq[String],
                 df: DataFrame): (DataFrame, DataFrame) => DataFrame = {
-    val ids = SnapshotStore.identitySpecs(SnapshotStore.readProps(spark, root))
+    val ids = Identity.identitySpecs(SnapshotStore.readProps(spark, root))
       .map(_._1).filter(df.columns.contains)
     if (ids.isEmpty) SnapshotStore.upsertMerge(keys)
     else SnapshotStore.upsertMergePreserving(keys, ids)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Scd1, Scd2}
 import graft.sources.StageReader
-import graft.store.SnapshotStore
+import graft.store.{Footers, SnapshotStore}
 import graft.streaming.StreamPipeline
 
 /** Declarative multi-entity warehouse runner — one entry point that
@@ -147,7 +147,7 @@ object Warehouse {
                onExpectations: (String, Map[String, Long]) => Unit = (_, _) => ())
       : Map[String, DataFrame] = {
     def writeBucketed(df: DataFrame, e: Entity, path: String): DataFrame = {
-      StreamPipeline.createTarget(StreamPipeline.withBucket(df, e.keys, numBuckets), path, numBuckets)
+      StreamPipeline.createTarget(SnapshotStore.withBucket(df, e.keys, numBuckets), path, numBuckets)
       readTarget(spark, path)
     }
     def runEntity(e: Entity): Seq[(String, DataFrame)] = {
@@ -198,11 +198,11 @@ object Warehouse {
     * column is dropped). Falls back to inference loudly.
     */
   private def readTarget(spark: SparkSession, path: String): DataFrame =
-    StreamPipeline.mergedTargetRead(spark, path).parquet(path).drop(StreamPipeline.BucketCol)
+    StreamPipeline.mergedTargetRead(spark, path).parquet(path).drop(SnapshotStore.BucketCol)
 
   /** [[readTarget]] for a plain (unbucketed) fact or quarantine dir. */
   private def readPlain(spark: SparkSession, path: String): DataFrame =
-    SnapshotStore.mergedSchemaRead(spark, Seq(path)).parquet(path)
+    Footers.mergedSchemaRead(spark, Seq(path)).parquet(path)
 
   /** (Re)build every fact from the PERSISTED clean/dim layers under
     * `outDir` — callable standalone after an incremental pass so the

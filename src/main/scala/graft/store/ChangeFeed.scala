@@ -233,7 +233,7 @@ object ChangeFeed {
                        v: Long): Option[DataFrame] = {
     val changed: Set[Int] = mOld match {
       case None => mNew.buckets.keySet // initial load: everything is new
-      case Some(o) => SnapshotStore.changedBuckets(o, mNew)
+      case Some(o) => Commit.changedBuckets(o, mNew)
     }
     if (changed.isEmpty) return None
     val newRaw = SnapshotStore.readBuckets(spark, root, mNew, changed)
@@ -298,7 +298,7 @@ object ChangeFeed {
 
   private def consumersDir(root: String) = new Path(root, "_consumers")
   private def consumerDir(root: String, id: String) =
-    new Path(consumersDir(root), SnapshotStore.enc(id))
+    new Path(consumersDir(root), ManifestLog.enc(id))
 
   private def fileSystem(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -309,15 +309,33 @@ object ChangeFeed {
     * monotone (the offset is the max marker; stale markers are
     * best-effort garbage-collected on the next advance).
     */
-  def consumerOffset(spark: SparkSession, root: String, id: String): Option[Long] = {
-    val fs = fileSystem(spark, root)
-    val dir = consumerDir(root, id)
+  def consumerOffset(spark: SparkSession, root: String, id: String): Option[Long] =
+    recordedOffset(fileSystem(spark, root), consumerDir(root, id))
+
+  /** The offset recorded in the marker directory `dir` by
+    * [[recordOffset]]; None when there is none. Marker names are the
+    * offset BIASED BY +1 so the pre-history offset -1 (the
+    * [[seedConsumer]] bootstrap) still encodes as plain digits.
+    */
+  private[graft] def recordedOffset(fs: FileSystem, dir: Path): Option[Long] =
     if (!fs.exists(dir)) None
-    // marker names are the offset BIASED BY +1 so the pre-history
-    // offset -1 (seedConsumer bootstrap) still encodes as plain digits
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong - 1)
       .maxOption
+
+  /** Record offset `v` in the marker directory `dir` as a create-only
+    * marker (idempotent; the offset is the max marker, so it never
+    * moves backwards) and GC the superseded markers, best effort — a
+    * failed delete is cosmetic.
+    */
+  private[graft] def recordOffset(fs: FileSystem, dir: Path, v: Long): Unit = {
+    fs.mkdirs(dir)
+    val marker = new Path(dir, f"${v + 1}%020d")
+    try fs.create(marker, false).close()
+    catch { case _: java.io.IOException if fs.exists(marker) => () }
+    fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => p.getName.forall(_.isDigit) && p.getName.toLong < v + 1)
+      .foreach(p => try fs.delete(p, false) catch { case _: java.io.IOException => () })
   }
 
   /** Smallest offset over all registered consumers (vacuum's retention
@@ -329,7 +347,7 @@ object ChangeFeed {
     if (!fs.exists(dir)) None
     else fs.listStatus(dir).toSeq.filter(_.isDirectory)
       .flatMap(st => consumerOffset(spark, root,
-        SnapshotStore.dec(st.getPath.getName)))
+        ManifestLog.dec(st.getPath.getName)))
       .minOption
   }
 
@@ -338,17 +356,7 @@ object ChangeFeed {
     */
   def seedConsumer(spark: SparkSession, root: String, id: String, v: Long): Unit = {
     require(v >= -1L, s"offset $v below the pre-history floor of -1")
-    val fs = fileSystem(spark, root)
-    val dir = consumerDir(root, id)
-    fs.mkdirs(dir)
-    val marker = new Path(dir, f"${v + 1}%020d")
-    try fs.create(marker, false).close()
-    catch { case _: java.io.IOException if fs.exists(marker) => () }
-    // GC superseded markers, best effort — the offset is the max, so a
-    // failed delete is cosmetic
-    fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(p => p.getName.forall(_.isDigit) && p.getName.toLong < v + 1)
-      .foreach(p => try fs.delete(p, false) catch { case _: java.io.IOException => () })
+    recordOffset(fileSystem(spark, root), consumerDir(root, id), v)
   }
 
   /** Forget a consumer, releasing the history vacuum was retaining
@@ -369,7 +377,7 @@ object ChangeFeed {
     val dir = consumersDir(root)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.filter(_.isDirectory)
-      .map(st => SnapshotStore.dec(st.getPath.getName))
+      .map(st => ManifestLog.dec(st.getPath.getName))
       .filter(_.startsWith("clone:"))
   }
 

@@ -9,7 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Scd1, Scd2}
-import graft.store.SnapshotStore
+import graft.store.Footers
+import graft.store.SnapshotStore.{BucketCol, withBucket}
 
 /** Structured-Streaming re-expression of the reference's "real-time"
   * machinery:
@@ -27,7 +28,8 @@ import graft.store.SnapshotStore
   *    (watermarked tumbling windows)
   *
   * Scale notes: the upsert/history sinks maintain a parquet target
-  * hash-bucketed by business key ([[BucketCol]]). Every micro-batch
+  * hash-bucketed by business key
+  * ([[graft.store.SnapshotStore.BucketCol]]). Every micro-batch
   * reads ONLY the buckets its delta touches (partition-pruned scan),
   * merges, and dynamic-partition-overwrites only those bucket
   * directories — work per batch is O(delta buckets), never O(full
@@ -38,16 +40,6 @@ import graft.store.SnapshotStore
   */
 object StreamPipeline {
 
-  /** Partition column on merge targets: a stable hash bucket of the
-    * business key. Deterministic, so any delta row lands in the same
-    * bucket as every prior version of its key.
-    */
-  val BucketCol: String = SnapshotStore.BucketCol
-
-  /** Attach the target bucket to each row (the store's layout). */
-  def withBucket(df: DataFrame, keys: Seq[String], numBuckets: Int): DataFrame =
-    SnapshotStore.withBucket(df, keys, numBuckets)
-
   /** The bucket count is a property of the TARGET LAYOUT, not of a
     * call: a marker file written at target creation pins it, and every
     * later merge uses the marker — a caller passing a different
@@ -57,9 +49,10 @@ object StreamPipeline {
     */
   private val LayoutMarker = "_graft_buckets"
 
-  /** Create a target from `rows` (which carry [[BucketCol]] under
-    * `numBuckets`) and pin its layout marker — the first batch of every
-    * merge target, and [[graft.pipeline.Warehouse.runBatch]]'s backfill.
+  /** Create a target from `rows` (which carry
+    * [[graft.store.SnapshotStore.BucketCol]] under `numBuckets`) and pin
+    * its layout marker — the first batch of every merge target, and
+    * [[graft.pipeline.Warehouse.runBatch]]'s backfill.
     */
   private[graft] def createTarget(rows: DataFrame, targetDir: String, numBuckets: Int): Unit = {
     rows.write.mode("overwrite").partitionBy(BucketCol).parquet(targetDir)
@@ -77,10 +70,10 @@ object StreamPipeline {
   private[graft] def mergedTargetRead(spark: SparkSession, targetDir: String)
       : org.apache.spark.sql.DataFrameReader = {
     val dirs = bucketDirs(targetDir)
-    SnapshotStore.mergedFooterSchema(spark, dirs) match {
+    Footers.mergedFooterSchema(spark, dirs) match {
       case Some(s) => spark.read.schema(s.add(BucketCol,
         org.apache.spark.sql.types.IntegerType, nullable = true))
-      case None => SnapshotStore.inferenceFallback(spark, Seq(targetDir))
+      case None => Footers.inferenceFallback(spark, Seq(targetDir))
     }
   }
 
@@ -160,10 +153,11 @@ object StreamPipeline {
       targetDir, keys, orderBy, numBuckets, deleteCol)
 
   /** A micro-batch routed to one bucket layout: `rows` carry
-    * [[BucketCol]] under `numBuckets`, and `touched` lists the buckets
-    * they land in (empty = nothing to merge). One delta can feed several
-    * sinks — [[graft.pipeline.Warehouse.runIncremental]] folds the same
-    * one into an entity's clean and dim targets.
+    * [[graft.store.SnapshotStore.BucketCol]] under `numBuckets`, and
+    * `touched` lists the buckets they land in (empty = nothing to
+    * merge). One delta can feed several sinks —
+    * [[graft.pipeline.Warehouse.runIncremental]] folds the same one
+    * into an entity's clean and dim targets.
     */
   private[graft] final case class BatchDelta(rows: DataFrame, numBuckets: Int, touched: Seq[Int])
 

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SaveMode
 
 import graft.SparkSpec
-import graft.store.SnapshotStore
+import graft.store.{Breadcrumbs, SnapshotStore}
 
 /** The branch-lifecycle race pair found by BranchChaosBlast (seed
   * 4001, POSIX) on its first high-intensity sweep — pinned here:
@@ -50,12 +50,12 @@ class BranchLifecycleSpec extends SparkSpec {
     val br = SnapshotStore.branchRoot(root, "s")
     // generation 1: fork, capture its instance token, consume it
     SnapshotStore.createBranch(spark, root, "s"): Unit
-    val tokA = SnapshotStore.branchInstance(fs, br)
+    val tokA = Breadcrumbs.branchInstance(fs, br)
     assert(tokA.nonEmpty, "createBranch must mint an instance token")
     SnapshotStore.dropBranch(spark, root, "s") // = a publish consuming gen 1
     // generation 2: the successor, re-created under the same name
     SnapshotStore.createBranch(spark, root, "s"): Unit
-    val tokB = SnapshotStore.branchInstance(fs, br)
+    val tokB = Breadcrumbs.branchInstance(fs, br)
     assert(tokB.nonEmpty && tokB != tokA, "successor must mint a NEW token")
     Seq((99L, "succ")).toDF("k", "v")
       .write.format("graft").option("branch", "s").mode(SaveMode.Append).save(root)

@@ -9,7 +9,7 @@ import scala.concurrent.duration._
 import org.apache.hadoop.fs.Path
 
 import graft.SparkSpec
-import graft.store.{InMemoryClaimArbiter, ObjectStoreSim, SnapshotStore}
+import graft.store.{Commit, InMemoryClaimArbiter, ObjectStoreSim, SnapshotStore}
 
 /** The contracts lock (R15.2): version-less metadata writers — ALTER's
   * `_schema`/`_props` writes and a swap's contract installation —
@@ -88,7 +88,7 @@ class ContractsLockSpec extends SparkSpec {
       val aEntered = new java.util.concurrent.CountDownLatch(1)
       val overlap = new java.util.concurrent.atomic.AtomicBoolean(false)
       val slow = Future {
-        SnapshotStore.withContractsLock(spark, root) {
+        Commit.withContractsLock(spark, root) {
           aInBody.set(true); aEntered.countDown()
           Thread.sleep(1500) // 5× the grace
           aInBody.set(false)
@@ -97,7 +97,7 @@ class ContractsLockSpec extends SparkSpec {
       }
       aEntered.await()
       val waiter = Future {
-        SnapshotStore.withContractsLock(spark, root) {
+        Commit.withContractsLock(spark, root) {
           if (aInBody.get()) overlap.set(true)
           "waiter-done"
         }
@@ -125,7 +125,7 @@ class ContractsLockSpec extends SparkSpec {
     val p = new Path(root, "_contracts_lock")
     val stolen = new java.util.concurrent.CountDownLatch(1)
     val e = intercept[IllegalStateException] {
-      SnapshotStore.withContractsLock(spark, root) {
+      Commit.withContractsLock(spark, root) {
         // play the reclaimer: replace the holder's lock with a rival's
         fs.delete(p, false)
         val out = fs.create(p, true)
@@ -166,7 +166,7 @@ class ContractsLockSpec extends SparkSpec {
       val aEntered = new java.util.concurrent.CountDownLatch(1)
       val overlap = new java.util.concurrent.atomic.AtomicBoolean(false)
       val slow = Future {
-        SnapshotStore.withContractsLock(spark, root) {
+        Commit.withContractsLock(spark, root) {
           aInBody.set(true); aEntered.countDown()
           Thread.sleep(1500) // 5x the grace
           aInBody.set(false)
@@ -175,7 +175,7 @@ class ContractsLockSpec extends SparkSpec {
       }
       aEntered.await()
       val waiter = Future {
-        SnapshotStore.withContractsLock(spark, root) {
+        Commit.withContractsLock(spark, root) {
           if (aInBody.get()) overlap.set(true)
           "waiter-done"
         }
@@ -238,7 +238,7 @@ class ContractsLockSpec extends SparkSpec {
     }
     try {
       val e = intercept[IllegalStateException] {
-        SnapshotStore.withContractsLock(spark, root) {
+        Commit.withContractsLock(spark, root) {
           assert(clobbered.await(30, java.util.concurrent.TimeUnit.SECONDS),
             "no heartbeat rewrite happened within 30s")
           Thread.sleep(300) // let the readback run and the flag land
@@ -298,7 +298,7 @@ class ContractsLockSpec extends SparkSpec {
       }
     }
     try {
-      SnapshotStore.withContractsLock(spark, root) {
+      Commit.withContractsLock(spark, root) {
         assert(rivalReleased.get(),
           "the waiter entered the critical section while the rival's " +
             "FRESH lock was live — its delayed delete removed the " +

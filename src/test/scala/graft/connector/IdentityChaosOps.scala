@@ -9,7 +9,7 @@ import scala.concurrent.duration._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-import graft.store.SnapshotStore
+import graft.store.{Identity, SnapshotStore}
 
 /** IDENTITY-LEDGER chaos (r16 verdict item 3): identity minting — the
   * reference's AUTOINCREMENT surrogate keys (`09 Order Entity.sql:71`)
@@ -308,7 +308,7 @@ object IdentityChaosOps {
     }
     // 3. the ledger frontier sits strictly ABOVE every id observed in
     //    its OWN epoch: the next mint can never duplicate
-    val next = SnapshotStore.reserveIdentity(spark, root, "sid", 1L)
+    val next = Identity.reserveIdentity(spark, root, "sid", 1L)
     if (maxSid != Long.MinValue && next <= maxSid) {
       val p = dump("ledger frontier BELOW observed ids",
         Seq(s"next: $next", s"maxSid: $maxSid", s"epoch: $epoch"))

@@ -67,7 +67,7 @@ class IdentityChaosSpec extends SparkSpec {
       if (dst.getName.startsWith("_identity_upto_") &&
           fired.compareAndSet(false, true)) {
         val t = new Thread({ () =>
-          minted.set(graft.store.SnapshotStore.reserveIdentity(
+          minted.set(graft.store.Identity.reserveIdentity(
             spark, root, "sid", 1L))
           mintDone.countDown()
         }: Runnable)
@@ -89,7 +89,7 @@ class IdentityChaosSpec extends SparkSpec {
       // installed chain then re-mints 1..6 — `next` lands at 1 <= 6.
       // post-fix: the mint waited out the install and minted from the
       // installed chain, so the next mint sits strictly above it.
-      val next = graft.store.SnapshotStore.reserveIdentity(spark, root, "sid", 1L)
+      val next = graft.store.Identity.reserveIdentity(spark, root, "sid", 1L)
       assert(next > minted.get(),
         s"the installed ledger re-mints id ${next} at or below the " +
           s"racing mint's ${minted.get()} — the mid-install mint read " +

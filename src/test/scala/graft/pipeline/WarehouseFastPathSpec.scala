@@ -15,6 +15,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.pipeline.Expectations.{Expectation, Quarantine}
+import graft.store.SnapshotStore
 import graft.streaming.StreamPipeline
 
 /** The warehouse's fast paths against their slow paths, and the job
@@ -69,7 +70,7 @@ class WarehouseFastPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def layout(target: String): Map[String, Set[String]] =
     if (!Files.isDirectory(Paths.get(target))) Map.empty
     else Files.list(Paths.get(target)).iterator.asScala.toSeq
-      .filter(_.getFileName.toString.startsWith(s"${StreamPipeline.BucketCol}="))
+      .filter(_.getFileName.toString.startsWith(s"${SnapshotStore.BucketCol}="))
       .map(b => b.getFileName.toString -> Files.list(b).iterator.asScala
         .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet)
       .toMap
@@ -80,7 +81,7 @@ class WarehouseFastPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       before.keySet.filterNot(after.contains)
 
   private def bucketOf(keys: Seq[Long], n: Int): Map[Long, Int] =
-    StreamPipeline.withBucket(keys.toDF("k"), Seq("k"), n)
+    SnapshotStore.withBucket(keys.toDF("k"), Seq("k"), n)
       .as[(Long, Int)].collect().toMap
 
   test("every layer runBatch and runFacts return matches spark.read.parquet in rows and schema") {
@@ -104,7 +105,7 @@ class WarehouseFastPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     def assertParity(out: Map[String, DataFrame]): Unit = out.foreach { case (k, df) =>
-      val slow = spark.read.parquet(s"$root/wh/$k").drop(StreamPipeline.BucketCol)
+      val slow = spark.read.parquet(s"$root/wh/$k").drop(SnapshotStore.BucketCol)
       assert(df.schema == slow.schema, s"$k schema")
       assert(df.schema.map(_.nullable) == slow.schema.map(_.nullable), s"$k nullability")
       assert(rows(df) == rows(slow), s"$k rows")
@@ -145,13 +146,13 @@ class WarehouseFastPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val (cleanBefore, dimBefore) = (layout(clean), layout(dim))
     tick(cfg, root, numBuckets = 16)
 
-    def dirs(bs: Seq[Int]) = bs.map(b => s"${StreamPipeline.BucketCol}=$b").toSet
+    def dirs(bs: Seq[Int]) = bs.map(b => s"${SnapshotStore.BucketCol}=$b").toSet
     assert(changed(dimBefore, layout(dim)) == dirs(moved.map(b8)))
     assert(changed(cleanBefore, layout(clean)) == dirs(moved.map(b4)))
     val d = spark.read.parquet(dim)
     assert(d.groupBy("loc_id", "rec_id").count().where($"count" > 1).isEmpty)
     // every dim row still sits in its key's bucket under 8
-    assert(d.select($"loc_id", $"${StreamPipeline.BucketCol}").as[(Long, Int)].collect()
+    assert(d.select($"loc_id", $"${SnapshotStore.BucketCol}").as[(Long, Int)].collect()
       .forall { case (k, b) => b8(k) == b })
     assert(d.where($"current_flag").select("loc_id", "rec_id").as[(Long, Long)].collect().toMap ==
       keys.map(k => k -> (if (moved.contains(k)) 300 + k else 200 + k)).toMap)
@@ -269,7 +270,7 @@ class WarehouseFastPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       f == "isEmpty" || find(qe.executedPlan)(_.isInstanceOf[CollectLimitExec]).isDefined }
     assert(limits.map(_._1) == Nil, "CollectLimit executions")
     val probes = seen.filter { case (_, qe) =>
-      qe.analyzed.exists(_.output.map(_.name) == Seq(StreamPipeline.BucketCol)) }
+      qe.analyzed.exists(_.output.map(_.name) == Seq(SnapshotStore.BucketCol)) }
     assert(probes.map(_._1) == Seq("collect"), "touched-bucket probes")
     assert(spark.read.parquet(s"$root/wh/dim/e1").where($"id" === 1).count() == 2)
   }

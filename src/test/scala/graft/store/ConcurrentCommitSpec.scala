@@ -182,7 +182,7 @@ class ConcurrentCommitSpec extends SparkSpec {
       val futs = (0 until nThreads).map { i =>
         Future {
           gate.await()
-          SnapshotStore.createExclusive(hfs, target) match {
+          Claims.createExclusive(hfs, target) match {
             case Some(out) =>
               try out.write(s"winner-$i".getBytes("UTF-8")) finally out.close()
               1

@@ -75,7 +75,7 @@ class FooterSchemaInvariantSpec extends SparkSpec {
     val d2 = s"$base/new"
     Seq((1L, "a")).toDF("k", "v").write.parquet(d1)
     Seq((2L, "b", 9L)).toDF("k", "v", "extra").write.parquet(d2)
-    val got = SnapshotStore.mergedFooterSchema(spark, Seq(d1, d2))
+    val got = Footers.mergedFooterSchema(spark, Seq(d1, d2))
     val inferred = spark.read.option("mergeSchema", "true")
       .parquet(d1, d2).schema
     assert(got.contains(inferred),
@@ -124,6 +124,6 @@ class FooterSchemaInvariantSpec extends SparkSpec {
     val base = tmpDir("empty")
     val d1 = s"$base/only"
     Files.createDirectories(java.nio.file.Paths.get(d1))
-    assert(SnapshotStore.mergedFooterSchema(spark, Seq(d1)).isEmpty)
+    assert(Footers.mergedFooterSchema(spark, Seq(d1)).isEmpty)
   }
 }

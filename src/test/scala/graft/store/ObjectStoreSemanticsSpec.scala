@@ -284,7 +284,7 @@ class ObjectStoreSemanticsSpec extends SparkSpec {
       val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val p = new Path(root, "_commits/" + f"${1L}%020d")
       // B opens its upload while the key is still absent…
-      val bOut = SnapshotStore.createExclusive(fs, p)
+      val bOut = Claims.createExclusive(fs, p)
       assert(bOut.isDefined, "no object at the key yet — the upload may open")
       bOut.get.write("not-a-manifest\n".getBytes("UTF-8"))
       // …A lands the real v1 commit in the meantime…

@@ -248,14 +248,14 @@ class PlainPutClaimsSpec extends SparkSpec {
         }
       // A reserves a SMALL block (count=2), suspends pre-PUT…
       val a = Future {
-        try Right(SnapshotStore.reserveIdentity(spark, root, "sk", 2L))
+        try Right(Identity.reserveIdentity(spark, root, "sk", 2L))
         catch { case e: Throwable => Left(e) }
       }
       assert(suspended.await(120, TimeUnit.SECONDS), "A never claimed a block")
       Thread.sleep(200) // …past the staleness grace…
       // …B supersedes the same (seq, first) with a LARGER count and
       // mints per it — B's ids are acknowledged downstream
-      val bFirst = SnapshotStore.reserveIdentity(spark, root, "sk", 5L)
+      val bFirst = Identity.reserveIdentity(spark, root, "sk", 5L)
       // …A's late PUT clobbers B's payload with count=2: if A reported
       // a clean win OR a clean loss, the next frontier read would sit
       // INSIDE B's minted range. The fence must fail A loudly.
@@ -280,14 +280,14 @@ class PlainPutClaimsSpec extends SparkSpec {
       val fs = fsOf(root)
       initTable(root)
       // first block lands normally: seq 0, first 1
-      assert(SnapshotStore.reserveIdentity(spark, root, "sk", 4L) == 1L)
+      assert(Identity.reserveIdentity(spark, root, "sk", 4L) == 1L)
       // a dead claimer holds the NEXT block's row and wrote nothing
       // (plain-PUT crash pre-close leaves no object, only the row)
       val next = new Path(root, "_identity/sk/" + f"block-${1L}%020d" + "_5")
       val arb = SnapshotStore.manifestArbiter.get
       assert(arb.claim(fs.makeQualified(next).toString, "dead-claimer"))
       Thread.sleep(200) // age the row past staleMs
-      val f2 = SnapshotStore.reserveIdentity(spark, root, "sk", 3L)
+      val f2 = Identity.reserveIdentity(spark, root, "sk", 3L)
       assert(f2 == 5L,
         s"the stale row must be superseded and the chain continue at 5, got $f2")
     }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.store.SnapshotStore
 
 class StreamPipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -165,14 +166,14 @@ class StreamPipelineSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_bucket").toString
     val nb = 4
     // pick two keys that land in different hash buckets (probe the real fn)
-    val probe = StreamPipeline.withBucket(
+    val probe = SnapshotStore.withBucket(
         (1L to 50L).toDF("k"), Seq("k"), nb)
       .as[(Long, Int)].collect().toMap
     val kA = probe.keys.head
     val kB = probe.keys.find(k => probe(k) != probe(kA)).get
 
     def listing(target: String, bucket: Int): Seq[(String, Long, Long)] = {
-      val p = Paths.get(target, s"${StreamPipeline.BucketCol}=$bucket")
+      val p = Paths.get(target, s"${SnapshotStore.BucketCol}=$bucket")
       import scala.jdk.CollectionConverters._
       Files.list(p).iterator().asScala.toSeq
         .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -223,7 +224,7 @@ class StreamPipelineSpec extends SparkSpec {
     def upsert(rows: (Long, String, Long, Boolean)*): Set[(Long, String)] = {
       StreamPipeline.upsertBatch(batch(rows: _*), target, Seq("k"), Seq(col("ts").desc),
         numBuckets = 4, deleteCol = Some("_del"))
-      val buckets = new java.io.File(target).list().filter(_.startsWith(s"${StreamPipeline.BucketCol}="))
+      val buckets = new java.io.File(target).list().filter(_.startsWith(s"${SnapshotStore.BucketCol}="))
       if (buckets.isEmpty) Set.empty
       else spark.read.parquet(target).select("k", "v").as[(Long, String)].collect().toSet
     }
@@ -325,7 +326,7 @@ class StreamPipelineSpec extends SparkSpec {
     // four keys across ≥2 distinct buckets; kDel/kIns chosen in a
     // DIFFERENT bucket than kStable so the delete batch provably
     // leaves kStable's bucket files untouched
-    val probe = StreamPipeline.withBucket((1L to 50L).toDF("k"), Seq("k"), nb)
+    val probe = SnapshotStore.withBucket((1L to 50L).toDF("k"), Seq("k"), nb)
       .as[(Long, Int)].collect().toMap
     val kStable = probe.keys.head
     val other = probe.keys.filter(k => probe(k) != probe(kStable))
@@ -350,7 +351,7 @@ class StreamPipelineSpec extends SparkSpec {
       scd1, Seq("k"), Seq(col("ts").desc), nb, Some(del))
     def listing(target: String, bucket: Int) = {
       import scala.jdk.CollectionConverters._
-      Files.list(Paths.get(target, s"${StreamPipeline.BucketCol}=$bucket"))
+      Files.list(Paths.get(target, s"${SnapshotStore.BucketCol}=$bucket"))
         .iterator().asScala.toSeq.map(_.toString).sorted
         .map(f => (f, Files.getLastModifiedTime(Paths.get(f)).toMillis,
           Files.size(Paths.get(f))))
@@ -448,7 +449,7 @@ class StreamPipelineSpec extends SparkSpec {
     // --- sink level: evolve an entity MID-STREAM through both targets
     val dir = Files.createTempDirectory("graft_evolve").toString
     val nb = 4
-    val probe = StreamPipeline.withBucket((1L to 50L).toDF("k"), Seq("k"), nb)
+    val probe = SnapshotStore.withBucket((1L to 50L).toDF("k"), Seq("k"), nb)
       .as[(Long, Int)].collect().toMap
     val kOld = probe.keys.head
     val kNew = probe.keys.find(k => probe(k) != probe(kOld)).get
@@ -459,7 +460,7 @@ class StreamPipelineSpec extends SparkSpec {
       scd1, Seq("k"), Seq(col("ts").desc), nb)
     def stableFiles() = {
       import scala.jdk.CollectionConverters._
-      Files.list(java.nio.file.Paths.get(scd1, s"${StreamPipeline.BucketCol}=${probe(kOld)}"))
+      Files.list(java.nio.file.Paths.get(scd1, s"${SnapshotStore.BucketCol}=${probe(kOld)}"))
         .iterator().asScala.map(p => (p.toString, Files.getLastModifiedTime(p).toMillis)).toSeq.sorted
     }
     val before = stableFiles()
