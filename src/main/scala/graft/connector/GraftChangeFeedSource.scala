@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
-import graft.store.{ChangeFeed, SnapshotStore}
+import graft.store.{Breadcrumbs, ChangeFeed, SnapshotStore}
 
 /** `spark.readStream.format("graft")` — a continuous tail of a
   * [[SnapshotStore]] table's [[ChangeFeed]], the streaming face of the
@@ -332,6 +332,17 @@ object GraftChangeFeedSource {
 
   private val StartSchemaFile = "_graft_feed_schema"
 
+  /** A start file in the query's checkpoint `metadataPath`, None when
+    * absent. Start files are written through [[Breadcrumbs.publish]]
+    * and read through [[Breadcrumbs.text]]: a restart never reads a
+    * truncated file, and one deleted under the reader reads as absent.
+    */
+  private def checkpointText(spark: SparkSession, metadataPath: String,
+                             name: String): Option[String] = {
+    val f = new Path(metadataPath, name)
+    Breadcrumbs.text(f.getFileSystem(spark.sparkContext.hadoopConfiguration), f)
+  }
+
   /** The schema a STARTING source must run with, durably tied to the
     * query via its checkpoint `metadataPath`: a fresh start persists
     * its pin (or fresh resolution) there; a RESTART reads it back —
@@ -343,32 +354,11 @@ object GraftChangeFeedSource {
                                      metadataPath: Option[String],
                                      root: String,
                                      pinned: Option[StructType]): StructType = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val file = metadataPath.map(mp =>
-      new org.apache.hadoop.fs.Path(mp, StartSchemaFile))
-    def persist(s: StructType): Unit = file.foreach { f =>
-      val fs = f.getFileSystem(conf)
-      fs.mkdirs(f.getParent)
-      val out = fs.create(f, true)
-      try out.write(s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    def persisted: Option[StructType] = file.flatMap { f =>
-      val fs = f.getFileSystem(conf)
-      if (!fs.exists(f)) None
-      else {
-        val in = fs.open(f)
-        val text = try {
-          val bos = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-          bos.toString("UTF-8")
-        } finally in.close()
-        Some(org.apache.spark.sql.types.DataType.fromJson(text)
-          .asInstanceOf[StructType])
-      }
-    }
+    def persist(s: StructType): Unit = metadataPath.foreach(mp =>
+      Breadcrumbs.publish(spark, mp, StartSchemaFile, s.json))
+    def persisted: Option[StructType] = metadataPath.flatMap(mp =>
+      checkpointText(spark, mp, StartSchemaFile)).map(text =>
+      org.apache.spark.sql.types.DataType.fromJson(text).asInstanceOf[StructType])
     pinned match {
       case Some(p) => persist(p); p
       case None => persisted.getOrElse {
@@ -395,28 +385,9 @@ object GraftChangeFeedSource {
                                              metadataPath: Option[String],
                                              root: String): Unit =
     metadataPath.foreach { mp =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val f = new org.apache.hadoop.fs.Path(mp, StartIdentityFile)
-      val fs = f.getFileSystem(conf)
       val cur = SnapshotStore.tableInstanceId(spark, root)
-      val stored: Option[String] =
-        if (!fs.exists(f)) None
-        else {
-          val in = fs.open(f)
-          try {
-            val bos = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](256)
-            var n = in.read(buf)
-            while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-            Some(bos.toString("UTF-8").trim).filter(_.nonEmpty)
-          } finally in.close()
-        }
-      stored match {
-        case None =>
-          fs.mkdirs(f.getParent)
-          val out = fs.create(f, true)
-          try out.write(cur.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
+      checkpointText(spark, mp, StartIdentityFile).map(_.trim).filter(_.nonEmpty) match {
+        case None => Breadcrumbs.publish(spark, mp, StartIdentityFile, cur)
         case Some(id) if id != cur =>
           throw new java.util.ConcurrentModificationException(
             s"the table at $root was dropped and re-created since this " +

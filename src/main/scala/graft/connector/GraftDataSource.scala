@@ -38,10 +38,12 @@ import graft.store.SnapshotStore.Manifest
   * surviving files are split at `maxPartitionBytes` like Spark's own
   * file scans, and the SAME filters flow into the parquet reader for
   * row-group skipping. Merge-on-read tombstones are applied IN-SCAN:
-  * each partition carries its bucket's deleted-key set (delta-sized by
-  * design) and the reader drops matching rows before they surface —
-  * readers see exactly [[SnapshotStore.read]] semantics with no
-  * post-scan anti-join. Pushed filters are also reported as residuals,
+  * the scan reads the delete sidecars of only the buckets it reads,
+  * once, on the driver with no Spark job, and broadcasts the deleted
+  * keys (delta-sized by design); each reader drops its bucket's
+  * matching rows before they surface — readers see exactly
+  * [[SnapshotStore.read]] semantics with no post-scan anti-join.
+  * Pushed filters are also reported as residuals,
   * so Spark re-applies them exactly: pruning is an optimization, never
   * a correctness dependency.
   *
@@ -1465,7 +1467,8 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
 
   /** Pruning observability in the Spark UI (SQL node metrics): how
     * many buckets/files the manifest held vs how many this scan will
-    * actually read, and the tombstone debt it subtracts in-scan. At
+    * actually read, the table's tombstone debt, and the deleted keys
+    * this scan loaded to subtract in-scan. At
     * warehouse scale "did the filter prune?" must be readable off the
     * executed plan, not re-derived by explaining the query — these are
     * driver-side planning facts, so they report through
@@ -1477,7 +1480,8 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     new GraftSumMetric("graftBucketsPruned", "graft: buckets pruned"),
     new GraftSumMetric("graftFilesRead", "graft: files read"),
     new GraftSumMetric("graftPlannedBytes", "graft: planned bytes"),
-    new GraftSumMetric("graftTombstoneBuckets", "graft: buckets with delete sidecars"))
+    new GraftSumMetric("graftTombstoneBuckets", "graft: buckets with delete sidecars"),
+    new GraftSumMetric("graftTombstoneKeys", "graft: deleted keys loaded"))
 
   override def reportDriverMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
@@ -1494,7 +1498,8 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
       metric("graftFilesRead", files.size.toLong),
       metric("graftPlannedBytes", files.map(_._3).sum),
       metric("graftTombstoneBuckets",
-        m.buckets.values.count(_.tombstones.nonEmpty).toLong))
+        m.buckets.values.count(_.tombstones.nonEmpty).toLong),
+      metric("graftTombstoneKeys", tombstones._2.values.map(_.size.toLong).sum))
   }
 
   /** Cached alongside the file plan: plan-tree copies and UI events
@@ -1620,33 +1625,69 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
               case None => acc
             }
         }
-      dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(dir).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-          && !st.getPath.getName.startsWith("."))
+      dataFiles(dir)
         .filter(st => kept.forall(_.contains(st.getPath.getName)))
         .map(st => (st.getPath, b, st.getLen))
     }
   }
 
-  /** Buckets' unfolded delete sidecars, collected to (key schema,
-    * bucket → deleted key tuples in catalyst form). Sidecars are
-    * deltas since the buckets' last rewrite — metadata-sized by the
-    * same argument the library read path broadcasts them.
+  /** The parquet files of one data or sidecar directory (`_`- and
+    * `.`-prefixed names are markers and checksums).
+    */
+  private def dataFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
+        && !st.getPath.getName.startsWith("."))
+
+  /** The parquet reader for every file this scan opens — data splits on
+    * the executors, delete sidecars on the driver. returning_batch=false:
+    * the reader unwraps its own vectorized batches into rows — the DSv2
+    * row contract, no smuggled ColumnarBatch to special-case.
+    */
+  private def parquetReader(fileSchema: StructType, readSchema: StructType,
+                            pushed: Seq[Filter]): PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, fileSchema, new StructType(), readSchema, pushed,
+      Map(org.apache.spark.sql.execution.datasources.FileFormat
+        .OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+
+  /** The unfolded delete sidecars of the buckets this scan reads,
+    * collected to (key schema, bucket → deleted key tuples in catalyst
+    * form). Read once, when the reader factory is built: the buckets
+    * are those of [[plannedFiles]] at that point (runtime narrowing only
+    * ever shrinks that set, so no split reads a bucket whose keys are
+    * missing), and the files go through the scan's own parquet reader
+    * on the driver — no DataFrame, no Spark job. Each row is copied
+    * because the reader reuses its buffers. Sidecars are deltas since
+    * the buckets' last rewrite — metadata-sized by the same argument
+    * the library read path broadcasts them.
     */
   private lazy val tombstones: (StructType, Map[Int, Set[Seq[Any]]]) = {
-    val withTombs = m.buckets.filter(_._2.tombstones.nonEmpty)
+    val read = plannedFiles.map(_._2).toSet
+    val withTombs = m.buckets.toSeq.collect {
+      case (b, e) if read(b) && e.tombstones.nonEmpty =>
+        b -> e.tombstones.map(d => SnapshotStore.dataPath(root, d))
+    }
     if (withTombs.isEmpty) (new StructType(), Map.empty)
     else {
-      val perBucket = withTombs.map { case (b, e) =>
-        val dirs = e.tombstones.map(d => SnapshotStore.dataPath(root, d).toString)
-        val df = Footers.mergedSchemaRead(spark, dirs).parquet(dirs: _*)
-        val schema = df.schema
-        val keys = df.queryExecution.executedPlan.executeCollect()
-          .map(_.toSeq(schema)).map(_.toSeq: Seq[Any]).toSet
-        (b, schema, keys)
-      }.toSeq
-      (perBucket.head._2, perBucket.map { case (b, _, ks) => b -> ks }.toMap)
+      val dirs = withTombs.flatMap(_._2.map(_.toString))
+      val schema = Footers.mergedFooterSchema(spark, dirs).getOrElse(
+        Footers.inferenceFallback(spark, dirs).parquet(dirs: _*).schema)
+      val readFile = parquetReader(schema, schema, Nil)
+      def keysIn(st: org.apache.hadoop.fs.FileStatus): Seq[Seq[Any]] = {
+        val rows = readFile(PartitionedFile(InternalRow.empty,
+          SparkPath.fromPath(st.getPath), 0L, st.getLen, Array.empty, 0L, st.getLen))
+        try rows.map(_.copy().toSeq(schema)).toVector
+        finally rows match {
+          case c: java.io.Closeable => c.close()
+          case _ => ()
+        }
+      }
+      (schema, withTombs.map { case (b, ds) =>
+        b -> ds.flatMap(dataFiles).flatMap(keysIn).toSet
+      }.toMap)
     }
   }
 
@@ -1685,16 +1726,7 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     val keyOrdinals =
       if (tombs.isEmpty) Array.empty[Int]
       else keySchema.fields.map(f => readerSchema.fieldIndex(f.name))
-    val fmt = new ParquetFileFormat()
-    // returning_batch=false: the reader unwraps its own vectorized
-    // batches into rows — the DSv2 row contract, no smuggled
-    // ColumnarBatch to special-case
-    val readFunc = fmt.buildReaderWithPartitionValues(
-      spark, dataSchema, new StructType(), readerSchema,
-      parquetFilters,
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+    val readFunc = parquetReader(dataSchema, readerSchema, parquetFilters)
     // deleted-key sets ship ONCE per executor as a broadcast, not once
     // per task inside every split's InputPartition — a heavily-
     // tombstoned bucket split 40 ways must not serialize its key set

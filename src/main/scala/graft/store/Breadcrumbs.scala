@@ -13,7 +13,8 @@ import SnapshotStore.{ColStat, TableColStats, fileSystem, isObjectStore, schemeO
   * `_colstats`, `_schema`, `_clone_source`, `_branch_base` and the
   * identity-ledger certificate — with the one line reader
   * ([[Breadcrumbs.readLines]]) and the one atomic publisher
-  * ([[Breadcrumbs.publish]]) every metadata file goes through.
+  * ([[Breadcrumbs.publish]]) every metadata file goes through — a
+  * change-feed query's start files in its checkpoint included.
   *
   * A breadcrumb is mutable and version-less: writers replace it whole
   * through [[Breadcrumbs.publish]], so a reader sees the old bytes or
@@ -67,7 +68,7 @@ private[graft] object Breadcrumbs {
     * vacuum) reads as absent instead of failing the caller with an
     * I/O error.
     */
-  private[store] def text(fs: FileSystem, p: Path): Option[String] =
+  private[graft] def text(fs: FileSystem, p: Path): Option[String] =
     try Some(readLines(fs, p)(_.mkString("\n")))
     catch { case _: FileNotFoundException => None }
 
@@ -87,7 +88,7 @@ private[graft] object Breadcrumbs {
     * POSIX `rename(2)` — atomic for every reader; a missing checksum
     * is skipped by readers, never mismatched.
     */
-  private[store] def publish(spark: SparkSession, root: String,
+  private[graft] def publish(spark: SparkSession, root: String,
                              name: String, body: String): Unit = {
     val p = new Path(root, name)
     val fs = fileSystem(spark, root)

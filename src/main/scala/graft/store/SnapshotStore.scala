@@ -7,6 +7,7 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -676,18 +677,25 @@ object SnapshotStore {
     * requested key tuples hash into — at any table size a key lookup
     * touches 1/numBuckets of the data (the layout's partition-pruning
     * dividend; [[commitDelta]] uses the same path for its merges).
-    * `keyValues` are tuples in `keys` order.
+    * `keyValues` are tuples in `keys` order. The key types come from one
+    * bucket's footer and the tuples are routed on the driver with
+    * [[bucketOf]]; building the frame runs no Spark job.
     */
   def readForKeys(spark: SparkSession, root: String, keys: Seq[String],
                   keyValues: Seq[Seq[Any]]): DataFrame = {
     val m = readManifest(spark, root, latestVersion(spark, root)
       .getOrElse(throw new IllegalStateException(s"no committed version at $root")))
-    val schema = read(spark, root).schema
+    val schema = m.buckets.values.headOption
+      .flatMap(e => mergedFooterSchema(spark, Seq(dataPath(root, e.dir).toString)))
+      .getOrElse(read(spark, root).schema)
+    val keySchema = org.apache.spark.sql.types.StructType(keys.map(k => schema(k)))
+    // type-directed conversion, as the probe frame's encoder does it
+    val converters = keySchema.fields.toSeq.map(f =>
+      (CatalystTypeConverters.createToCatalystConverter(f.dataType), f.dataType))
+    val buckets = keyValues.map(t => bucketOf(t.zip(converters).map {
+      case (v, (conv, dt)) => Literal(conv(v), dt) }, m.numBuckets)).toSet
     val probe = spark.createDataFrame(
-      spark.sparkContext.parallelize(keyValues.map(Row.fromSeq), 1),
-      org.apache.spark.sql.types.StructType(keys.map(k => schema(k))))
-    val buckets = withBucket(probe, keys, m.numBuckets)
-      .select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+      spark.sparkContext.parallelize(keyValues.map(Row.fromSeq), 1), keySchema)
     readBuckets(spark, root, m, buckets)
       .join(broadcast(probe), keys, "left_semi")
   }
@@ -1319,7 +1327,10 @@ object SnapshotStore {
     * (the deletion-vector analog; reference: the `METADATA$ACTION =
     * 'DELETE'` branches in `/root/reference/02 Location Entity.sql`,
     * which lean on Snowflake's internal merge-on-read). Readers
-    * subtract sidecars at scan time ([[antiJoinTombstones]]); the next
+    * subtract sidecars at scan time: the library read path by an
+    * anti-join ([[antiJoinTombstones]]), a connector scan by reading
+    * the sidecars of only its own buckets, once, on the driver with no
+    * Spark job (`GraftScan.tombstones`); the next
     * rewrite of a bucket — a [[commitDelta]] merge or [[compact]] —
     * folds them in and clears the list; [[vacuum]] then reclaims the
     * folded sidecar files.

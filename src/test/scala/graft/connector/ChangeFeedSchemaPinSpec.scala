@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 
@@ -192,5 +193,34 @@ class ChangeFeedSchemaPinSpec extends SparkSpec {
     run() // restart: no pin pending — checkpoint-persisted schema wins
     assert(seen.asScala.forall(_.take(2) == Seq("k", "v")),
       s"restart delivered a foreign shape: ${seen.asScala.toSeq}")
+  }
+
+  test("the start files are published whole and a start file deleted under its reader reads as absent") {
+    // bcfs:// is the breadcrumb double: it records every write-open and
+    // can delete a file at the moment it is opened
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.bcfs.impl", classOf[graft.store.BreadcrumbFS].getName)
+    conf.set("fs.AbstractFileSystem.bcfs.impl", classOf[graft.store.BreadcrumbAfs].getName)
+    spark.sql("""CREATE TABLE pns.ns.ck (k BIGINT, v BIGINT) USING graft
+                 TBLPROPERTIES ('keys'='k', 'numBuckets'='2')""")
+    spark.sql("INSERT INTO pns.ns.ck VALUES (1, 10)")
+    val root = s"$warehouse/ns/ck"
+    val local = Files.createTempDirectory("graft-pin-files").toString + "/sources/0"
+    val mp = "bcfs://" + local
+    graft.store.BreadcrumbFS.reset()
+    try {
+      def start(): StructType = {
+        GraftChangeFeedSource.verifyStartIdentity(spark, Some(mp), root)
+        GraftChangeFeedSource.startSchema(spark, Some(mp), root, None)
+      }
+      val first = start() // persists both files
+      assert(start() == first) // a restart reads both back
+      val live = Seq("_graft_feed_schema", "_graft_feed_identity").map(n => s"$local/$n")
+      val opened = graft.store.BreadcrumbFS.writeOpened.asScala.toSeq
+      assert(opened.intersect(live).isEmpty,
+        s"a live start file was opened for writing (a restart can read it empty): $opened")
+      graft.store.BreadcrumbFS.vanishOnOpen = _.getName.startsWith("_graft_feed_")
+      assert(start() == first)
+    } finally graft.store.BreadcrumbFS.reset()
   }
 }

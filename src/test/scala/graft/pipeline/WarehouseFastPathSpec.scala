@@ -6,7 +6,6 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -222,26 +221,8 @@ class WarehouseFastPathSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def cfg(n: Int) = Warehouse.Config(names.take(n).map(qtyEntity(root, _)), Seq(fact))
     Warehouse.runBatch(spark, cfg(6), s"$root/wh", numBuckets = 4)
 
-    val sc = spark.sparkContext
-    def jobsOf(group: String)(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
-      sc.addSparkListener(l)
-      sc.setJobGroup(group, group)
-      try body
-      finally {
-        sc.clearJobGroup()
-        ListenerBusDrain(sc)
-        sc.removeSparkListener(l)
-      }
-      jobs.get
-    }
-    val two = jobsOf("facts-2")(Warehouse.runFacts(spark, cfg(2), s"$root/wh"))
-    val six = jobsOf("facts-6")(Warehouse.runFacts(spark, cfg(6), s"$root/wh"))
+    val two = jobsRun(Warehouse.runFacts(spark, cfg(2), s"$root/wh"))
+    val six = jobsRun(Warehouse.runFacts(spark, cfg(6), s"$root/wh"))
     assert(two > 0 && two == six, s"runFacts jobs: $two for 2 entities, $six for 6")
   }
 

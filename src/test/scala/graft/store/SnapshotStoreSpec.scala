@@ -68,6 +68,26 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(scanned.size <= 2, s"expected ≤2 bucket dirs, scanned $scanned")
   }
 
+  test("readForKeys routes its keys on the driver: building the lookup starts no Spark job") {
+    val root = tmpDir("lookup-jobs")
+    SnapshotStore.init(spark, root, (1L to 200L).map(k => (k, s"v$k", 1L))
+      .toDF("k", "v", "ts"), Seq("k"), numBuckets = 8)
+    SnapshotStore.commitDeletes(spark, root, Seq(9L).toDF("k"), Seq("k"))
+    var got: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsRun {
+      got = SnapshotStore.readForKeys(spark, root, Seq("k"), Seq(Seq(7L), Seq(9L), Seq(150L)))
+    }
+    assert(jobs == 0, s"building the lookup started $jobs Spark jobs")
+    assert(rows(got) == Set((7L, "v7", 1L), (150L, "v150", 1L)))
+    // a composite (string, int) key routes to the buckets its rows were written to
+    val croot = tmpDir("lookup-composite")
+    SnapshotStore.init(spark, croot, (1 to 120).map(i => (s"s${i % 7}", i, s"v$i"))
+      .toDF("s", "i", "v"), Seq("s", "i"), numBuckets = 8)
+    assert(SnapshotStore.readForKeys(spark, croot, Seq("s", "i"),
+      Seq(Seq("s3", 3), Seq("s5", 12), Seq("s1", 2))).as[(String, Int, String)]
+      .collect().toSet == Set(("s3", 3, "v3"), ("s5", 12, "v12")))
+  }
+
   test("readers never see a torn state: uncommitted data dirs are invisible") {
     val root = tmpDir("crash")
     val v0 = (1L to 50L).map(k => (k, s"v$k", 1L)).toDF("k", "v", "ts")
