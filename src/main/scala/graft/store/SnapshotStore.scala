@@ -7,7 +7,6 @@ import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -679,7 +678,7 @@ object SnapshotStore {
     * dividend; [[commitDelta]] uses the same path for its merges).
     * `keyValues` are tuples in `keys` order. The key types come from one
     * bucket's footer and the tuples are routed on the driver with
-    * [[bucketOf]]; building the frame runs no Spark job.
+    * `bucketOf`; building the frame runs no Spark job.
     */
   def readForKeys(spark: SparkSession, root: String, keys: Seq[String],
                   keyValues: Seq[Seq[Any]]): DataFrame = {
@@ -689,11 +688,8 @@ object SnapshotStore {
       .flatMap(e => mergedFooterSchema(spark, Seq(dataPath(root, e.dir).toString)))
       .getOrElse(read(spark, root).schema)
     val keySchema = org.apache.spark.sql.types.StructType(keys.map(k => schema(k)))
-    // type-directed conversion, as the probe frame's encoder does it
-    val converters = keySchema.fields.toSeq.map(f =>
-      (CatalystTypeConverters.createToCatalystConverter(f.dataType), f.dataType))
-    val buckets = keyValues.map(t => bucketOf(t.zip(converters).map {
-      case (v, (conv, dt)) => Literal(conv(v), dt) }, m.numBuckets)).toSet
+    val buckets = keyValues.map(t => bucketOf(t.zip(keySchema.fields).map {
+      case (v, f) => Literal.create(v, f.dataType) }, m.numBuckets)).toSet
     val probe = spark.createDataFrame(
       spark.sparkContext.parallelize(keyValues.map(Row.fromSeq), 1), keySchema)
     readBuckets(spark, root, m, buckets)

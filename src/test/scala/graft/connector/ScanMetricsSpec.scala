@@ -165,6 +165,23 @@ class ScanMetricsSpec extends SparkSpec {
     }
   }
 
+  test("a sidecar longer than one reader batch loads every deleted string key") {
+    withoutAqe {
+      // one bucket, 18,000 deleted keys over 4 shuffle partitions: each
+      // sidecar file spans two of the vectorized reader's 4,096-row
+      // batches, whose string bytes the reader overwrites in place
+      val root = Files.createTempDirectory("graft-smb").toString + "/t"
+      val keys = (0 until 20000).map(i => f"key-$i%05d")
+      keys.map(k => (k, k.length)).toDF("k", "v")
+        .write.format("graft").option("keys", "k").option("numBuckets", "1").save(root)
+      val deleted = keys.filterNot(_.endsWith("0"))
+      SnapshotStore.commitDeletes(spark, root, deleted.toDF("k"), Seq("k"))
+      val df = spark.read.format("graft").load(root).select("k")
+      assert(df.collect().map(_.getString(0)).toSet == (keys.toSet -- deleted))
+      assert(scanMetric(df.queryExecution.executedPlan, "graftTombstoneKeys") == deleted.size)
+    }
+  }
+
   test("a CoW UPDATE and a delta MERGE after a tombstone DELETE stay correct") {
     val warehouse = Files.createTempDirectory("graft-smdml").toString
     spark.conf.set("spark.sql.catalog.smd", classOf[GraftCatalog].getName)

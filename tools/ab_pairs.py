@@ -27,8 +27,13 @@ build stamp and launch files, and run.py would then silently run the
 original's jars. Make the parent checkout with `git clone` or
 `git archive` instead.
 
+It also prints each op's median wall time per side, from the per-op
+detail run.py leaves in the checkout (an op that runs more than once in
+a pass is numbered by its position: `point.cow`, `point.cow#2`, ...),
+so a change in an end-to-end metric can be traced to the ops that moved.
+
 Runs that report `correct: false` or failed ops are listed and make the
-exit code 1. Every run's result line is appended to
+exit code 1. Every run's result line and per-op medians are appended to
 <change-checkout>/.bench_build/ab_pairs-<W>.jsonl.
 """
 
@@ -73,6 +78,21 @@ def run(checkout, workload, seed):
         tail = "\n".join(proc.stderr.strip().splitlines()[-5:])
         fail(f"run.py in {checkout} (seed {seed}) exited with {proc.returncode}:\n{tail}")
     return json.loads(lines[-1])
+
+
+def op_medians(checkout, workload):
+    """Each op's median wall ms over the passes of the run just made."""
+    detail = os.path.join(checkout, ".bench_build", "perfbench", f"work-{workload}", "detail.json")
+    with open(detail) as f:
+        passes = json.load(f)["passes"]
+    per_op = {}
+    for p in passes:
+        seen = {}
+        for op in p["ops"]:
+            seen[op["name"]] = seen.get(op["name"], 0) + 1
+            label = op["name"] + (f"#{seen[op['name']]}" if seen[op["name"]] > 1 else "")
+            per_op.setdefault(label, []).append(op["ms"])
+    return {label: statistics.median(ms) for label, ms in per_op.items()}
 
 
 def quartiles(xs):
@@ -124,16 +144,19 @@ def main():
     log = os.path.join(a.change, ".bench_build", f"ab_pairs-{a.workload}.jsonl")
     os.makedirs(os.path.dirname(log), exist_ok=True)
     results = {"parent": [], "change": []}
+    ops = {"parent": [], "change": []}
     broken = []
     for i, seed in enumerate(range(lo, hi + 1)):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
             r = run(sides[side], a.workload, seed)
             results[side].append(r)
+            ops[side].append(op_medians(sides[side], a.workload))
             if not r.get("correct") or r.get("failed", 0):
                 broken.append(f"{side} seed {seed}")
             with open(log, "a") as f:
-                f.write(json.dumps({"side": side, "seed": seed, "result": r}) + "\n")
+                f.write(json.dumps({"side": side, "seed": seed, "result": r,
+                                    "op_ms": ops[side][-1]}) + "\n")
             vals = " ".join(f"{k}={v['value']:.1f}" for k, v in sorted(r["metrics"].items()))
             print(f"ab_pairs: seed {seed} {side}: {vals}", file=sys.stderr)
 
@@ -149,8 +172,16 @@ def main():
         c1, cm, c3 = quartiles(change)
         wins, v = verdict(parent, change, m["better"] == "lower", m["bound"])
         ratio = cm / pm if pm else float("nan")
-        print(f"{name:<16} {pm:>12.1f} [{p3 - p1:>9.1f}] {cm:>14.1f} [{c3 - c1:>9.1f}] "
+        print(f"{name:<16} {pm:>12.4g} [{p3 - p1:>9.3g}] {cm:>14.4g} [{c3 - c1:>9.3g}] "
               f"{ratio:>6.3f} {wins:>3}/{n:<2}  {v}")
+    print(f"\n{'op':<16} {'parent ms':>10} {'change ms':>10} {'ratio':>6} {'won':>6}")
+    for label in ops["parent"][0]:
+        parent = [o[label] for o in ops["parent"] if label in o]
+        change = [o[label] for o in ops["change"] if label in o]
+        wins = sum(1 for p, c in zip(parent, change) if c < p)
+        pm, cm = statistics.median(parent), statistics.median(change)
+        print(f"{label:<16} {pm:>10.1f} {cm:>10.1f} {cm / pm if pm else float('nan'):>6.3f} "
+              f"{wins:>3}/{len(parent):<2}")
     if broken:
         print(f"incorrect or failed runs: {', '.join(broken)}")
         sys.exit(1)
