@@ -1631,14 +1631,8 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     }
   }
 
-  /** The parquet files of one data or sidecar directory (`_`- and
-    * `.`-prefixed names are markers and checksums).
-    */
   private def dataFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dir).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-        && !st.getPath.getName.startsWith("."))
+    Footers.dataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
 
   /** The parquet reader for every file this scan opens — data splits on
     * the executors, delete sidecars on the driver. returning_batch=false:
@@ -1659,22 +1653,28 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
     * are those of [[plannedFiles]] at that point (runtime narrowing only
     * ever shrinks that set, so no split reads a bucket whose keys are
     * missing), and the files go through the scan's own parquet reader
-    * on the driver — no DataFrame, no Spark job. Each row is copied
-    * because the reader reuses its buffers. Sidecars are deltas since
-    * the buckets' last rewrite — metadata-sized by the same argument
-    * the library read path broadcasts them.
+    * on the driver — no DataFrame, no Spark job. Each sidecar dir is
+    * listed once (the listing feeds both the footer schema and the key
+    * read), and the listings and file reads run on the bounded footer
+    * pool, so many tombstoned buckets cost concurrent, not serial,
+    * round-trips. Each row is copied because the reader reuses its
+    * buffers. Sidecars are deltas since the buckets' last rewrite —
+    * metadata-sized by the same argument the library read path
+    * broadcasts them.
     */
   private lazy val tombstones: (StructType, Map[Int, Set[Seq[Any]]]) = {
     val read = plannedFiles.map(_._2).toSet
-    val withTombs = m.buckets.toSeq.collect {
-      case (b, e) if read(b) && e.tombstones.nonEmpty =>
-        b -> e.tombstones.map(d => SnapshotStore.dataPath(root, d))
-    }
-    if (withTombs.isEmpty) (new StructType(), Map.empty)
+    val sidecars = m.buckets.toSeq.collect {
+      case (b, e) if read(b) => e.tombstones.map(d => b -> SnapshotStore.dataPath(root, d))
+    }.flatten
+    if (sidecars.isEmpty) (new StructType(), Map.empty)
     else {
-      val dirs = withTombs.flatMap(_._2.map(_.toString))
-      val schema = Footers.mergedFooterSchema(spark, dirs).getOrElse(
-        Footers.inferenceFallback(spark, dirs).parquet(dirs: _*).schema)
+      val listed = Footers.parFooterIo(sidecars) { case (b, d) => (b, d.toString, dataFiles(d)) }
+      val schema = Footers.mergedListedSchema(spark, listed.map { case (_, d, fs) => d -> fs })
+        .getOrElse {
+          val dirs = listed.map(_._2)
+          Footers.inferenceFallback(spark, dirs).parquet(dirs: _*).schema
+        }
       val readFile = parquetReader(schema, schema, Nil)
       def keysIn(st: org.apache.hadoop.fs.FileStatus): Seq[Seq[Any]] = {
         val rows = readFile(PartitionedFile(InternalRow.empty,
@@ -1685,9 +1685,10 @@ class GraftScan(spark: SparkSession, root: String, m: Manifest,
           case _ => ()
         }
       }
-      (schema, withTombs.map { case (b, ds) =>
-        b -> ds.flatMap(dataFiles).flatMap(keysIn).toSet
-      }.toMap)
+      val perFile = Footers.parFooterIo(listed.flatMap { case (b, _, fs) => fs.map(b -> _) }) {
+        case (b, st) => b -> keysIn(st)
+      }
+      (schema, perFile.groupMapReduce(_._1)(_._2.toSet)(_ ++ _))
     }
   }
 

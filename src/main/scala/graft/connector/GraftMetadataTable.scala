@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.store.SnapshotStore
+import graft.store.{Footers, SnapshotStore}
 
 /** Inspection views as SELECT-able relations: `cat.ns.t.meta_<kind>`
   * (the identifier convention `branch_`/`tag_` already use — a real
@@ -94,12 +94,10 @@ object GraftMetadataTable {
         Kinds.toSeq.sorted.map("meta_" + _).mkString(", "))
   }
 
-  private def dataFiles(spark: SparkSession, root: String, rel: String) = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(SnapshotStore.dataPath(root, rel)).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_")
-        && !st.getPath.getName.startsWith("."))
-  }
+  private def dataFiles(spark: SparkSession, root: String, rel: String) =
+    Footers.dataFiles(
+      new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      SnapshotStore.dataPath(root, rel))
 
   def rowsOf(spark: SparkSession, root: String, kind: String,
              versionAsOf: Option[Long] = None): Array[InternalRow] = {

@@ -1,8 +1,10 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import SnapshotStore.{BucketCol, BucketEntry, attemptDir, readProps, withBucket}
 import Identity.{identitySpecs, reserveIdentityBlock}
@@ -36,18 +38,29 @@ private[graft] object Footers {
     })
   }
 
-  /** Map `f` over `xs` on [[footerIoPool]] (order-preserving).
-    * Exceptions from any element rethrow (wrapped) at `get()` — the
-    * callers' NonFatal fallbacks treat them exactly like the old
-    * sequential failure.
+  /** Map `f` over `xs` on [[footerIoPool]] (order-preserving). The
+    * first failing element's own exception rethrows, unwrapped, so a
+    * caller sees exactly the sequential failure. `f` must not itself
+    * call this (a pool task waiting on the pool can deadlock it).
     */
-  private def parFooterIo[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+  private[graft] def parFooterIo[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     if (xs.sizeIs <= 1) xs.map(f)
     else xs.map { x =>
       footerIoPool.submit(new java.util.concurrent.Callable[B] {
         override def call(): B = f(x)
       })
-    }.map(_.get())
+    }.map { fut =>
+      try fut.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
+
+  /** The parquet files of one data or sidecar directory (`_`- and
+    * `.`-prefixed names are markers and checksums).
+    */
+  private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
 
   /** Reader for a set of bucket dirs whose union schema spans additive
     * evolution (old rows null-fill new columns). The schema comes from
@@ -60,23 +73,40 @@ private[graft] object Footers {
     * error behavior is unchanged.
     */
   private[graft] def mergedFooterSchema(spark: SparkSession,
-                                        dirs: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    try {
-      val hconf = spark.sessionState.newHadoopConf()
-      // one footer per dir, read CONCURRENTLY (bounded pool) — at
-      // thousands of dirs the old per-dir serial loop was O(dirs)
-      // driver round-trips
-      val schemas = parFooterIo(dirs.sorted) { d =>
+                                        dirs: Seq[String]): Option[StructType] =
+    mergedOrInference(spark) { hconf =>
+      // one listing + footer per dir, read CONCURRENTLY (bounded
+      // pool) — at thousands of dirs the old per-dir serial loop was
+      // O(dirs) driver round-trips
+      parFooterIo(dirs.sorted) { d =>
         val p = new Path(d)
-        val fs = p.getFileSystem(hconf)
-        fs.listStatus(p).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .sortBy(_.getPath.getName).headOption
-          .map(first => org.apache.spark.sql.graft.GraftSqlShims
-            .parquetFooterSchema(spark, hconf, first.getPath))
+        firstFooterSchema(spark, hconf, dataFiles(p.getFileSystem(hconf), p))
       }
+    }
+
+  /** [[mergedFooterSchema]] of dirs the caller has already listed (dir
+    * → its [[dataFiles]]), so a caller that goes on to read the files
+    * lists each dir once.
+    */
+  private[graft] def mergedListedSchema(spark: SparkSession,
+                                        listed: Seq[(String, Seq[FileStatus])]): Option[StructType] =
+    mergedOrInference(spark) { hconf =>
+      parFooterIo(listed.sortBy(_._1)) { case (_, files) => firstFooterSchema(spark, hconf, files) }
+    }
+
+  /** One dir's schema: the footer of its first data file by name. */
+  private def firstFooterSchema(spark: SparkSession, hconf: Configuration,
+                                files: Seq[FileStatus]): Option[StructType] =
+    files.sortBy(_.getPath.getName).headOption.map(first =>
+      org.apache.spark.sql.graft.GraftSqlShims.parquetFooterSchema(spark, hconf, first.getPath))
+
+  /** Merges per-dir footer schemas; None (the caller infers instead)
+    * when a dir has no data file or a listing/footer read failed.
+    */
+  private def mergedOrInference(spark: SparkSession)(
+      perDir: Configuration => Seq[Option[StructType]]): Option[StructType] =
+    try {
+      val schemas = perDir(spark.sessionState.newHadoopConf())
       // a dir with no data file: let inference decide (unchanged)
       if (schemas.isEmpty || schemas.exists(_.isEmpty)) None
       // asNullable matches inference: Spark writes parquet columns
@@ -446,10 +476,7 @@ private[graft] object Footers {
       // round-trips per commit)
       val perBucket = parFooterIo(bucketNames) { name =>
         val b = name.stripPrefix(s"$BucketCol=").toInt
-        b -> fs.listStatus(new Path(vdir, name)).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath)
+        b -> dataFiles(fs, new Path(vdir, name)).map(_.getPath)
       }
       // one footer read per file: (bucket, fileName, rows, per-col min/max)
       val perFile = parFooterIo(perBucket.flatMap { case (b, ps) => ps.map(b -> _) }) {

@@ -10,14 +10,17 @@ then prints, per end-to-end metric of BENCHMARK.json: each side's
 median and interquartile range, the change/parent ratio of the medians,
 the pairs the change won (ties count for neither side) and a verdict:
 
-  gain        the change won at least 9 of 10 pairs and the medians
-              differ by more than the parent's IQR
+  gain        at least 10 pairs ran, the change won at least 9 of every
+              10 and the medians differ by more than the parent's IQR
   regression  the change's median is worse than the parent's by more
               than the metric's bound
   unresolved  neither, and the parent's IQR is wider than the bound
               (the runs spread too widely to call it unchanged), unless
               every change run beat every parent run
   unchanged   neither, and the spread is within the bound
+
+With fewer than 10 pairs a metric the change would otherwise gain on
+reads `too few pairs`: the rule needs ten.
 
 Each checkout must carry its own build: a checkout whose
 perfbench/target/launch/classpath.txt names build outputs (any entry
@@ -27,7 +30,8 @@ build stamp and launch files, and run.py would then silently run the
 original's jars. Make the parent checkout with `git clone` or
 `git archive` instead.
 
-It also prints each op's median wall time per side, from the per-op
+It also prints each op's median time per side (the `ms` field the
+end-to-end op metrics are computed from), from the per-op
 detail run.py leaves in the checkout (an op that runs more than once in
 a pass is numbered by its position: `point.cow`, `point.cow#2`, ...),
 so a change in an end-to-end metric can be traced to the ops that moved.
@@ -81,7 +85,7 @@ def run(checkout, workload, seed):
 
 
 def op_medians(checkout, workload):
-    """Each op's median wall ms over the passes of the run just made."""
+    """Each op's median `ms` over the passes of the run just made."""
     detail = os.path.join(checkout, ".bench_build", "perfbench", f"work-{workload}", "detail.json")
     with open(detail) as f:
         passes = json.load(f)["passes"]
@@ -111,7 +115,7 @@ def verdict(parent, change, lower_better, bound):
     iqr = p3 - p1
     worse_by = (cm - pm) / pm if lower_better else (pm - cm) / pm
     if wins * 10 >= 9 * len(parent) and better(cm, pm) and abs(cm - pm) > iqr:
-        return wins, "gain"
+        return wins, "gain" if len(parent) >= 10 else "too few pairs"
     if worse_by > bound:
         return wins, "regression"
     all_better = all(better(c, p) for c in change for p in parent)
